@@ -291,7 +291,7 @@ object AggState {
       .filter(t => !t.startsWith("__") && !tags.contains(t)).sorted
     val allTags = tags ++ orphans
     if (orphans.nonEmpty) {
-      System.err.println(s"[graft] compactAggState: adopting ${orphans.length} " +
+      OpLog.warn("agg.orphan_adopted", s"compactAggState: adopting ${orphans.length} " +
         s"torn-fold tag(s) before merging: ${orphans.mkString(", ")}")
       writeTags(spark, dir, allTags)
     }

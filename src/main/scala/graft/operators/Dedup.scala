@@ -320,7 +320,7 @@ object Dedup {
       .head.getAs[Array[Byte]](0)
     val density = sketchBitDensity(sketch)
     if (density > saturationDensity)
-      System.err.println(f"[graft] buildBandSketch: sketch bit density $density%.3f " +
+      OpLog.warn("sketch.saturated", f"buildBandSketch: sketch bit density $density%.3f " +
         f"exceeds the at-capacity ~0.5 of an optimally-sized filter — " +
         f"expectedItems=$expectedItems is undersized for this index; the " +
         f"prefilter stays exact but prunes little. Resize to >= the index's " +
@@ -1243,7 +1243,7 @@ object Dedup {
     // vanished part files (the documented re-read-after-swap rule)
     if (IndexFiles.fs(spark, new org.apache.hadoop.fs.Path(dir))
         .exists(new org.apache.hadoop.fs.Path(s"$dir/$clusterPartInflight"))) {
-      System.err.println(s"[graft] foldClusterStatePartitioned: inflight marker " +
+      OpLog.warn("cluster.torn_fold_repair", s"foldClusterStatePartitioned: inflight marker " +
         s"found at $dir — repairing a torn fold commit before folding")
       repairClusterStatePartitioned(spark, dir)
     }
@@ -1423,8 +1423,7 @@ object Dedup {
       Checkpoints.free(labels)
       labels = updated.select(col("id"), col("next").as("label"))
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] prop round=$i converged=$converged")
+      OpLog.debug("cc.prop_round", s"round=$i converged=$converged")
     }
     if (converged) {
       Checkpoints.free(edges) // not referenced by the returned plan
@@ -1507,8 +1506,7 @@ object Dedup {
       prev = edges
       prevSig = s
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] star round=$i edges=${s._1} converged=$converged")
+      OpLog.debug("cc.star_round", s"round=$i edges=${s._1} converged=$converged")
     }
     // fixed point: every component is a star (root u = component min); the
     // min-agg is a no-op there (each v has exactly one edge) and guards the

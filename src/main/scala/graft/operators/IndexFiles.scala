@@ -4,8 +4,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE copy of the crash-sensitive filesystem protocol shared by every
-  * persisted-index implementation (the MinHash near-dup index and the
-  * residual IVF-PQ index): staged-and-swap table rewrites, read-side
+  * persisted family still on the rename swap (the MinHash near-dup and
+  * cluster state, the residual IVF-PQ index, the aggregate state — the
+  * BM25 index lives on [[VersionedStore]]), plus the write lease and
+  * sidecar IO every family uses: staged-and-swap table rewrites, read-side
   * recovery from an interrupted swap, small sidecar file IO. Six
   * hand-rolled copies of rename choreography is how object-store fixes
   * drift apart — this object exists so a future change (e.g. a
@@ -79,7 +81,7 @@ private[operators] object IndexFiles {
     // keeps the recovery invariant: a crash here still leaves live
     // missing + _old present, the state every read recovers from.
     if (f.exists(live)) {
-      System.err.println(s"[graft] stagedSwap($name): a concurrent reader " +
+      OpLog.warn("swap.reader_restored", s"stagedSwap($name): a concurrent reader " +
         s"restored $live mid-swap; finishing the swap over it")
       require(f.rename(live, old),
         s"compaction swap failed for $live — could not re-park the " +
@@ -102,7 +104,7 @@ private[operators] object IndexFiles {
     if (!f.exists(live) && f.exists(old)) {
       require(f.rename(old, live), s"$what recovery rename $old -> $live failed")
       spark.catalog.refreshByPath(live.toString)
-      System.err.println(s"[graft] $what: recovered $live from an interrupted " +
+      OpLog.warn("swap.recovered", s"$what: recovered $live from an interrupted " +
         "compaction swap (pre-compaction table restored)")
     }
   }
@@ -219,8 +221,8 @@ private[operators] object IndexFiles {
           "writer/compactor silently corrupts the index. Quiesce the other " +
           "writer; if the holder is known dead, wait out the TTL (or delete " +
           s"$LeaseFile after confirming no writer is live)")
-      if (owner != processOwner) System.err.println(
-        s"[graft] $what: taking over a STALE write lease at $dir " +
+      if (owner != processOwner) OpLog.warn("lease.stale_takeover",
+        s"$what: taking over a STALE write lease at $dir " +
           s"(owner $owner, '$heldBy', age ${age / 1000}s > TTL ${ttlMs / 1000}s " +
           "— a crashed writer)")
       takeoverStale(f, dir, what, bytes)
@@ -278,12 +280,17 @@ private[operators] object IndexFiles {
     if (!java.util.Arrays.equals(tombBytes, staleBytes)) {
       // not the lease we judged stale: a racing taker's FRESH lease landed
       // between our read and our rename — put it back and lose loudly.
-      // Restore ONLY if p is still absent: POSIX rename overwrites, so if
-      // a third writer exclusive-created a fresh lease at p after our
-      // losing rename, renaming the tombstone back would silently clobber
-      // that third writer's lease (ADVICE r13); just drop the tombstone
-      // and lose in that case — the winner whose bytes we hold re-verifies
-      // its own lease post-create and will re-acquire if it lost.
+      // Restore only if p looks absent: POSIX rename overwrites, so if a
+      // third writer exclusive-created a fresh lease at p after our losing
+      // rename, renaming the tombstone back would clobber that third
+      // writer's lease (ADVICE r13); drop the tombstone and lose instead.
+      // This NARROWS the clobber window, it does not close it: a third
+      // writer's create can still land between the exists() check and the
+      // overwriting rename, and if its post-create verify already passed
+      // its lease is silently replaced — best-effort loudness, the same
+      // TOCTOU limit as VersionedStore.commit's post-rename verify. The
+      // winner whose bytes we hold re-verifies its own lease post-create
+      // and loses loudly if it was replaced before that verify.
       if (f.exists(p) || !f.rename(tomb, p)) f.delete(tomb, false)
       throw new IllegalStateException(
         s"$what: lost the stale-lease takeover race at $dir — the lease " +
@@ -325,7 +332,7 @@ private[operators] object IndexFiles {
     val f = fs(spark, live)
     if (!f.exists(live) && f.exists(old)) {
       require(f.rename(old, live), s"sidecar recovery rename $old -> $live failed")
-      System.err.println(s"[graft] recovered sidecar $live from an interrupted write")
+      OpLog.warn("sidecar.recovered", s"recovered sidecar $live from an interrupted write")
     }
     if (!f.exists(live)) None
     else Some(slurp(f, live))

@@ -21,14 +21,10 @@ import org.apache.spark.sql.functions._
   * compacted 100 TB index costs an index scan, not a corpus scan.
   *
   * What `violations` means per check (0 = invariant holds):
-  *   - bm25/ghost_postings — postings rows whose document has no doclens
-  *     row (a torn never-retried append; invisible to scoring by the
-  *     liveness rule, but dead weight and a revival hazard for reused
-  *     ids — see `appendBm25Index`'s compact-marker guard).
-  *   - bm25/duplicate_postings — surplus (term, id) rows beyond one (a
-  *     crash-retried append; over-counts tf/df until compaction).
-  *   - bm25/duplicate_doclens — surplus doclens rows per id (same cause;
-  *     over-counts dl and n_docs).
+  *   - bm25 — the BM25 index is a [[VersionedStore]] (one commit per
+  *     build, append or compaction, so its two tables cannot disagree):
+  *     its checks are exactly the versioned ones below, reported under
+  *     the bm25 family name.
   *   - agg_state/orphan_tag_rows — delta rows whose tag was never
   *     committed to `_tags.json` (a torn fold awaiting retry or
   *     compaction adoption).
@@ -116,18 +112,10 @@ object IndexFsck {
       .unionAll(checkRow("minhash", "wrong_band_count", wrongCount))
   }
 
-  /** The three BM25-index invariants, from the stored tables only. */
-  def checkBm25(spark: SparkSession, dir: String,
-                idCol: String = "doc_id"): DataFrame = {
-    val idx = Retrieval.Bm25Index.read(spark, dir)
-    val ghost = idx.postings.join(
-      idx.doclens.select(col(idCol)), Seq(idCol), "left_anti")
-    checkRow("bm25", "ghost_postings", ghost)
-      .unionAll(surplusRow("bm25", "duplicate_postings",
-        idx.postings, Seq("term", idCol)))
-      .unionAll(surplusRow("bm25", "duplicate_doclens",
-        idx.doclens, Seq(idCol)))
-  }
+  /** The BM25 index's invariants: [[checkVersionedStore]] over its
+    * store, under the bm25 family name. */
+  def checkBm25(spark: SparkSession, dir: String): DataFrame =
+    checkVersionedStore(spark, dir).withColumn("family", lit("bm25"))
 
   /** The three aggregate-state invariants; group columns come from the
     * stored `_meta.json`, the committed/retracted tag sets from their
@@ -197,9 +185,10 @@ object IndexFsck {
     *     dropped manifests before their segments, so a mid-vacuum crash
     *     leaves extra files, not dangling references). Reads of the
     *     affected versions fail mid-scan; vacuum past them or restore.
-    *   - versioned/orphan_segments — segment dirs no manifest references
-    *     (a writer that crashed before its commit). Invisible to every
-    *     read; the next vacuum reclaims them.
+    *   - versioned/orphan_segments — uncommitted writes: segment dirs no
+    *     manifest references and in-flight `.tmp-` manifests (a writer
+    *     that crashed before its commit). Invisible to every read; the
+    *     next vacuum reclaims them.
     *   - versioned/broken_parent_chain — manifests whose parent is not
     *     version−1 (versions always increment by one, so this only
     *     happens to a hand-edited or foreign file).
@@ -237,7 +226,9 @@ object IndexFsck {
     val onDisk =
       if (!f.exists(segsPath)) Seq.empty[String]
       else f.listStatus(segsPath).toSeq.map(_.getPath.getName)
-    val orphans = onDisk.count(!referenced.contains(_))
+    val tmpManifests = f.listStatus(new org.apache.hadoop.fs.Path(s"$dir/_manifests"))
+      .count(_.getPath.getName.startsWith(".tmp-"))
+    val orphans = onDisk.count(!referenced.contains(_)) + tmpManifests
     val chain = manifests.count(m => m.parent != m.version - 1)
     val latest = manifests.last
     var rowsBad = 0L
@@ -253,7 +244,7 @@ object IndexFsck {
         // unverifiable stamp is a mismatched stamp.
         val recomputed = try Some(VersionedStore.statsOf(spark, dir, s.name))
         catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] checkVersionedStore: segment " +
+          OpLog.warn("fsck.segment_unreadable", s"checkVersionedStore: segment " +
             s"${s.name} unreadable for stat recomputation (${e.getMessage})")
           None
         }

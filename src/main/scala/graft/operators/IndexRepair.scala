@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Two repair classes, stated per check:
   *   - HEALABLE from the stored state alone — duplicate rows collapse
-  *     (the crash-retried-append shape), ghost postings reclaim (the
-  *     liveness sweep), orphan agg tags adopt, pending retractions finish,
+  *     (the crash-retried-append shape), uncommitted BM25 store writes
+  *     vacuum away, orphan agg tags adopt, pending retractions finish,
   *     torn cluster relabels re-solve. These end repaired-and-complete.
   *   - DROP-AND-REAPPEND — a document/vector whose index rows are
   *     PARTIAL (a torn append: sigs without bands, three of m subspace
@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   *     through the family's own append entry point to restore membership.
   *
   * Every repair runs under the family's write lease (the compaction entry
-  * points and [[IndexFiles.stagedSwap]] acquire it), so a repair racing a
-  * live writer fails loudly instead of interleaving. Reports are tiny
+  * points, [[IndexFiles.stagedSwap]] and the store's vacuum acquire it),
+  * so a repair racing a live writer fails loudly instead of
+  * interleaving. Reports are tiny
   * (family, action, n) tables; the BEFORE-counts are collected (a few
   * rows) prior to the swap, because a lazily-evaluated check DataFrame
   * re-read after the swap would count the post-repair state.
@@ -58,39 +59,17 @@ object IndexRepair {
 
   // ---------------------------------------------------------------- BM25
 
-  /** Repair a persisted BM25 index: every one of [[IndexFsck.checkBm25]]'s
-    * violations is healable from the stored tables alone — ghost postings
-    * are reclaimed by the compaction's doclens-liveness sweep, duplicate
-    * postings/doclens collapse under its dedup keys — so the repair IS
-    * [[Retrieval.compactBm25Index]] (no dropIds), which also finishes any
-    * interrupted compaction (clearing the `_compact_intent` append block)
-    * and restores the term-sharded sorted layout. Returns the
-    * (family, action, n) report of what the compaction reclaimed. */
-  def repairBm25Index(spark: SparkSession, dir: String,
-                      idCol: String = "doc_id",
-                      termShards: Int = 32): DataFrame =
-    // ONE lease from the before-counts through the compaction (inner
-    // leases re-enter): a writer interleaving between analysis and swap
-    // would make the report describe a state the repair never saw
-    IndexFiles.withWriteLease(spark, dir, "repairBm25Index") {
-      val idx = Retrieval.Bm25Index.read(spark, dir)
-      // report rows PARTITION the removed rows: ghosts counts every row of
-      // a dead doc (its crash-retry duplicates included), duplicates count
-      // surplus among LIVE docs only — counting a duplicated ghost row in
-      // both actions would over-describe the repair by the overlap
-      val ghosts = cnt(idx.postings.join(
-        idx.doclens.select(col(idCol)), Seq(idCol), "left_anti"))
-      val dupPost = surplus(idx.postings.join(
-        idx.doclens.select(col(idCol)), Seq(idCol), "left_semi"),
-        Seq("term", idCol))
-      val dupLens = surplus(idx.doclens, Seq(idCol))
-      Retrieval.compactBm25Index(spark, dir, idCol = idCol,
-        termShards = termShards)
-      report(spark, Seq(
-        ("bm25", "reclaimed_ghost_posting_rows", ghosts),
-        ("bm25", "collapsed_duplicate_posting_rows", dupPost),
-        ("bm25", "collapsed_duplicate_doclens_rows", dupLens)))
-    }
+  /** Repair a persisted BM25 index: its store can only hold the crash
+    * debris of an uncommitted write (orphan segments, `.tmp-` manifests —
+    * [[IndexFsck.checkBm25]]'s orphan_segments), so the repair is
+    * [[VersionedStore.vacuum]] at its default retention. Returns the
+    * (family, action, n) report of what it deleted. */
+  def repairBm25Index(spark: SparkSession, dir: String): DataFrame = {
+    val (segs, manifests) = VersionedStore.vacuum(spark, dir)
+    report(spark, Seq(
+      ("bm25", "vacuumed_segments", segs.toLong),
+      ("bm25", "vacuumed_manifests", manifests.toLong)))
+  }
 
   // ----------------------------------------------------------- agg state
 
@@ -158,7 +137,7 @@ object IndexRepair {
         val nBad = cnt(bad)
         // surplus among KEPT ids only — a duplicate row of an id the repair
         // drops anyway belongs to the drop action, not the collapse action
-        // (disjoint report; same partition discipline as repairBm25Index)
+        // (disjoint report: each removed row is counted under one action)
         val dupBands = surplus(Dedup.MinhashIndex.read(spark, dir).bands
           .join(bad, Seq(idCol), "left_anti"),
           Seq(idCol, "band", "band_key"))

@@ -13,30 +13,37 @@ import org.apache.spark.sql.functions._
   * worker/TaskAttemptContext.java` drives index scans instead of seq
   * scans); this is the retrieval-shaped version of that idea, Spark-first.
   *
-  * Stored layout under `dir/`:
+  * Stored layout: `dir/` is a [[VersionedStore]] with two tables, plus a
+  * tokenizer tag beside it:
   *   - `postings` — (idCol, term, tf): one row per (term, document), the
-  *     classic inverted file. Written term-partitioned and term-sorted so
-  *     a query-term probe prunes row groups by parquet min/max — at 100 TB
-  *     a 3-term query touches 3 terms' worth of row groups, not the table.
+  *     classic inverted file. Built and compacted term-partitioned and
+  *     term-sorted so a query-term probe prunes row groups by parquet
+  *     min/max — at 100 TB a 3-term query touches 3 terms' worth of row
+  *     groups, not the table.
   *   - `doclens`  — (idCol, dl): one row per document; supplies the BM25
   *     length normalization and (via one index-sized aggregate per query)
-  *     the corpus totals n_docs/avgdl. Deliberately NOT a sidecar scalar:
-  *     recomputing totals from the stored table per query keeps
-  *     append/compact free of a second consistency protocol (a stale
-  *     cached total silently mis-scores every document; an aggregate over
-  *     the live table cannot drift). A deployment issuing many queries per
-  *     index version caches the one-row result itself.
+  *     the corpus totals n_docs/avgdl. Recomputing totals from the stored
+  *     table per query means a cached total can never drift from the
+  *     table it summarizes; the document count alone is also in the
+  *     manifest (`Bm25Index.nDocs`, no job).
   *   - `_meta.json` — the tokenizer tag ([[Bm25Meta]]); reads and writes
   *     validate it, so an index built under one tokenization can never be
   *     silently queried or appended under another (the same fail-loudly
   *     discipline as [[Dedup.MinhashMeta]] / `IvfPqMeta`).
   *
+  * Every mutation — build, append, compaction — is ONE store commit that
+  * changes both tables at once, so postings and doclens always come from
+  * the same version and no reader sees one table's change without the
+  * other's. A crashed writer leaves only what any
+  * store writer leaves (an orphan segment, a `.tmp-` manifest): invisible
+  * to every read, reported by [[IndexFsck.checkBm25]], reclaimed by
+  * [[IndexRepair.repairBm25Index]] (a vacuum).
+  *
   * Scale: the postings table is token-granular — the one corpus-sized
   * artifact — but the QUERY path never scans it fully (term pruning) and
   * never touches corpus text at all; `doclens` is document-granular.
-  * Appends are batch-sized; compaction is an index-sized staged swap
-  * ([[IndexFiles]] — same crash-recovery and object-store caveats as the
-  * other two index families).
+  * Appends are batch-sized; compaction is an index-sized rewrite. Writers
+  * are single-writer under the store's lease, like every family.
   */
 object Retrieval {
 
@@ -44,34 +51,6 @@ object Retrieval {
     * space, empty tokens kept — byte-identical to [[TextAnalysis.bm25Lite]]
     * and to the DuckDB `string_split(text, ' ')` oracle spelling. */
   val TokenizerWs1 = "ws1"
-
-  // bracket marker for writeBm25Index's rebuild-in-place: postings and
-  // doclens are overwritten as two separate jobs, so a rebuild crashing
-  // between them pairs NEW postings with the PREVIOUS build's doclens —
-  // dl/avgdl/n_docs silently drift on every score (a first build fails
-  // loudly on the missing doclens path; a rebuild into an existing dir
-  // has no missing file to trip on). Every read refuses the directory
-  // while the marker survives; re-running writeBm25Index clears it.
-  private val RebuildMarker = "_rebuild_intent"
-
-  private def requireNoTornRebuild(spark: SparkSession, dir: String,
-                                   what: String): Unit =
-    require(!IndexFiles.markerExists(spark, dir, RebuildMarker),
-      s"$what: torn writeBm25Index rebuild at $dir (its $RebuildMarker " +
-        "marker survived a crash) — postings and doclens may be from " +
-        "different builds; re-run writeBm25Index, or build into a fresh " +
-        "directory")
-
-  // bracket marker for compactBm25Index's two-table swap: a crash between
-  // the doclens and postings swaps scores correctly (ghost invisibility,
-  // see compactBm25Index) but leaves tombstoned docs' postings in place —
-  // and an APPEND of a batch reusing one of those dropped ids would treat
-  // it as novel (absent from doclens) and, once its doclens row lands,
-  // revive the stale ghost postings alongside the new rows: duplicate
-  // (term, id) with potentially different tf, silently over-counting
-  // until the next compact. Appends refuse the directory while the
-  // marker survives; re-running the compaction (any dropIds) clears it.
-  private val CompactMarker = "_compact_intent"
 
   /** Build parameters of a persisted [[Bm25Index]], stamped into
     * `dir/_meta.json`. Postings carry no tokenization tag per-row, so
@@ -85,44 +64,39 @@ object Retrieval {
       IndexFiles.writeFileSwap(spark, dir, "_meta.json",
         s"""{"tokenizer":"${m.tokenizer}"}""".getBytes("UTF-8"))
 
-    /** None for a pre-meta (legacy) index directory. */
-    def read(spark: SparkSession, dir: String): Option[Bm25Meta] =
-      IndexFiles.readFileWithRecovery(spark, dir, "_meta.json").map { bytes =>
-        val j = org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8"))
-        (j \ "tokenizer") match {
-          case org.json4s.JString(v) => Bm25Meta(v)
-          case other => throw new IllegalArgumentException(
-            s"malformed Bm25Index meta at $dir/_meta.json: field tokenizer = $other")
-        }
+    def read(spark: SparkSession, dir: String): Bm25Meta = {
+      val bytes = IndexFiles.readFileWithRecovery(spark, dir, "_meta.json")
+        .getOrElse(throw new IllegalArgumentException(
+          s"Bm25Index: no _meta.json at $dir — not a BM25 index directory"))
+      val j = org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8"))
+      (j \ "tokenizer") match {
+        case org.json4s.JString(v) => Bm25Meta(v)
+        case other => throw new IllegalArgumentException(
+          s"malformed Bm25Index meta at $dir/_meta.json: field tokenizer = $other")
       }
+    }
   }
 
-  /** A persisted BM25 index handle: the postings and doc-length tables plus
-    * the stored tokenizer tag. Obtain via [[Bm25Index.read]] (which runs
-    * read-side crash recovery) or the write/append entry points. */
+  /** A persisted BM25 index handle: the postings and doc-length tables of
+    * ONE store version, the stored tokenizer tag, and that version's
+    * document count (the doclens row count from the manifest). Obtain via
+    * [[Bm25Index.read]] or the write/append/compact entry points. */
   final case class Bm25Index(postings: DataFrame, doclens: DataFrame,
-                             meta: Option[Bm25Meta] = None) {
-    /** Fail loudly when the stored tokenizer disagrees with the caller's.
-      * No-op for an untagged legacy directory. */
+                             meta: Bm25Meta, nDocs: Long) {
+    /** Fail loudly when the stored tokenizer disagrees with the caller's. */
     def requireTokenizer(tokenizer: String): Unit =
-      meta.foreach(m => require(m.tokenizer == tokenizer,
-        s"Bm25Index tokenizer mismatch: stored '${m.tokenizer}', passed " +
+      require(meta.tokenizer == tokenizer,
+        s"Bm25Index tokenizer mismatch: stored '${meta.tokenizer}', passed " +
           s"'$tokenizer' — querying or appending under a different " +
-          "tokenization silently mixes incompatible term statistics"))
+          "tokenization silently mixes incompatible term statistics")
   }
 
   object Bm25Index {
-    /** Read a persisted index, recovering either table from an interrupted
-      * [[compactBm25Index]] swap first (same protocol as the other index
-      * families — the pre-compaction table is correct, just uncompacted). */
+    /** Read the latest committed version. */
     def read(spark: SparkSession, dir: String): Bm25Index = {
-      requireNoTornRebuild(spark, dir, "Bm25Index.read")
-      Seq("postings", "doclens").foreach(
-        IndexFiles.recoverInterruptedSwap(spark, dir, _, "Bm25Index.read"))
-      Bm25Index(
-        spark.read.parquet(s"$dir/postings"),
-        spark.read.parquet(s"$dir/doclens"),
-        Bm25Meta.read(spark, dir))
+      val snap = VersionedStore.snapshot(spark, dir)
+      Bm25Index(snap.table("postings"), snap.table("doclens"),
+        Bm25Meta.read(spark, dir), snap.rowCount("doclens"))
     }
   }
 
@@ -137,15 +111,26 @@ object Retrieval {
     tokens(docs, idCol, textCol)
       .groupBy(col(idCol)).agg(count(lit(1)).as("dl"))
 
+  // the query-serving layout: hash-distributed across `termShards` by
+  // term, term-sorted within each shard, so every parquet row group spans
+  // a contiguous term range that a query-term probe skips by min/max
+  private def termSharded(postings: DataFrame, termShards: Int): DataFrame =
+    postings.repartition(termShards, col("term")).sortWithinPartitions("term")
+
+  // a build or compaction supersedes every stored segment; reclaim them
+  // right away, as a rebuild in place always has (a handle read before
+  // the commit must be re-read)
+  private def reclaim(spark: SparkSession, dir: String): Unit =
+    VersionedStore.vacuum(spark, dir, keepLast = 1)
+
   /** Build AND persist the BM25 index: one corpus tokenize feeds both
     * aggregations (two corpus scans total — postings and doclens are
     * independent aggregates of the same explode; at build-once scale the
     * second scan beats staging the exploded token table, which is larger
-    * than the corpus itself). Postings are hash-distributed across
-    * `termShards` by term and term-sorted within each shard, so every
-    * parquet row group spans a contiguous term range and a query-term
-    * probe skips all but the matching groups by min/max. Stamps
-    * `_meta.json`. Returns the index re-read from `dir`.
+    * than the corpus itself). Postings are written term-sharded and
+    * sorted. Stamps `_meta.json`, then commits both tables as version 1 of
+    * a fresh store — or, into a directory that already holds one, as ONE
+    * rewrite of both tables (a rebuild in place). Returns the index.
     *
     * PRECONDITION: corpus ids unique (same contract as the other index
     * families — duplicate ids fuse their postings into one merged
@@ -154,30 +139,18 @@ object Retrieval {
                      dir: String, termShards: Int = 32): Bm25Index = {
     require(termShards >= 1, s"termShards must be >= 1, got $termShards")
     val spark = corpus.sparkSession
+    val tables = Map(
+      "postings" -> termSharded(postingsOf(corpus, idCol, textCol), termShards),
+      "doclens" -> doclensOf(corpus, idCol, textCol))
     IndexFiles.withWriteLease(spark, dir, "writeBm25Index") {
-      // the whole build is bracketed by the rebuild marker (see its note):
-      // a crash between the two table overwrites pairs new postings with
-      // the previous build's doclens, and only the bracket can detect it
-      IndexFiles.createMarker(spark, dir, RebuildMarker)
-      // meta stamps FIRST: a build that crashes after the table writes but
-      // before the tag would read as a legacy UNTAGGED index that bypasses
-      // tokenizer validation forever; crashing after the tag but before the
-      // tables instead fails loudly on the missing postings path
+      // the tag lands BEFORE the commit: a crash in between leaves either
+      // no version (reads fail loudly) or the previous build under the
+      // same tag
       Bm25Meta.write(spark, dir, Bm25Meta(TokenizerWs1))
-      // the two tables are independent aggregates of the same corpus and
-      // BOTH sit inside the rebuild bracket (a crash anywhere between
-      // createMarker and deleteMarker reads as the same torn rebuild
-      // regardless of which write was in flight), so they run as two
-      // concurrent jobs (guide §2.6) — the second job's tasks fill the
-      // first one's scheduling tail instead of waiting for it
-      Jobs.concurrently(
-        () => postingsOf(corpus, idCol, textCol)
-          .repartition(termShards, col("term"))
-          .sortWithinPartitions("term")
-          .write.mode("overwrite").parquet(s"$dir/postings"),
-        () => doclensOf(corpus, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$dir/doclens"))
-      IndexFiles.deleteMarker(spark, dir, RebuildMarker)
+      if (VersionedStore.versionNumbers(spark, dir).isEmpty)
+        VersionedStore.create(spark, dir, tables, note = "writeBm25Index")
+      else VersionedStore.rewrite(spark, dir, note = "writeBm25Index")(_ => tables)
+      reclaim(spark, dir)
     }
     Bm25Index.read(spark, dir)
   }
@@ -187,22 +160,13 @@ object Retrieval {
     * [[TextAnalysis.bm25Lite]] over the indexed corpus (both spellings end
     * in the one shared scoring chain, [[TextAnalysis.bm25ScoreParts]]);
     * spec-pinned, and the driver oracle replays the full corpus-side
-    * chain, so a stale or torn index hash-fails rather than drifting.
+    * chain, so a stale index hash-fails rather than drifting.
     *
     * Scale shape: query terms broadcast against the postings table — an
     * equi-join the term-sorted layout serves by row-group skip, never a
     * full postings scan — plus one aggregate over `doclens` for the corpus
     * totals and the final per-document sum; top-k plans as
-    * TakeOrderedAndProject. ZERO corpus-text reads (scan-budget-pinned).
-    *
-    * Failure-state semantics (the doclens liveness rule,
-    * [[TextAnalysis.bm25ScoreParts]]): postings rows whose document has no
-    * doclens row — a torn, not-yet-retried append — are INVISIBLE here, so
-    * the torn state scores exactly like the pre-append index. Only a
-    * non-heal RETRY of a torn append creates live duplicate postings rows,
-    * which over-count tf/df for the affected documents until
-    * [[compactBm25Index]] collapses them; a cleanly re-run committed
-    * append is a no-op and never creates that state. */
+    * TakeOrderedAndProject. ZERO corpus-text reads (scan-budget-pinned). */
   def queryBm25Index(index: Bm25Index, queryTerms: DataFrame,
                      idCol: String = "doc_id", k1Ppm: Long = 1200000L,
                      bPpm: Long = 750000L, topK: Int = 20): DataFrame = {
@@ -215,142 +179,71 @@ object Retrieval {
   /** Fold NEW documents into a stored index without touching the indexed
     * corpus — the batch-sized add path between rebuilds (LSM-style, like
     * [[Dedup.appendMinhashIndex]] / [[Similarity.appendIvfPqResidualIndex]]).
-    * Already-indexed ids are anti-joined out against `doclens`, so a clean
-    * re-run of a COMMITTED append (an at-least-once scheduler replay)
-    * appends nothing. BM25 semantics after an append are exactly "the
-    * batch was present at build time": term statistics (tf, df, dl,
-    * totals) are pure per-(term, doc) / per-doc aggregates, so unlike the
-    * vector index there are no frozen quantizers and no drift — an
-    * appended index scores identically to a rebuilt one (spec-pinned).
+    * BM25 semantics after an append are exactly "the batch was present at
+    * build time": term statistics (tf, df, dl, totals) are pure
+    * per-(term, doc) / per-doc aggregates, so unlike the vector index
+    * there are no frozen quantizers and no drift — an appended index
+    * scores identically to a rebuilt one (spec-pinned).
     *
-    * Write order is the commit protocol: postings first, `doclens` last —
-    * a document's doclens row is its commit marker: the presence check
-    * reads doclens, and because every scoring statistic gates on the
-    * doclens join ([[TextAnalysis.bm25ScoreParts]]'s liveness rule), a
-    * torn state (postings committed, doclens not) is INVISIBLE to queries
-    * — it scores exactly like the pre-append index, no partial ghost
-    * documents. A plain retry of that torn state re-appends the batch's
-    * postings (the presence check passes), leaving duplicate (term, id)
-    * rows once the retry's doclens commits: detectable (same tf),
-    * collapsed by [[compactBm25Index]], and over-counting tf/df for just
-    * those documents until then — the same "retried duplicates are
-    * compaction's job" contract as the vector index. `heal = true`
-    * prevents the duplicates instead: the batch's postings rows are
-    * anti-joined against the stored postings restricted to the batch's
-    * TERMS then ids (a term-keyed semi the term-sorted layout and the
-    * runtime-filter machinery can prune; worst case one postings scan per
-    * healed append), so a torn retry appends exactly the missing rows.
-    * Batch deployments keep the default (no extra postings read per
-    * append); at-least-once streaming loops pass `heal = true`
-    * ([[graft.streaming.StreamingRetrieval]]) because their retries are
-    * routine, not exceptional.
+    * Already-indexed ids are anti-joined out against `doclens`, and the
+    * batch's postings and doclens rows land in ONE store append, so the
+    * two tables always agree: a crash before the commit leaves the index
+    * exactly as it was (plus an invisible orphan segment), and a re-run —
+    * of a crashed append or of a COMMITTED one (an at-least-once
+    * scheduler replay) — appends exactly the documents not yet committed.
+    * A fully-replayed batch writes nothing at all.
     *
-    * A pre-meta (legacy) directory gets the tokenizer tag stamped on its
-    * first append — same discipline as the MinHash index.
     * PRECONDITION: ids unique across the corpus and every batch. */
   def appendBm25Index(batch: DataFrame, idCol: String, textCol: String,
-                      dir: String, heal: Boolean = false): Bm25Index = {
+                      dir: String): Bm25Index = {
     val spark = batch.sparkSession
-    // ONE lease from the presence check through the writes: two racing
+    // ONE lease from the presence check through the commit: two racing
     // appends of the same batch could otherwise both compute `novel`
     // against the pre-write snapshot and double-append
     IndexFiles.withWriteLease(spark, dir, "appendBm25Index") {
-      // an interrupted compaction (marker survived its crash window) may
-      // have left ghost postings for tombstoned ids; appending a batch that
-      // REUSES such an id would revive them as duplicate (term, id) rows
-      // with stale tf — refuse until the compaction is finished (queries
-      // stay correct throughout: ghosts are invisible to scoring)
-      require(!IndexFiles.markerExists(spark, dir, CompactMarker),
-        s"appendBm25Index: interrupted compactBm25Index at $dir (its " +
-          s"$CompactMarker marker survived a crash) — tombstoned ids may " +
-          "still have ghost postings that a reused id would revive; re-run " +
-          "compactBm25Index (any dropIds, even none) to finish, then append")
       val stored = Bm25Index.read(spark, dir)
-      if (stored.meta.isEmpty) Bm25Meta.write(spark, dir, Bm25Meta(TokenizerWs1))
       stored.requireTokenizer(TokenizerWs1)
-      // localCheckpoint: the postings and doclens writes MUST see the same
-      // novel set — two independent evaluations of a non-deterministic batch
-      // plan could commit a doclens row (the liveness marker) for a document
-      // whose postings never landed, silently zero-scoring it forever (the
-      // same reason the MinHash append checkpoints its signature table)
+      // localCheckpoint: the postings and doclens segments MUST see the
+      // same novel set — two independent evaluations of a non-deterministic
+      // batch plan could commit a doclens row for a document whose postings
+      // differ, silently mis-scoring it forever
       val novel = batch.join(
         stored.doclens.select(col(idCol)), Seq(idCol), "left_anti")
         .localCheckpoint()
-      // a fully-replayed append (every id already committed) writes nothing —
-      // without this, each at-least-once retry would land one empty parquet
-      // file per table (same guard as the ANN loop's append)
       try {
         if (novel.isEmpty) stored
         else {
-          val bp = postingsOf(novel, idCol, textCol)
-          val toLand = if (!heal) bp else bp.join(
-            stored.postings
-              .join(broadcast(bp.select(col("term")).distinct()), Seq("term"), "left_semi")
-              .join(broadcast(novel.select(col(idCol))), Seq(idCol), "left_semi")
-              .select(col("term"), col(idCol)),
-            Seq("term", idCol), "left_anti")
-          toLand.write.mode("append").parquet(s"$dir/postings")
-          doclensOf(novel, idCol, textCol)
-            .write.mode("append").parquet(s"$dir/doclens")
+          VersionedStore.append(spark, dir, Map(
+            "postings" -> postingsOf(novel, idCol, textCol),
+            "doclens" -> doclensOf(novel, idCol, textCol)),
+            note = "appendBm25Index")
           Bm25Index.read(spark, dir)
         }
-      } finally Checkpoints.free(novel) // both appends landed
+      } finally Checkpoints.free(novel) // committed (or nothing to commit)
     }
   }
 
   /** Compact a stored index: drop tombstoned documents (deleted from the
     * corpus — a doc's doclens row keeps it scoring AND in df/avgdl, so
-    * deletion here is correctness, not just hygiene), collapse duplicate
-    * rows left by crash-retried appends (which over-count tf/df — also
-    * correctness), and garbage-collect ghost postings (rows whose doc has
-    * no doclens row — a torn never-retried append; invisible to scoring
-    * by the liveness rule, reclaimed here). Index-sized staged rewrite of
-    * both tables via [[IndexFiles.stagedSwap]]: same crash recovery at
-    * read, same LSM non-concurrency contract, same object-store rename
-    * caveat as the other index families; `_meta.json` is a sibling the
-    * swap never touches. Appended small files also get re-sorted into the
-    * term-sharded layout, restoring the row-group skip that makes
-    * query-term probes cheap.
-    *
-    * Swap ORDER is load-bearing: `doclens` swaps FIRST. Because every
-    * query statistic gates on the doclens join, the crash window between
-    * the two swaps (tombstones gone from doclens, still present in
-    * postings) scores EXACTLY like the fully-compacted index — the
-    * leftover postings are ghosts (spec-pinned). The reverse order would
-    * leave a window where dropped docs still count toward n_docs/avgdl
-    * with no loud signal. Re-run the compaction (any dropIds, even none)
-    * to finish the postings half: the liveness sweep reclaims the ghosts
-    * without the caller having to remember the original drop set. The
-    * crash window is bracketed by a `_compact_intent` marker that BLOCKS
-    * appends until the re-run (a batch reusing a dropped id would revive
-    * its ghost postings); queries keep working throughout. */
+    * deletion here is correctness, not just hygiene) and merge the
+    * appended small segments back into the term-sharded sorted layout,
+    * restoring the row-group skip that makes query-term probes cheap. ONE
+    * store rewrite of both tables, then the superseded segments are
+    * reclaimed; `_meta.json` is untouched. Dropping every document is
+    * refused (the store refuses an empty table). */
   def compactBm25Index(spark: SparkSession, dir: String,
                        dropIds: Option[DataFrame] = None,
                        idCol: String = "doc_id",
                        termShards: Int = 32): Bm25Index = {
-    // BEFORE any swap: compacting a torn rebuild would launder its
-    // mixed-build tables into a marker-free directory
-    requireNoTornRebuild(spark, dir, "compactBm25Index")
-    def prune(df: DataFrame, dedupCols: Seq[String]): DataFrame =
-      dropIds.fold(df)(ids =>
-          df.join(ids.select(col(idCol)).distinct(), Seq(idCol), "left_anti"))
-        .dropDuplicates(dedupCols)
-    // ONE lease across both swaps (the inner stagedSwap leases re-enter):
-    // releasing between them would let a second writer slip into the
-    // doclens-swapped/postings-unswapped window
+    require(termShards >= 1, s"termShards must be >= 1, got $termShards")
+    def live(df: DataFrame): DataFrame =
+      dropIds.fold(df)(ids => df.join(ids.select(col(idCol)), Seq(idCol), "left_anti"))
     IndexFiles.withWriteLease(spark, dir, "compactBm25Index") {
-      // bracket the two swaps (see CompactMarker's note): the window between
-      // them scores correctly but must block APPENDS that could reuse a
-      // dropped id — the marker is what appendBm25Index checks
-      IndexFiles.createMarker(spark, dir, CompactMarker)
-      IndexFiles.stagedSwap(spark, dir, "doclens")(df => prune(df, Seq(idCol)))
-      val liveIds = spark.read.parquet(s"$dir/doclens").select(col(idCol))
-      IndexFiles.stagedSwap(spark, dir, "postings")(df =>
-        prune(df, Seq("term", idCol))
-          .join(liveIds, Seq(idCol), "left_semi")
-          .repartition(termShards, col("term"))
-          .sortWithinPartitions("term"))
-      IndexFiles.deleteMarker(spark, dir, CompactMarker)
+      VersionedStore.rewrite(spark, dir, note = "compactBm25Index") { cur =>
+        Map("doclens" -> live(cur("doclens")),
+          "postings" -> termSharded(live(cur("postings")), termShards))
+      }
+      reclaim(spark, dir)
     }
     Bm25Index.read(spark, dir)
   }

@@ -717,20 +717,16 @@ object TextAnalysis {
     * covering EVERY matching document; `dl` = (idCol, dl) covering every
     * corpus document (its aggregate supplies n_docs/avgdl).
     *
-    * `dl` is the LIVENESS AUTHORITY: every statistic — df included —
-    * derives from tf ⋈ dl, so a tf row whose document has no dl row is
-    * invisible to scoring. For bm25Lite the join is a no-op (both sides
-    * come from the same tokens); for the persisted index it is what makes
-    * a torn half-appended state ([[Retrieval.appendBm25Index]]) and the
-    * between-swaps compaction window ([[Retrieval.compactBm25Index]])
-    * score EXACTLY like the respective clean states instead of leaking
-    * ghost documents into df. */
+    * The tf ⋈ dl join supplies each matching document's `dl` to the
+    * length normalization, and every statistic — df included — derives
+    * from the joined rows. Both callers hand in tables that cover the
+    * same documents: bm25Lite derives both from the same tokens, and the
+    * persisted index commits postings and doclens in one store version
+    * ([[Retrieval]]), so the join drops nothing. */
   private[operators] def bm25ScoreParts(tf: DataFrame, dl: DataFrame,
                                         idCol: String, k1Ppm: Long, bPpm: Long,
                                         topK: Int): DataFrame = {
     val totals = dl.agg(sum(col("dl")).as("total_tok"), count(lit(1)).as("n_docs"))
-    // the inner join IS the liveness gate; df derives from the joined rows
-    // so it can never count a document the length table does not vouch for
     val joined = tf.join(dl, Seq(idCol))
     val dfreq = joined.groupBy(col("term")).agg(count(lit(1)).as("df"))
     joined

@@ -26,9 +26,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `vN.json`), which buys what the index families' rename choreography
   * had to argue case-by-case:
   *   - **Atomic multi-table commits.** A version replaces any number of
-  *     table segment-lists at once, so the BM25-style "doclens swapped,
-  *     postings not yet" torn window is UNREPRESENTABLE here — there is
-  *     no observable state between versions, hence no intent markers, no
+  *     table segment-lists at once, so a two-table torn window (the
+  *     rename-swap MinHash index's "sigs appended, bands not yet"; the
+  *     BM25 index keeps its `postings` + `doclens` here for this reason,
+  *     see [[Retrieval]]) is UNREPRESENTABLE here — there is no
+  *     observable state between versions, hence no intent markers, no
   *     swap-order reasoning, and no recovery protocol at read.
   *   - **Snapshot isolation.** A reader pins a manifest; every file it
   *     will ever touch is immutable, so a compaction (or a hundred) can
@@ -72,10 +74,9 @@ object VersionedStore {
     * level, so readers can skip whole segments without opening a footer.
     * Computed from the STORED files after the write (not from a second
     * evaluation of the batch plan, which a non-deterministic batch could
-    * drift from — the same reason the index appends localCheckpoint), so
-    * the stats are true of the bytes by construction. Columns absent from
-    * the maps (non-integral, or all-null in this segment) are simply not
-    * prunable — reads stay conservative. */
+    * drift from), so the stats are true of the bytes by construction.
+    * Columns absent from the maps (non-integral, or all-null in this
+    * segment) are simply not prunable — reads stay conservative. */
   final case class SegMeta(name: String, rows: Long,
                            min: Map[String, Long], max: Map[String, Long])
 
@@ -337,17 +338,52 @@ object VersionedStore {
     m.version
   }
 
-  // Write the segment, then compute its stats FROM THE STORED FILES: a
-  // second evaluation of a non-deterministic batch plan could produce
-  // stats the stored rows don't satisfy — pruning would then silently
-  // drop matching rows, the worst failure shape here. The read-back is
-  // segment-sized and columnar (count comes from row-group metadata; the
-  // min/max scan touches only the integral columns).
-  private def writeSegment(spark: SparkSession, dir: String,
-                           df: DataFrame): SegMeta = {
-    val name = java.util.UUID.randomUUID().toString.take(12)
-    df.write.mode("error").parquet(s"$dir/_segments/$name")
-    statsOf(spark, dir, name)
+  // Write each table's segment straight from its plan — ONE evaluation,
+  // no checkpoint — then stamp it FROM THE STORED FILES: a second
+  // evaluation of a non-deterministic batch plan could produce stats the
+  // stored rows don't satisfy (pruning would then silently drop matching
+  // rows, the worst failure shape here), and emptiness is simply the row
+  // count the stamp reads anyway. The tables' segments are disjoint
+  // directories with no order between them (nothing is visible before the
+  // commit), so they are written concurrently. A zero-row segment (Spark
+  // writes one schema-only file for an empty plan) is deleted before any
+  // commit; an uncommitted one is invisible either way (a crash before
+  // the delete, or a failed sibling write, leaves an orphan that vacuum
+  // reclaims). Returns the non-empty tables' segments.
+  private def writeSegments(spark: SparkSession, dir: String,
+                            tables: Map[String, DataFrame]): Map[String, SegMeta] = {
+    val written = new java.util.concurrent.ConcurrentHashMap[String, SegMeta]()
+    Jobs.concurrently(tables.toSeq.map { case (n, df) => () =>
+      val name = java.util.UUID.randomUUID().toString.take(12)
+      df.write.mode("error").parquet(s"$dir/_segments/$name")
+      written.put(n, statsOf(spark, dir, name))
+      ()
+    }: _*)
+    import scala.jdk.CollectionConverters._
+    val (full, empty) = written.asScala.toMap.partition(_._2.rows > 0)
+    deleteSegments(spark, dir, empty.values)
+    full
+  }
+
+  private def deleteSegments(spark: SparkSession, dir: String,
+                             segs: Iterable[SegMeta]): Unit =
+    segs.foreach(s => fs(spark, dir).delete(new Path(s"$dir/_segments/${s.name}"), true))
+
+  // create and rewrite refuse an empty table: its zero-row segment would
+  // defeat schema inference at read (the shape append skips). The written
+  // siblings are deleted so the refused call leaves nothing behind.
+  private def requireNonEmpty(spark: SparkSession, dir: String, what: String,
+                              tables: Iterable[String],
+                              written: Map[String, SegMeta]): Unit = {
+    val empty = tables.filterNot(written.contains).toSeq.sorted
+    if (empty.nonEmpty) {
+      deleteSegments(spark, dir, written.values)
+      throw new IllegalArgumentException(
+        s"$what: table(s) ${empty.mkString(", ")} EMPTY — a zero-row segment " +
+          "defeats schema inference at read; seed the store with a real " +
+          "batch, or keep at least a sentinel row if a retention filter " +
+          "was intentional")
+    }
   }
 
   /** Statistics of a stored segment, from its bytes: exact row count
@@ -422,20 +458,9 @@ object VersionedStore {
         s"VersionedStore.create: $dir already has versions — use append/" +
           "rewrite, or vacuum a retired store away explicitly")
       require(tables.nonEmpty, "VersionedStore.create: no tables")
-      // same single-evaluation + empty guard as append/rewrite (ADVICE
-      // r12): a zero-row table would commit the segment shape every read
-      // path assumes away
-      val mats = tables.map { case (n, df) => n -> df.localCheckpoint() }
-      try {
-        mats.foreach { case (n, df) =>
-          require(!df.isEmpty,
-            s"VersionedStore.create: table '$n' is EMPTY — a zero-row " +
-              "segment defeats schema inference at read; seed the store " +
-              "with its first real batch instead")
-        }
-        val segs = mats.map { case (n, df) => n -> Seq(writeSegment(spark, dir, df)) }
-        commit(spark, dir, Manifest(1L, 0L, note, segs))
-      } finally Checkpoints.free(mats.values.toSeq: _*)
+      val segs = writeSegments(spark, dir, tables)
+      requireNonEmpty(spark, dir, "VersionedStore.create", tables.keys, segs)
+      commit(spark, dir, Manifest(1L, 0L, note, segs.map { case (n, seg) => n -> Seq(seg) }))
     }
 
   /** Append one batch per named table as a SINGLE commit — every table's
@@ -476,28 +501,19 @@ object VersionedStore {
               "the schema through rewrite (re-materializes every row)")
         }
       }
-      // ONE evaluation per batch plan (VERDICT r12 #5: the old isEmpty +
-      // writeSegment pair evaluated each plan twice, so a non-deterministic
-      // batch could be empty at the check and non-empty at the write — or
-      // commit the zero-row segment the guard exists to skip). Schema
-      // checks above run BEFORE the materialization (fail-fast discipline,
-      // same as the index appends); blocks released after the writes.
-      val mats = batches.map { case (n, df) => n -> df.localCheckpoint() }
-      try {
-        // skip empty batches: a zero-row parquet segment can defeat schema
-        // inference at read, and an all-empty append committing a new
-        // version would make every at-least-once replay a version-history
-        // write (same guard as the index families' empty-novel appends)
-        val nonEmpty = mats.filter { case (_, df) => !df.isEmpty }
-        if (nonEmpty.isEmpty) cur.version
-        else {
-          val appended = nonEmpty.map { case (n, df) => n -> writeSegment(spark, dir, df) }
-          val tables = (cur.tables.keySet ++ appended.keySet).map { n =>
-            n -> (cur.tables.getOrElse(n, Seq.empty) ++ appended.get(n).toSeq)
-          }.toMap
-          commit(spark, dir, Manifest(cur.version + 1, cur.version, note, tables, tag))
-        }
-      } finally Checkpoints.free(mats.values.toSeq: _*)
+      // empty batches are skipped (writeSegments drops them): an all-empty
+      // append committing a new version would make every at-least-once
+      // replay a version-history write (same guard as the index families'
+      // empty-novel appends). Schema checks above run BEFORE any write
+      // (fail-fast discipline, same as the index appends).
+      val appended = writeSegments(spark, dir, batches)
+      if (appended.isEmpty) cur.version
+      else {
+        val tables = (cur.tables.keySet ++ appended.keySet).map { n =>
+          n -> (cur.tables.getOrElse(n, Seq.empty) ++ appended.get(n).toSeq)
+        }.toMap
+        commit(spark, dir, Manifest(cur.version + 1, cur.version, note, tables, tag))
+      }
     }
 
   /** Idempotent [[append]] for at-least-once delivery: `tag` names the
@@ -528,7 +544,7 @@ object VersionedStore {
     IndexFiles.withWriteLease(spark, dir, "VersionedStore.appendOnce") {
       versions(spark, dir).find(_.tag.contains(tag)) match {
         case Some(m) =>
-          System.err.println(s"[graft] VersionedStore.appendOnce: tag " +
+          OpLog.info("store.replay_noop", s"VersionedStore.appendOnce: tag " +
             s"'$tag' already committed as version ${m.version} at $dir — " +
             "replayed batch, no-op")
           m.version
@@ -553,28 +569,15 @@ object VersionedStore {
       require(unknown.isEmpty,
         s"VersionedStore.rewrite: returned tables that don't exist: " +
           s"${unknown.mkString(", ")} — create new tables via append")
-      // ONE evaluation per replacement plan, and the same empty guard as
-      // append (ADVICE r12): a retention rewrite that filters a table to
-      // zero rows would otherwise commit the zero-row segment append
-      // refuses — and break tableRange's "never empty" schema assumption.
-      // An empty rewrite result is almost always a bug (a predicate that
+      // an empty rewrite result is almost always a bug (a predicate that
       // dropped everything); a deployment that truly retires a table's
-      // content should drop the table, which this store does not model.
-      val mats = replaced.map { case (n, df) => n -> df.localCheckpoint() }
-      try {
-        mats.foreach { case (n, df) =>
-          require(!df.isEmpty,
-            s"VersionedStore.rewrite: replacement for table '$n' is EMPTY — " +
-              "a zero-row segment defeats schema inference at read (the " +
-              "same shape append refuses); if the filter was intentional, " +
-              "keep at least a sentinel row or retire the store")
-        }
-        val tables = cur.manifest.tables.map { case (n, segs) =>
-          n -> mats.get(n).map(df => Seq(writeSegment(spark, dir, df))).getOrElse(segs)
-        }
-        commit(spark, dir,
-          Manifest(cur.version + 1, cur.version, note, tables))
-      } finally Checkpoints.free(mats.values.toSeq: _*)
+      // content should drop the table, which this store does not model
+      val written = writeSegments(spark, dir, replaced)
+      requireNonEmpty(spark, dir, "VersionedStore.rewrite", replaced.keys, written)
+      val tables = cur.manifest.tables.map { case (n, segs) =>
+        n -> written.get(n).map(Seq(_)).getOrElse(segs)
+      }
+      commit(spark, dir, Manifest(cur.version + 1, cur.version, note, tables))
     }
 
   /** Rows of `table` in segments `to` references that `from` does not —

@@ -2713,13 +2713,12 @@ object OperatorQueries {
         |  UNION ALL
         |  SELECT doc_id + 100000, text FROM documents WHERE doc_id BETWEEN 300 AND 349""".stripMargin)))
 
-  // The lifecycle end: after the append, the fixture plants the torn
-  // crash-retry state (batch postings appended a second time WITHOUT
-  // doclens — exactly what a retry after a crash between the two append
-  // writes leaves behind), tombstones a tenth of the original corpus, and
-  // compacts. The oracle is (corpus MINUS drops) UNION batch counted
-  // once — a surviving duplicate posting (over-counted tf/df), a failed
-  // drop, or a lost doc all hash-fail. Dropping ids also moves df/avgdl
+  // The lifecycle end: after the append, the fixture plants the debris of
+  // a crashed re-append of the batch (its postings segment and a `.tmp-`
+  // manifest, never committed), tombstones a tenth of the original
+  // corpus, and compacts. The oracle is (corpus MINUS drops) UNION batch
+  // counted once — debris leaking into the index (over-counted tf/df), a
+  // failed drop, or a lost doc all hash-fail. Dropping ids also moves df/avgdl
   // for every OTHER document, which is why tombstone removal is
   // correctness for BM25, not just space hygiene.
   private val qBm25IndexCompact = df("q_op_bm25_index_compact",
@@ -2731,12 +2730,7 @@ object OperatorQueries {
       val idxDir = s"$bm25IdxScratch/${java.util.UUID.randomUUID().toString.take(8)}"
       Retrieval.writeBm25Index(corpus, "doc_id", "text", idxDir)
       Retrieval.appendBm25Index(batch, "doc_id", "text", idxDir)
-      // torn-retry state: the batch's postings rows land a second time,
-      // its doclens rows do not (the commit marker held, so a clean
-      // re-append is blocked — this is the one state only compact heals)
-      batch.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-        .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
-        .write.mode("append").parquet(s"$idxDir/postings")
+      plantUncommittedBm25Append(spark, batch, idxDir)
       val dropped = corpus.filter(col("doc_id") % 10 === 3).select("doc_id")
       val idx = Retrieval.compactBm25Index(spark, idxDir, dropIds = Some(dropped))
       Retrieval.queryBm25Index(idx, bm25IdxTopTerms(idx))
@@ -3082,8 +3076,9 @@ object OperatorQueries {
 
   // Persisted-state consistency checker (IndexFsck): build small instances
   // of all four families, PLANT a known corruption set — torn appends
-  // (ghost postings, orphan agg tags), crash-retried duplicates (postings,
-  // partials, code rows), an interrupted retraction, torn cluster
+  // (orphan agg tags; an uncommitted BM25 store append: one orphan
+  // segment + one `.tmp-` manifest), crash-retried duplicates (partials,
+  // code rows), an interrupted retraction, torn cluster
   // relabels, partial/mixed-build code writes — and report every
   // invariant's violation count. The oracle recomputes each count from the
   // SOURCE tables through the same deterministic plant arithmetic, so a
@@ -3104,6 +3099,22 @@ object OperatorQueries {
   private[graft] def concurrently(tasks: (() => Unit)*): Unit =
     graft.operators.Jobs.concurrently(tasks: _*)
 
+  // The crash debris a BM25 append can still leave on its store: a writer
+  // that died after writing a segment (postings of `docs`) but before its
+  // commit, and one that died between its manifest write and the commit
+  // rename (a `.tmp-` manifest).
+  private[graft] def plantUncommittedBm25Append(spark: org.apache.spark.sql.SparkSession,
+                                                docs: org.apache.spark.sql.DataFrame,
+                                                dir: String): Unit = {
+    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+      .write.parquet(s"$dir/_segments/orphan-${java.util.UUID.randomUUID().toString.take(8)}")
+    val tmp = new org.apache.hadoop.fs.Path(
+      s"$dir/_manifests/.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val out = tmp.getFileSystem(spark.sessionState.newHadoopConf()).create(tmp, false)
+    try out.write("""{"version":""".getBytes("UTF-8")) finally out.close()
+  }
+
   private[graft] def plantCorruptedFamilies(spark: org.apache.spark.sql.SparkSession,
                                             dir: String,
                                             base: String): org.apache.spark.sql.DataFrame = {
@@ -3115,15 +3126,11 @@ object OperatorQueries {
       @volatile var plantedClusters: org.apache.spark.sql.DataFrame = null
       concurrently(
         () => {
-          // ---- BM25: ghosts (torn append) + crash-retried duplicates
+          // ---- BM25: an append that crashed before its commit
           graft.operators.Retrieval.writeBm25Index(
             docs.filter(col("doc_id") < 200), "doc_id", "text", s"$base/bm25", termShards = 4)
-          def plantPostings(d: org.apache.spark.sql.DataFrame) = d
-            .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-            .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-            .write.mode("append").parquet(s"$base/bm25/postings")
-          plantPostings(docs.filter(col("doc_id").between(200, 219))) // no doclens -> ghosts
-          plantPostings(docs.filter(col("doc_id").between(100, 109))) // retried duplicates
+          plantUncommittedBm25Append(spark, docs.filter(col("doc_id").between(200, 219)),
+            s"$base/bm25")
         },
         () => {
           // ---- minhash index: torn one-table appends + a duplicated append
@@ -3220,10 +3227,6 @@ object OperatorQueries {
         .orderBy("family", "check")
     },
     Some("""WITH
-           |gslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           |           FROM documents WHERE doc_id BETWEEN 200 AND 219),
-           |dslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           |           FROM documents WHERE doc_id BETWEEN 100 AND 109),
            |b1g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
            |        WHERE l_orderkey < 30000 AND l_orderkey % 4 = 3),
            |b2g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
@@ -3241,11 +3244,11 @@ object OperatorQueries {
            |m2 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id BETWEEN 160 AND 164),
            |m3 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id < 5)
            |SELECT family, "check", CAST(violations AS BIGINT) AS violations FROM (
-           |  SELECT 'bm25' AS family, 'ghost_postings' AS "check",
-           |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM gslice)) AS violations
-           |  UNION ALL SELECT 'bm25', 'duplicate_postings',
-           |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM dslice))
-           |  UNION ALL SELECT 'bm25', 'duplicate_doclens', 0
+           |  SELECT 'bm25' AS family, 'broken_parent_chain' AS "check", 0 AS violations
+           |  UNION ALL SELECT 'bm25', 'missing_segment_dirs', 0
+           |  UNION ALL SELECT 'bm25', 'orphan_segments', 2
+           |  UNION ALL SELECT 'bm25', 'rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'bm25', 'stat_bounds_mismatch', 0
            |  UNION ALL SELECT 'agg_state', 'orphan_tag_rows', (SELECT COUNT(*) FROM b3g)
            |  UNION ALL SELECT 'agg_state', 'duplicate_partials', (SELECT COUNT(*) FROM b1g)
            |  UNION ALL SELECT 'agg_state', 'retracted_rows_present', (SELECT COUNT(*) FROM b2g)
@@ -3266,7 +3269,7 @@ object OperatorQueries {
   // checker is graded against, run every family's repair, then prove three
   // things in one tall (family, action, n) table the oracle recomputes
   // from the source tables: (1) the repairs reported exactly the planted
-  // damage (reclaimed ghosts, collapsed duplicates, adopted orphans,
+  // damage (vacuumed BM25 debris, collapsed duplicates, adopted orphans,
   // finished retractions, dropped partial ids); (2) EVERY IndexFsck
   // invariant reads zero afterwards (the fsck_* rows); (3) membership and
   // content survived — BM25 serves exactly the base corpus's postings,
@@ -3292,8 +3295,7 @@ object OperatorQueries {
       @volatile var repIvf: org.apache.spark.sql.DataFrame = null
       @volatile var repaired: org.apache.spark.sql.DataFrame = null
       concurrently(
-        () => repBm = graft.operators.IndexRepair.repairBm25Index(
-          spark, s"$base/bm25", termShards = 4),
+        () => repBm = graft.operators.IndexRepair.repairBm25Index(spark, s"$base/bm25"),
         () => {
           // capture the drop set BEFORE repairing — it names the docs to
           // re-append (the repair's own report only carries the count)
@@ -3340,10 +3342,6 @@ object OperatorQueries {
         .orderBy("family", "action")
     },
     Some("""WITH
-           |gslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           |           FROM documents WHERE doc_id BETWEEN 200 AND 219),
-           |dslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-           |           FROM documents WHERE doc_id BETWEEN 100 AND 109),
            |pslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
            |           FROM documents WHERE doc_id < 200),
            |aslice AS (SELECT l_returnflag, l_linestatus FROM lineitem
@@ -3379,17 +3377,16 @@ object OperatorQueries {
            |  UNION ALL SELECT 'agg_state', 'readback_groups',
            |    (SELECT COUNT(*) FROM (SELECT DISTINCT l_returnflag, l_linestatus FROM aslice))
            |  UNION ALL SELECT 'agg_state', 'readback_total_cnt', (SELECT COUNT(*) FROM aslice)
-           |  UNION ALL SELECT 'bm25', 'collapsed_duplicate_doclens_rows', 0
-           |  UNION ALL SELECT 'bm25', 'collapsed_duplicate_posting_rows',
-           |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM dslice))
-           |  UNION ALL SELECT 'bm25', 'fsck_duplicate_doclens', 0
-           |  UNION ALL SELECT 'bm25', 'fsck_duplicate_postings', 0
-           |  UNION ALL SELECT 'bm25', 'fsck_ghost_postings', 0
+           |  UNION ALL SELECT 'bm25', 'fsck_broken_parent_chain', 0
+           |  UNION ALL SELECT 'bm25', 'fsck_missing_segment_dirs', 0
+           |  UNION ALL SELECT 'bm25', 'fsck_orphan_segments', 0
+           |  UNION ALL SELECT 'bm25', 'fsck_rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'bm25', 'fsck_stat_bounds_mismatch', 0
            |  UNION ALL SELECT 'bm25', 'live_doclens_rows', (SELECT n FROM d200)
            |  UNION ALL SELECT 'bm25', 'live_posting_rows',
            |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM pslice))
-           |  UNION ALL SELECT 'bm25', 'reclaimed_ghost_posting_rows',
-           |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM gslice))
+           |  UNION ALL SELECT 'bm25', 'vacuumed_manifests', 0
+           |  UNION ALL SELECT 'bm25', 'vacuumed_segments', 1
            |  UNION ALL SELECT 'cluster', 'fsck_dangling_keepers', 0
            |  UNION ALL SELECT 'cluster', 'fsck_duplicate_doc_rows', 0
            |  UNION ALL SELECT 'cluster', 'fsck_keeper_above_doc', 0

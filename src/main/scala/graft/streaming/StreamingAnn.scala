@@ -72,7 +72,8 @@ object StreamingAnn {
     // written — is the documented at-least-once replay case the guards
     // below already handle (the replay appends nothing and re-emits the
     // original rows).
-    var novel: DataFrame = null
+    // written on a pool thread, read here in the finally
+    @volatile var novel: DataFrame = null
     try {
       graft.operators.Jobs.concurrently(
         () =>

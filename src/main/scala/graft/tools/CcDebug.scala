@@ -7,13 +7,17 @@ import org.apache.spark.sql.functions._
   * for min-label propagation — the hybrid in `duplicateClusters` runs a
   * few propagation rounds then hands the residual edges to large-star /
   * small-star contraction (Kiveris et al.), which converges in O(log n)
-  * star rounds where plain propagation needs ~n. Run with GRAFT_CC_DEBUG=1
-  * to see the per-round trace: `tools/run_main.sh graft.tools.CcDebug [n]`. */
+  * star rounds where plain propagation needs ~n. The per-round trace is
+  * the `cc.prop_round` / `cc.star_round` debug events of the
+  * `graft.operators` logger, which this harness enables:
+  * `tools/run_main.sh graft.tools.CcDebug [n]`. */
 object CcDebug {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(30)
     val spark = graft.engine.GraftSession.local(8, "cc-debug")
     spark.sparkContext.setLogLevel("ERROR")
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.operators", org.apache.logging.log4j.Level.DEBUG)
     import spark.implicits._
     val pairs = spark.range(n - 1)
       .select(col("id").as("d1"), (col("id") + 1).as("d2"))

@@ -27,14 +27,8 @@ object RepairProbe {
     // ---- fixture build, family by family (mirrors plantCorruptedFamilies)
     t("bm25-build")(graft.operators.Retrieval.writeBm25Index(
       docs.filter(col("doc_id") < 200), "doc_id", "text", s"$base/bm25", termShards = 4))
-    def plantPostings(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$base/bm25/postings")
-    t("bm25-plants") {
-      plantPostings(docs.filter(col("doc_id").between(200, 219)))
-      plantPostings(docs.filter(col("doc_id").between(100, 109)))
-    }
+    t("bm25-plants")(graft.queries.OperatorQueries.plantUncommittedBm25Append(
+      spark, docs.filter(col("doc_id").between(200, 219)), s"$base/bm25"))
     t("mh-build")(graft.operators.Dedup.writeMinhashIndex(
       docs.filter(col("doc_id") < 150), "doc_id", "text", s"$base/mh"))
     def sigsOf(d: org.apache.spark.sql.DataFrame) =
@@ -108,7 +102,7 @@ object RepairProbe {
 
     // ---- repairs
     t("repair-bm25")(graft.operators.IndexRepair.repairBm25Index(
-      spark, s"$base/bm25", termShards = 4).count())
+      spark, s"$base/bm25").count())
     t("mh-inconsistent") {
       val mhBad = graft.operators.IndexRepair.minhashInconsistentIds(
         spark, s"$base/mh").localCheckpoint()
@@ -143,7 +137,7 @@ object RepairProbe {
     t("repairs-all-parallel") {
       graft.queries.OperatorQueries.concurrently(
         () => graft.operators.IndexRepair.repairBm25Index(
-          spark, s"$base2/bm25", termShards = 4).count(),
+          spark, s"$base2/bm25").count(),
         () => {
           val mhBad = graft.operators.IndexRepair.minhashInconsistentIds(
             spark, s"$base2/mh").localCheckpoint()

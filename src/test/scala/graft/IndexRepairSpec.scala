@@ -27,10 +27,10 @@ class IndexRepairSpec extends AnyFunSuite {
   test("repair of a clean BM25 index is a no-op: zero report, membership intact") {
     val dir = scratch("rep_bm25")
     Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 4)
-    val before = spark.read.parquet(s"$dir/postings").count()
-    val rep = reportMap(IndexRepair.repairBm25Index(spark, dir, termShards = 4))
+    val before = Retrieval.Bm25Index.read(spark, dir).postings.count()
+    val rep = reportMap(IndexRepair.repairBm25Index(spark, dir))
     assert(rep.values.forall(_ == 0L), s"clean repair reported work: $rep")
-    assert(spark.read.parquet(s"$dir/postings").count() == before)
+    assert(Retrieval.Bm25Index.read(spark, dir).postings.count() == before)
     assert(IndexFsck.checkBm25(spark, dir).agg(sum("violations"))
       .collect().head.getLong(0) == 0L)
   }
@@ -87,24 +87,22 @@ class IndexRepairSpec extends AnyFunSuite {
       == vecs.count())
   }
 
-  test("report actions PARTITION the removed rows: a duplicated ghost posting counts once, as ghost") {
-    val dir = scratch("rep_bm25_ovl")
+  test("BM25 repair reports the vacuumed debris; a second repair is a no-op") {
+    val dir = scratch("rep_bm25_debris")
     Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 4)
-    // torn append (no doclens row) that was then crash-retried: the ghost
-    // rows land TWICE — they must show up only under the ghost action, or
-    // the report over-describes the repair by the overlap
-    val ghost = graft.engine.Tables.table(spark, sfDir, "documents")
-      .filter(col("doc_id").between(120, 129))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val perAppend = ghost.count()
-    ghost.write.mode("append").parquet(s"$dir/postings")
-    ghost.write.mode("append").parquet(s"$dir/postings")
-    val rep = reportMap(IndexRepair.repairBm25Index(spark, dir, termShards = 4))
-    assert(rep("reclaimed_ghost_posting_rows") == 2 * perAppend)
-    assert(rep("collapsed_duplicate_posting_rows") == 0L)
+    val before = Retrieval.Bm25Index.read(spark, dir).postings.count()
+    // two appends that crashed before their commits
+    Seq((120, 124), (125, 129)).foreach { case (lo, hi) =>
+      graft.queries.OperatorQueries.plantUncommittedBm25Append(spark,
+        graft.engine.Tables.table(spark, sfDir, "documents")
+          .filter(col("doc_id").between(lo, hi)), dir)
+    }
+    val rep = reportMap(IndexRepair.repairBm25Index(spark, dir))
+    assert(rep == Map("vacuumed_segments" -> 2L, "vacuumed_manifests" -> 0L))
     assert(IndexFsck.checkBm25(spark, dir).agg(sum("violations"))
       .collect().head.getLong(0) == 0L)
+    assert(Retrieval.Bm25Index.read(spark, dir).postings.count() == before)
+    assert(reportMap(IndexRepair.repairBm25Index(spark, dir)).values.forall(_ == 0L))
   }
 
   test("repairClusterAssignment preserves singletons and never invents connectivity") {

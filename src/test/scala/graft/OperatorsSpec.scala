@@ -1160,7 +1160,7 @@ class OperatorsSpec extends AnyFunSuite {
         .unionAll(IndexFsck.checkAggState(spark, adir))
         .unionAll(IndexFsck.checkClusterAssignment(cleanClusters))
         .unionAll(IndexFsck.checkIvfPq(spark, vdir)))
-      assert(clean.size == 15 && clean.values.forall(_ == 0L),
+      assert(clean.size == 17 && clean.values.forall(_ == 0L),
         s"clean state must report zero violations everywhere: $clean")
       // minhash: a torn append (sigs landed, bands did not) is an id-set
       // mismatch; a retried full append doubles the band count
@@ -1173,14 +1173,9 @@ class OperatorsSpec extends AnyFunSuite {
       assert(mrep(("minhash", "sig_band_id_mismatch")) == nTorn &&
         mrep(("minhash", "wrong_band_count")) == 0L)
       // one plant per family, each counted exactly
-      val ghosts = docs.filter($"doc_id" < 5)
-        .select($"doc_id" + 5000L as "doc_id", $"text")
-        .select($"doc_id", explode(split($"text", " ")).as("term"))
-        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-        .localCheckpoint()
-      val nGhost = ghosts.count()
-      ghosts.write.mode("append").parquet(s"$bdir/postings")
-      assert(report(IndexFsck.checkBm25(spark, bdir))(("bm25", "ghost_postings")) == nGhost)
+      graft.queries.OperatorQueries.plantUncommittedBm25Append(spark,
+        docs.filter($"doc_id" < 5).select($"doc_id" + 5000L as "doc_id", $"text"), bdir)
+      assert(report(IndexFsck.checkBm25(spark, bdir))(("bm25", "orphan_segments")) == 2L)
       val orphan = AggState.partials(li.filter($"l_returnflag" === "R"),
         Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), "torn")
         .localCheckpoint()

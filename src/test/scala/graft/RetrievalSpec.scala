@@ -2,12 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Retrieval, TextAnalysis}
+import graft.operators.{IndexFsck, IndexRepair, Retrieval, TextAnalysis, VersionedStore}
 
 /** The persisted BM25 index lifecycle (Retrieval): query == bm25Lite
   * bit-identity, append idempotence + append == rebuild, tokenizer-tag
-  * validation, compaction (drops + retried-duplicate collapse), and
-  * interrupted-swap crash recovery at read. */
+  * validation, compaction, and the crash shapes its store can still hold
+  * (an orphan segment, a `.tmp-` manifest) after a crashed append,
+  * compaction or rebuild: invisible to reads, appends and compaction,
+  * reported by fsck, cleared by repair, and a re-run reaches the content
+  * of a run with no fault. */
 class RetrievalSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -23,6 +26,23 @@ class RetrievalSpec extends AnyFunSuite {
     idx.postings.groupBy("term").agg(sum($"tf").as("n"))
       .orderBy($"n".desc, $"term").limit(n).select("term")
 
+  // the crash debris of an append that died before its commit: the
+  // batch's postings segment, and a half-written `.tmp-` manifest
+  private def plantUncommittedAppend(batch: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    graft.queries.OperatorQueries.plantUncommittedBm25Append(spark, batch, dir)
+
+  private def orphanSegment(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    df.write.parquet(s"$dir/_segments/orphan-${java.util.UUID.randomUUID().toString.take(8)}")
+
+  private def fsck(dir: String): Map[String, Long] =
+    IndexFsck.checkBm25(spark, dir).collect()
+      .map(r => r.getAs[String]("check") -> r.getAs[Long]("violations")).toMap
+
+  // the stored content of both tables, order-free
+  private def content(idx: Retrieval.Bm25Index): (Seq[String], Seq[String]) =
+    (idx.postings.select("term", "doc_id", "tf").collect().map(_.toString).toSeq.sorted,
+      idx.doclens.select("doc_id", "dl").collect().map(_.toString).toSeq.sorted)
+
   private def scores(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.orderBy($"score_ppm".desc, $"doc_id").collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("score_ppm"))).toSeq
@@ -35,7 +55,7 @@ class RetrievalSpec extends AnyFunSuite {
     val viaText = scores(TextAnalysis.bm25Lite(docs, "doc_id", "text", qterms))
     assert(viaIndex.nonEmpty && viaIndex == viaText)
     // and the stored layout carries the meta tag
-    assert(idx.meta.contains(Retrieval.Bm25Meta(Retrieval.TokenizerWs1)))
+    assert(idx.meta == Retrieval.Bm25Meta(Retrieval.TokenizerWs1))
   }
 
   test("append: committed replay is a no-op and appended == rebuilt") {
@@ -47,7 +67,10 @@ class RetrievalSpec extends AnyFunSuite {
     val once = Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
     val nPost = once.postings.count()
     val nLens = once.doclens.count()
+    val versions = VersionedStore.versionNumbers(spark, dir)
     val twice = Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
+    assert(VersionedStore.versionNumbers(spark, dir) == versions,
+      "a replayed append must commit nothing")
     assert(twice.postings.count() == nPost, "replayed append grew postings")
     assert(twice.doclens.count() == nLens, "replayed append grew doclens")
     // appended index answers exactly like one built over corpus UNION batch
@@ -80,11 +103,10 @@ class RetrievalSpec extends AnyFunSuite {
     val batch = docs.filter($"doc_id" >= 150)
       .select(($"doc_id" + 5000L).as("doc_id"), $"text")
     Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 4)
+    // an append that crashed before its commit, then its retry: the
+    // crashed attempt's postings segment stays an invisible orphan
+    plantUncommittedAppend(batch, dir)
     Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
-    // torn crash-retry state: batch postings land twice, doclens once
-    batch.select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$dir/postings")
     val drops = corpus.filter($"doc_id" % 10 === 3).select("doc_id")
     val compacted = Retrieval.compactBm25Index(spark, dir,
       dropIds = Some(drops), termShards = 4)
@@ -100,60 +122,8 @@ class RetrievalSpec extends AnyFunSuite {
     val qterms = topTerms(compacted)
     assert(scores(Retrieval.queryBm25Index(compacted, qterms)) ==
       scores(Retrieval.queryBm25Index(rebuilt, qterms)))
-    // meta tag survives the swap
-    assert(compacted.meta.contains(Retrieval.Bm25Meta(Retrieval.TokenizerWs1)))
-  }
-
-  test("liveness rule: a torn append (postings without doclens) is invisible to queries") {
-    val dir = scratch("bm25_ghost")
-    val corpus = docs.filter($"doc_id" < 150)
-    val batch = docs.filter($"doc_id" >= 150)
-      .select(($"doc_id" + 5000L).as("doc_id"), $"text")
-    val built = Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 4)
-    // materialized to literals: a lazy qterms plan would capture the
-    // pre-compaction postings file listing and fail after the swap below
-    val qterms = topTerms(built).collect().map(_.getString(0)).toSeq.toDF("term")
-    val before = scores(Retrieval.queryBm25Index(built, qterms))
-    assert(before.nonEmpty)
-    // torn state: postings committed, doclens not (crash between the writes)
-    batch.select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$dir/postings")
-    val torn = Retrieval.Bm25Index.read(spark, dir)
-    // ghost rows must not move ANY statistic — df included — so the torn
-    // index scores bit-identically to the pre-append index
-    assert(scores(Retrieval.queryBm25Index(torn, qterms)) == before)
-    // and compaction's liveness sweep reclaims the ghosts
-    val compacted = Retrieval.compactBm25Index(spark, dir, termShards = 4)
-    assert(compacted.postings.filter($"doc_id" >= 5000L).count() == 0)
-    assert(scores(Retrieval.queryBm25Index(compacted, qterms)) == before)
-  }
-
-  test("compact swap order: the between-swaps crash state scores like the compacted index") {
-    val dir = scratch("bm25_midcmp")
-    Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 4)
-    val drops = docs.filter($"doc_id" % 7 === 2).select("doc_id")
-    // the fully-compacted answer, from an identical sibling index
-    val sib = scratch("bm25_midcmp_sib")
-    Retrieval.writeBm25Index(docs, "doc_id", "text", sib, termShards = 4)
-    val full = Retrieval.compactBm25Index(spark, sib, dropIds = Some(drops),
-      termShards = 4)
-    val qterms = topTerms(full)
-    val want = scores(Retrieval.queryBm25Index(full, qterms))
-    assert(want.nonEmpty)
-    // simulate the crash window: doclens swapped (tombstones gone), the
-    // postings swap never ran — exactly compactBm25Index's first half
-    spark.read.parquet(s"$dir/doclens")
-      .join(drops, Seq("doc_id"), "left_anti")
-      .write.parquet(s"$dir/_doclens_new")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/doclens"))
-    assert(new java.io.File(s"$dir/_doclens_new")
-      .renameTo(new java.io.File(s"$dir/doclens")))
-    spark.catalog.refreshByPath(s"$dir/doclens")
-    val mid = Retrieval.Bm25Index.read(spark, dir)
-    assert(mid.postings.join(drops, Seq("doc_id")).count() > 0,
-      "fixture must leave tombstoned postings in place")
-    assert(scores(Retrieval.queryBm25Index(mid, qterms)) == want)
+    // meta tag survives the rewrite
+    assert(compacted.meta == Retrieval.Bm25Meta(Retrieval.TokenizerWs1))
   }
 
   test("indexed stream loop: replay appends nothing and re-emits the same scores") {
@@ -183,89 +153,96 @@ class RetrievalSpec extends AnyFunSuite {
     assert(rows2 == (rows1 ++ rows1).sortBy(_.toString))
     // scores tag the POST-fold index version
     assert(rows1.forall(_.head == after1.doclens.count()))
+    assert(after1.nDocs == after1.doclens.count())
   }
 
-  test("heal-mode append closes the torn postings-without-doclens window") {
-    val dir = scratch("bm25_heal")
+  test("uncommitted append debris is invisible; fsck reports it, repair clears it") {
+    val dir = scratch("bm25_debris")
     val corpus = docs.filter($"doc_id" < 150)
     val batch = docs.filter($"doc_id" >= 150)
       .select(($"doc_id" + 5000L).as("doc_id"), $"text")
-    Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 4)
-    // torn state: a crashed append committed postings but not doclens
-    batch.select($"doc_id", explode(split($"text", " ")).as("term"))
-      .groupBy($"term", $"doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$dir/postings")
-    // the healed retry must land doclens WITHOUT duplicating postings
-    val healed = Retrieval.appendBm25Index(batch, "doc_id", "text", dir,
-      heal = true)
-    assert(healed.postings.groupBy("term", "doc_id").count()
-      .filter($"count" > 1).count() == 0, "heal left duplicate postings")
-    assert(healed.doclens.join(batch.select("doc_id"), Seq("doc_id")).count()
-      == batch.count(), "heal did not commit the batch's doclens")
-    // and the healed index scores exactly like a clean rebuild
-    val rebuilt = Retrieval.writeBm25Index(corpus.unionAll(batch),
-      "doc_id", "text", scratch("bm25_heal_reb"), termShards = 4)
-    val qterms = topTerms(healed)
-    assert(scores(Retrieval.queryBm25Index(healed, qterms)) ==
-      scores(Retrieval.queryBm25Index(rebuilt, qterms)))
-  }
-
-  test("read recovers an interrupted compaction swap") {
-    val dir = scratch("bm25_torn")
-    val built = Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 2)
-    val qterms = topTerms(built, 1).collect().map(_.getString(0)).toSeq
-    val before = scores(Retrieval.queryBm25Index(
-      Retrieval.Bm25Index.read(spark, dir), qterms.toDF("term")))
+    val built = Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 4)
+    val qterms = topTerms(built).collect().map(_.getString(0)).toSeq.toDF("term")
+    val before = scores(Retrieval.queryBm25Index(built, qterms))
     assert(before.nonEmpty)
-    // crash window: rename(live, old) succeeded, rename(stage, live) did not
-    val fs = new java.io.File(s"$dir/postings")
-    assert(fs.renameTo(new java.io.File(s"$dir/_postings_old")))
-    val recovered = Retrieval.Bm25Index.read(spark, dir)
-    assert(scores(Retrieval.queryBm25Index(
-      recovered, qterms.toDF("term"))) == before)
-    assert(new java.io.File(s"$dir/postings").exists())
+    plantUncommittedAppend(batch, dir)
+    // reads serve the committed version, untouched by the debris
+    val torn = Retrieval.Bm25Index.read(spark, dir)
+    assert(torn.postings.filter($"doc_id" >= 5000L).count() == 0)
+    assert(scores(Retrieval.queryBm25Index(torn, qterms)) == before)
+    assert(fsck(dir)("orphan_segments") == 2L)
+    // the retry appends the batch exactly once and scores like a rebuild
+    val retried = Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
+    assert(retried.postings.groupBy("term", "doc_id").count()
+      .filter($"count" > 1).count() == 0, "the retry duplicated postings")
+    val rebuilt = Retrieval.writeBm25Index(corpus.unionAll(batch),
+      "doc_id", "text", scratch("bm25_debris_reb"), termShards = 4)
+    assert(scores(Retrieval.queryBm25Index(retried, qterms)) ==
+      scores(Retrieval.queryBm25Index(rebuilt, qterms)))
+    // repair vacuums the debris away; content equals a fault-free run's
+    val rep = IndexRepair.repairBm25Index(spark, dir).collect()
+      .map(r => r.getString(1) -> r.getLong(2)).toMap
+    assert(rep("vacuumed_segments") == 1L)
+    assert(fsck(dir).values.forall(_ == 0L), s"repair left findings: ${fsck(dir)}")
+    assert(new java.io.File(s"$dir/_manifests").list().forall(!_.startsWith(".tmp-")))
+    val clean = scratch("bm25_debris_clean")
+    Retrieval.writeBm25Index(corpus, "doc_id", "text", clean, termShards = 4)
+    assert(content(Retrieval.Bm25Index.read(spark, dir)) ==
+      content(Retrieval.appendBm25Index(batch, "doc_id", "text", clean)))
   }
 
-  test("torn rebuild marker: a crashed writeBm25Index refuses every read until re-run") {
-    val dir = scratch("bm25_reb_torn")
-    Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 2)
-    // the crash window: a rebuild-in-place died between the postings and
-    // doclens overwrites — both tables exist and parse, only the surviving
-    // intent marker distinguishes the mixed-build state
-    new java.io.File(s"$dir/_rebuild_intent").createNewFile()
-    val e = intercept[IllegalArgumentException](Retrieval.Bm25Index.read(spark, dir))
-    assert(e.getMessage.contains("torn writeBm25Index"))
-    intercept[IllegalArgumentException](
-      Retrieval.appendBm25Index(docs.limit(1), "doc_id", "text", dir))
-    intercept[IllegalArgumentException](
-      Retrieval.compactBm25Index(spark, dir, termShards = 2))
-    // the documented remedy — re-run the rebuild — clears the marker
-    val idx = Retrieval.writeBm25Index(docs, "doc_id", "text", dir, termShards = 2)
-    assert(!new java.io.File(s"$dir/_rebuild_intent").exists())
-    assert(scores(Retrieval.queryBm25Index(idx, topTerms(idx))).nonEmpty)
-  }
-
-  test("interrupted compaction blocks appends (ghost revival) until re-run; queries keep working") {
+  test("interrupted compaction: old version serves, appends proceed, re-run matches") {
     val dir = scratch("bm25_cint")
     val corpus = docs.filter($"doc_id" < 150)
-    val built = Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 2)
-    val qterms = topTerms(built)
-    // the crash window between the doclens and postings swaps: doclens
-    // compacted, ghost postings still present, intent marker surviving
-    new java.io.File(s"$dir/_compact_intent").createNewFile()
-    // queries stay correct throughout (ghost invisibility — spec'd above)
-    assert(scores(Retrieval.queryBm25Index(
-      Retrieval.Bm25Index.read(spark, dir), qterms)).nonEmpty)
-    // but an append could revive a dropped id's ghosts — refused loudly
     val batch = docs.filter($"doc_id" >= 150)
-    val e = intercept[IllegalArgumentException](
-      Retrieval.appendBm25Index(batch, "doc_id", "text", dir))
-    assert(e.getMessage.contains("interrupted compactBm25Index"))
-    // finishing the compaction (no dropIds needed) clears the marker and
-    // the append proceeds
-    Retrieval.compactBm25Index(spark, dir, termShards = 2)
-    assert(!new java.io.File(s"$dir/_compact_intent").exists())
+    val drops = corpus.filter($"doc_id" % 7 === 2).select("doc_id")
+    val built = Retrieval.writeBm25Index(corpus, "doc_id", "text", dir, termShards = 4)
+    val qterms = topTerms(built).collect().map(_.getString(0)).toSeq.toDF("term")
+    val before = scores(Retrieval.queryBm25Index(built, qterms))
+    // the compaction wrote both rewritten tables, then died before its
+    // commit (the manifest never left its .tmp- name)
+    orphanSegment(built.doclens.join(drops, Seq("doc_id"), "left_anti"), dir)
+    orphanSegment(built.postings.join(drops, Seq("doc_id"), "left_anti"), dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/_manifests/.tmp-dead"),
+      "{\"version\":2".getBytes("UTF-8"))
+    assert(scores(Retrieval.queryBm25Index(Retrieval.Bm25Index.read(spark, dir), qterms)) == before)
+    assert(fsck(dir)("orphan_segments") == 3L)
+    // appends are not blocked, and see the pre-compaction index
     val appended = Retrieval.appendBm25Index(batch, "doc_id", "text", dir)
-    assert(appended.doclens.count() == corpus.count() + batch.count())
+    assert(appended.nDocs == corpus.count() + batch.count())
+    // the re-run compacts and reclaims the debris
+    val compacted = Retrieval.compactBm25Index(spark, dir, dropIds = Some(drops),
+      termShards = 4)
+    assert(fsck(dir).values.forall(_ == 0L), s"compaction left findings: ${fsck(dir)}")
+    val sib = scratch("bm25_cint_sib")
+    Retrieval.writeBm25Index(corpus, "doc_id", "text", sib, termShards = 4)
+    Retrieval.appendBm25Index(batch, "doc_id", "text", sib)
+    val want = Retrieval.compactBm25Index(spark, sib, dropIds = Some(drops), termShards = 4)
+    assert(content(compacted) == content(want))
+    assert(scores(Retrieval.queryBm25Index(compacted, qterms)) ==
+      scores(Retrieval.queryBm25Index(want, qterms)))
+  }
+
+  test("crashed rebuild in place: previous build serves; re-run equals a fresh build") {
+    val dir = scratch("bm25_reb_crash")
+    val first = docs.filter($"doc_id" < 120)
+    val second = docs.filter($"doc_id" >= 60)
+    val built = Retrieval.writeBm25Index(first, "doc_id", "text", dir, termShards = 2)
+    val qterms = topTerms(built).collect().map(_.getString(0)).toSeq.toDF("term")
+    val before = scores(Retrieval.queryBm25Index(built, qterms))
+    // the rebuild over `second` wrote its postings, then died
+    plantUncommittedAppend(second, dir)
+    val mid = Retrieval.Bm25Index.read(spark, dir)
+    assert(mid.nDocs == first.count())
+    assert(scores(Retrieval.queryBm25Index(mid, qterms)) == before)
+    // the re-run: one rewrite of both tables, debris reclaimed
+    val rebuilt = Retrieval.writeBm25Index(second, "doc_id", "text", dir, termShards = 2)
+    assert(VersionedStore.versionNumbers(spark, dir) == Seq(2L))
+    assert(fsck(dir).values.forall(_ == 0L), s"rebuild left findings: ${fsck(dir)}")
+    val fresh = Retrieval.writeBm25Index(second, "doc_id", "text",
+      scratch("bm25_reb_fresh"), termShards = 2)
+    assert(content(rebuilt) == content(fresh))
+    assert(scores(Retrieval.queryBm25Index(rebuilt, qterms)) ==
+      scores(Retrieval.queryBm25Index(fresh, qterms)))
   }
 }

@@ -69,10 +69,10 @@ class ScanBudgetSpec extends AnyFunSuite {
     "q_dedup_minhash_cross_index" -> 4,
     // persisted BM25 index query: postings scanned once per tf reference
     // (df branch + score join) plus once for the stored-postings qterm
-    // derivation, doclens once per dl reference (totals + the liveness
-    // join, whose df branch re-evaluates it — the deliberate +1 of making
-    // df derive from tf JOIN dl so ghost postings can't leak into df) —
-    // all INDEX tables; zero corpus-text scans, the operator's core claim
+    // derivation, doclens once per dl reference (totals + the tf JOIN dl
+    // that supplies each document's length, whose df branch re-evaluates
+    // it) — all INDEX tables; zero corpus-text scans, the operator's core
+    // claim
     "q_op_bm25_index" -> 7,
     // hybrid-from-indexes capstone: the BM25 arm's index scans (as above)
     // + the ANN arm's stored cent/codebook/codes + the one-row probe read

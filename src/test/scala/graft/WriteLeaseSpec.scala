@@ -100,7 +100,7 @@ class WriteLeaseSpec extends AnyFunSuite {
     plantForeignLease(bdir, ageMs = 0)
     intercept[IllegalArgumentException](
       Retrieval.writeBm25Index(docs, "doc_id", "text", bdir, termShards = 2))
-    assert(!new java.io.File(s"$bdir/postings").exists(),
+    assert(!new java.io.File(s"$bdir/_segments").exists(),
       "a blocked build must write nothing")
     // agg-state fold refuses a held directory
     val adir = scratch("lease_agg")
