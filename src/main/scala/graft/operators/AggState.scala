@@ -253,7 +253,7 @@ object AggState {
         sum(col(s"sum_$v")).cast("decimal(38,6)").cast("double").as(s"sum_$v"),
         min(col(s"min_$v")).as(s"min_$v"),
         max(col(s"max_$v")).as(s"max_$v")))
-    spark.read.parquet(s"$dir/state")
+    IndexFiles.readParquet(spark, s"$dir/state")
       .dropDuplicates(groupCols :+ "__batch")
       .groupBy(groupCols.map(col): _*)
       .agg(measures.head, measures.tail: _*)
@@ -286,7 +286,7 @@ object AggState {
     IndexFiles.withWriteLease(spark, dir, "compactAggState") {
     IndexFiles.recoverInterruptedSwap(spark, dir, "state", "compactAggState")
     val tags = readTags(spark, dir)
-    val orphans = spark.read.parquet(s"$dir/state")
+    val orphans = IndexFiles.readParquet(spark, s"$dir/state")
       .select("__batch").distinct().collect().map(_.getString(0))
       .filter(t => !t.startsWith("__") && !tags.contains(t)).sorted
     val allTags = tags ++ orphans
@@ -368,7 +368,7 @@ object AggState {
     IndexFiles.withWriteLease(spark, dir, "retractAggState") {
     IndexFiles.recoverInterruptedSwap(spark, dir, "state", "retractAggState")
     val retracted = readStringList(spark, dir, "_retracted.json")
-    val hasRows = !spark.read.parquet(s"$dir/state")
+    val hasRows = !IndexFiles.readParquet(spark, s"$dir/state")
       .filter(col("__batch") === batchTag).isEmpty
     if (retracted.contains(batchTag)) {
       // already retracted — but a crash between the intent write and the

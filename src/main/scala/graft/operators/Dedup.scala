@@ -184,8 +184,8 @@ object Dedup {
       Seq("sigs", "bands").foreach(
         IndexFiles.recoverInterruptedSwap(spark, dir, _, "MinhashIndex.read"))
       MinhashIndex(
-        spark.read.parquet(s"$dir/bands"),
-        spark.read.parquet(s"$dir/sigs"),
+        IndexFiles.readParquet(spark, s"$dir/bands"),
+        IndexFiles.readParquet(spark, s"$dir/sigs"),
         MinhashMeta.read(spark, dir))
     }
   }
@@ -208,7 +208,7 @@ object Dedup {
       IndexFiles.createMarker(spark, dir, "_rebuild_intent")
       minhashSignature(corpus, idCol, textCol, k, shingleN)
         .write.mode("overwrite").parquet(s"$dir/sigs")
-      val sigs = spark.read.parquet(s"$dir/sigs")
+      val sigs = IndexFiles.readParquet(spark, s"$dir/sigs")
       minhashBands(sigs, idCol, bands, rowsPerBand)
         .write.mode("overwrite").parquet(s"$dir/bands")
       MinhashMeta.write(spark, dir, MinhashMeta(k, shingleN, bands, rowsPerBand))
@@ -905,7 +905,7 @@ object Dedup {
       }
       IndexFiles.deleteMarker(spark, dir, clusterSeedMarker)
     }
-    spark.read.parquet(s"$dir/clusters")
+    IndexFiles.readParquet(spark, s"$dir/clusters")
   }
 
   /** The persisted cluster assignment at `dir/clusters`, with the same
@@ -916,7 +916,7 @@ object Dedup {
                        dir: String): DataFrame = {
     requireNoTornClusterSeed(spark, dir, "readClusterState")
     IndexFiles.recoverInterruptedSwap(spark, dir, "clusters", "readClusterState")
-    spark.read.parquet(s"$dir/clusters")
+    IndexFiles.readParquet(spark, s"$dir/clusters")
   }
 
   /** Fold a checked batch's pairs into the persisted cluster state:

@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** The ONE copy of the crash-sensitive filesystem protocol shared by every
   * persisted family still on the rename swap (the MinHash near-dup and
@@ -31,6 +37,109 @@ private[operators] object IndexFiles {
 
   def fs(spark: SparkSession, p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Driver-side footer reads of persisted parquet: the schema and the
+    * segment statistics live in the footers of the files just written, so
+    * reading them costs a listing and a few small reads on the driver —
+    * no Spark job. A plain `spark.read.parquet(dir)` runs one job per call
+    * only to infer a schema the first footer already states, and a
+    * min/max aggregate runs one more to recompute what the row-group
+    * statistics already carry.
+    *
+    * Data files are the directory's entries Spark itself would read:
+    * `_`- and `.`-prefixed names (`_SUCCESS`, markers, checksums, staged
+    * tables) are skipped. A path that is missing, or that holds a
+    * subdirectory (a partitioned layout), yields no data files, and its
+    * read falls back to Spark's own inference. */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val listed = try fs(spark, p).listStatus(p).toSeq catch {
+      case _: java.io.FileNotFoundException => Seq.empty
+    }
+    val files = listed.filterNot { s =>
+      val n = s.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    if (files.exists(_.isDirectory)) Seq.empty else files
+  }
+
+  private def footers(spark: SparkSession,
+                      files: Seq[FileStatus]): Seq[(FileStatus, ParquetMetadata)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try f -> in.getFooter finally in.close()
+    }
+  }
+
+  // Spark's own footer-to-schema step, with the converter its inference
+  // builds from the session's SQL conf, so the result is the schema a
+  // plain read would infer from the same file
+  private def sparkSchema(spark: SparkSession,
+                          footer: (FileStatus, ParquetMetadata)): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(footer._1.getPath, footer._2),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+
+  /** The Spark schema of the parquet at `paths`, from the footer of the
+    * first data file — the one file Spark's non-merging inference reads.
+    * None when no path holds a data file. */
+  def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    paths.iterator.flatMap(p => dataFiles(spark, p).headOption).nextOption()
+      .map(f => sparkSchema(spark, footers(spark, Seq(f)).head))
+
+  /** `spark.read.parquet(paths)` with the schema passed from a footer: the
+    * same DataFrame without the inference job. Paths with no data file
+    * read through Spark's plain inference, which raises the error it
+    * always raised (a missing path, an empty directory). */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  final case class FooterStats(rows: Long, min: Map[String, Long],
+                               max: Map[String, Long])
+
+  /** Row count and per-column bounds of the parquet at `dir`, folded over
+    * the row groups of every data file's footer. Bounds cover the
+    * top-level integral columns (byte/short/int/long, widened to long).
+    * A column gets a bound only when every non-empty row group either
+    * carries a min/max or is all null, and at least one carries one; a
+    * bound folded from only some row groups could exclude rows of the
+    * others, so any row group without statistics leaves the column
+    * unbounded. A directory with no data file throws, as reading it does. */
+  def footerStats(spark: SparkSession, dir: String): FooterStats = {
+    val files = dataFiles(spark, dir)
+    require(files.nonEmpty, s"footerStats: no parquet data files at $dir")
+    val metas = footers(spark, files)
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val statCols = sparkSchema(spark, metas.head).fields
+      .collect { case f if integral(f.dataType) => f.name }.toSeq
+    val groups = metas.flatMap(_._2.getBlocks.asScala).filter(_.getRowCount > 0)
+    // per column: Some((min, max)) over the row groups holding a value,
+    // None when a row group's statistics cannot vouch for its rows
+    def bounds(c: String): Option[(Long, Long)] = {
+      val perGroup = groups.map { g =>
+        val st = g.getColumns.asScala.find(_.getPath.toArray.toSeq == Seq(c))
+          .flatMap(m => Option(m.getStatistics))
+        st match {
+          case Some(s) if s.hasNonNullValue =>
+            Some(Some((s.genericGetMin.asInstanceOf[Number].longValue,
+              s.genericGetMax.asInstanceOf[Number].longValue)))
+          case Some(s) if s.isNumNullsSet && s.getNumNulls == g.getRowCount =>
+            Some(None) // all null: no value to bound
+          case _ => None
+        }
+      }
+      if (perGroup.exists(_.isEmpty)) None
+      else perGroup.flatten.flatten.reduceOption((a, b) =>
+        (math.min(a._1, b._1), math.max(a._2, b._2)))
+    }
+    val bounded = statCols.flatMap(c => bounds(c).map(c -> _))
+    FooterStats(groups.map(_.getRowCount).sum,
+      bounded.map { case (c, (mn, _)) => c -> mn }.toMap,
+      bounded.map { case (c, (_, mx)) => c -> mx }.toMap)
+  }
 
   /** Read a file fully (the ONE copy of the chunked read-to-EOF loop —
     * trusting a single read() call truncates on chunked streams, the bug
@@ -65,7 +174,7 @@ private[operators] object IndexFiles {
     val live = new Path(s"$dir/$name")
     val stage = new Path(s"$dir/_${name}_compact")
     val old = new Path(s"$dir/_${name}_old")
-    rewrite(spark.read.parquet(live.toString))
+    rewrite(readParquet(spark, live.toString))
       .write.mode("overwrite").parquet(stage.toString)
     val f = fs(spark, live)
     f.delete(old, true)

@@ -142,7 +142,7 @@ object IndexFsck {
     // expression tree on a long-lived state
     val committed = AggState.committedTags(spark, dir).toDF("__batch")
     val retracted = AggState.retractedTags(spark, dir).toDF("__batch")
-    val state = spark.read.parquet(s"$dir/state")
+    val state = IndexFiles.readParquet(spark, s"$dir/state")
     val orphan = state.filter(!col("__batch").startsWith("__"))
       .join(committed, Seq("__batch"), "left_anti")
     val retr = state.join(retracted, Seq("__batch"), "left_semi")
@@ -203,15 +203,17 @@ object IndexFsck {
     *     a new version with stats recomputed from the bytes.
     *
     * Cost: the three structural checks are listing-sized; the two stat
-    * checks re-scan the LATEST version's segments (count via row-group
-    * metadata, bounds via a columnar min/max pass) — one store scan,
-    * the price of distrusting the stamps. */
+    * checks re-read the parquet footers of the LATEST version's segment
+    * files (row counts and row-group min/max) on the driver — one small
+    * read per file and no Spark job, the price of distrusting the
+    * stamps. */
   def checkVersionedStore(spark: SparkSession, dir: String): DataFrame =
     // read-only but consistency-critical, so it runs under the write lease
     // (ADVICE r12): a concurrent writer's not-yet-committed segment would
     // read as an orphan (a false positive an operator might then "fix" by
     // vacuuming), and a rewrite/vacuum landing between the manifest
-    // listing and the statsOf re-scan could vanish a segment mid-audit
+    // listing and the statsOf footer re-read could vanish a segment
+    // mid-audit
     IndexFiles.withWriteLease(spark, dir, "checkVersionedStore") {
     val f = IndexFiles.fs(spark, new org.apache.hadoop.fs.Path(dir))
     val manifests = VersionedStore.versions(spark, dir)

@@ -63,7 +63,10 @@ object IndexRepair {
     * debris of an uncommitted write (orphan segments, `.tmp-` manifests —
     * [[IndexFsck.checkBm25]]'s orphan_segments), so the repair is
     * [[VersionedStore.vacuum]] at its default retention. Returns the
-    * (family, action, n) report of what it deleted. */
+    * (family, action, n) report of what it deleted: `vacuumed_manifests`
+    * counts the `.tmp-` manifests with the dropped versions, so the two
+    * rows sum to the orphans fsck found (plus any versions past the
+    * retention). */
   def repairBm25Index(spark: SparkSession, dir: String): DataFrame = {
     val (segs, manifests) = VersionedStore.vacuum(spark, dir)
     report(spark, Seq(

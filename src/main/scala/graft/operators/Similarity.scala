@@ -541,9 +541,9 @@ object Similarity {
         graft.operators.IndexFiles.recoverInterruptedSwap(
           spark, dir, _, "IvfPqResidualIndex.read"))
       IvfPqResidualIndex(
-        spark.read.parquet(s"$dir/cent"),
-        spark.read.parquet(s"$dir/codebook"),
-        spark.read.parquet(s"$dir/codes"),
+        graft.operators.IndexFiles.readParquet(spark, s"$dir/cent"),
+        graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook"),
+        graft.operators.IndexFiles.readParquet(spark, s"$dir/codes"),
         IvfPqMeta.read(spark, dir))
     }
   }
@@ -716,7 +716,7 @@ object Similarity {
     // consistent as a set (see IvfPqResidualIndex.read's check)
     graft.operators.IndexFiles.createMarker(spark, dir, "_rebuild_intent")
     ivfCentTable(c0).write.mode("overwrite").parquet(s"$dir/cent")
-    val cent = spark.read.parquet(s"$dir/cent")
+    val cent = graft.operators.IndexFiles.readParquet(spark, s"$dir/cent")
     // single-scan assign + residual: __vec rides through the aggregate
     // (functionally dependent on the id — every fanned-out row of a group
     // carries the same vector, so first() is deterministic here; this is
@@ -733,10 +733,10 @@ object Similarity {
       .select(col("__cid"), col("cell"), col("rvec"))
     pqResidSubs(cres, "__cid", m, subDim)
       .write.mode("overwrite").parquet(s"$dir/_subs")
-    val csubs = spark.read.parquet(s"$dir/_subs")
+    val csubs = graft.operators.IndexFiles.readParquet(spark, s"$dir/_subs")
     ivfResidCodebook(csubs, pqBits, subDim)
       .write.mode("overwrite").parquet(s"$dir/codebook")
-    val codebook = spark.read.parquet(s"$dir/codebook")
+    val codebook = graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook")
     ivfResidCodes(csubs, codebook)
       .write.mode("overwrite").parquet(s"$dir/codes")
     // the staged residual sub-vectors are scaffolding, not index surface —
@@ -789,8 +789,8 @@ object Similarity {
           s"m=${stored.m}), passed (dim=$dim, m=$m) — use the stored values")
     }
     val subDim = dim / m
-    val cent = spark.read.parquet(s"$dir/cent")
-    val codebook = spark.read.parquet(s"$dir/codebook")
+    val cent = graft.operators.IndexFiles.readParquet(spark, s"$dir/cent")
+    val codebook = graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook")
     // fused assign+residual over the batch — same single-scan shape (and
     // the same unique-id precondition) as writeIvfPqResidualIndex's stage
     val assigned = ivfScored(withNorm(batch, idCol, vecCol), cent)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Manifest-versioned table store — the "manifest/pointer layer" that
   * [[IndexFiles]]' staged-swap scaladoc defers to, built as a first-class
@@ -72,11 +73,13 @@ object VersionedStore {
     * per-column min/max for every top-level INTEGRAL column (long/int/
     * short/byte, stored as long) — parquet row-group stats lifted one
     * level, so readers can skip whole segments without opening a footer.
-    * Computed from the STORED files after the write (not from a second
-    * evaluation of the batch plan, which a non-deterministic batch could
-    * drift from), so the stats are true of the bytes by construction.
-    * Columns absent from the maps (non-integral, or all-null in this
-    * segment) are simply not prunable — reads stay conservative. */
+    * Folded from the footers of the STORED files after the write (not
+    * from a second evaluation of the batch plan, which a non-deterministic
+    * batch could drift from), so the stats are true of the bytes by
+    * construction, and stamping them runs no Spark job. Columns absent
+    * from the maps (non-integral, all-null in this segment, or with a row
+    * group whose footer carries no min/max) are simply not prunable —
+    * reads stay conservative. */
   final case class SegMeta(name: String, rows: Long,
                            min: Map[String, Long], max: Map[String, Long])
 
@@ -116,10 +119,16 @@ object VersionedStore {
           s"VersionedStore: no table '$name' in version ${manifest.version} " +
             s"at $dir — tables: ${tableNames.mkString(", ")}"))
 
-    def table(name: String): DataFrame = {
-      val segs = segsOf(name)
-      spark.read.parquet(segs.map(s => s"$dir/_segments/${s.name}"): _*)
-    }
+    private def pathsOf(segs: Seq[SegMeta]): Seq[String] =
+      segs.map(s => s"$dir/_segments/${s.name}")
+
+    def table(name: String): DataFrame =
+      IndexFiles.readParquet(spark, pathsOf(segsOf(name)): _*)
+
+    /** The stored schema of `name`, from a segment footer — no job. */
+    private[operators] def schema(name: String): StructType =
+      IndexFiles.footerSchema(spark, pathsOf(segsOf(name)))
+        .getOrElse(table(name).schema) // no data file: Spark's own error
 
     /** Exact row count from the manifest statistics — O(1), no file I/O.
       * (Stats are computed from the stored bytes at write time.) Falls
@@ -153,9 +162,8 @@ object VersionedStore {
       if (candidates.isEmpty)
         // preserve the schema without scanning data (segments exist —
         // create/append never commit an empty table)
-        spark.read.parquet(s"$dir/_segments/${segs.head.name}").limit(0).filter(pred)
-      else spark.read.parquet(
-        candidates.map(s => s"$dir/_segments/${s.name}"): _*).filter(pred)
+        IndexFiles.readParquet(spark, pathsOf(segs.take(1)): _*).limit(0).filter(pred)
+      else IndexFiles.readParquet(spark, pathsOf(candidates): _*).filter(pred)
     }
   }
 
@@ -339,7 +347,7 @@ object VersionedStore {
   }
 
   // Write each table's segment straight from its plan — ONE evaluation,
-  // no checkpoint — then stamp it FROM THE STORED FILES: a second
+  // no checkpoint — then stamp it FROM THE STORED FILES' FOOTERS: a second
   // evaluation of a non-deterministic batch plan could produce stats the
   // stored rows don't satisfy (pruning would then silently drop matching
   // rows, the worst failure shape here), and emptiness is simply the row
@@ -386,33 +394,16 @@ object VersionedStore {
     }
   }
 
-  /** Statistics of a stored segment, from its bytes: exact row count
-    * (row-group metadata) + min/max per integral column (columnar scan).
-    * The one stats producer — writes, restamps, AND the auditor's
+  /** Statistics of a stored segment, from its files' parquet footers:
+    * the row count and each integral column's min/max, folded over the
+    * row groups ([[IndexFiles.footerStats]]) on the driver, with no Spark
+    * job. The one stats producer — writes, restamps, AND the auditor's
     * recomputation ([[IndexFsck.checkVersionedStore]]) share it, so the
-    * stamp and the recomputation can never disagree by construction.
-    * Column references are backtick-quoted: a dotted column name would
-    * otherwise parse as nested-field access and fail the write. */
+    * stamp and the recomputation can never disagree by construction. */
   private[operators] def statsOf(spark: SparkSession, dir: String,
                                  name: String): SegMeta = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val stored = spark.read.parquet(s"$dir/_segments/$name")
-    val statCols = stored.schema.fields.collect {
-      case f if Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType) =>
-        f.name
-    }.toSeq
-    val aggs = count(lit(1)).cast("long").as("__rows") +: statCols.flatMap(c =>
-      Seq(min(col(s"`$c`")).cast("long").as(s"__mn_$c"),
-        max(col(s"`$c`")).cast("long").as(s"__mx_$c")))
-    val row = stored.agg(aggs.head, aggs.tail: _*).collect().head
-    val mins = statCols.zipWithIndex.flatMap { case (c, i) =>
-      if (row.isNullAt(1 + 2 * i)) None else Some(c -> row.getLong(1 + 2 * i))
-    }.toMap
-    val maxs = statCols.zipWithIndex.flatMap { case (c, i) =>
-      if (row.isNullAt(2 + 2 * i)) None else Some(c -> row.getLong(2 + 2 * i))
-    }.toMap
-    SegMeta(name, row.getLong(0), mins, maxs)
+    val s = IndexFiles.footerStats(spark, s"$dir/_segments/$name")
+    SegMeta(name, s.rows, s.min, s.max)
   }
 
   /** Re-stamp the latest version's statistics from the stored bytes —
@@ -421,7 +412,7 @@ object VersionedStore {
     * Manifests are immutable, so the fix is a NEW version carrying the
     * SAME segment files with recomputed stats, not an edit; older
     * versions keep their (possibly wrong) stamps until vacuumed. Costs
-    * one store scan, same as the check. */
+    * one footer read per stored file, same as the check. */
   def restampStats(spark: SparkSession, dir: String,
                    note: String = "restamp stats"): Long =
     IndexFiles.withWriteLease(spark, dir, "VersionedStore.restampStats") {
@@ -490,10 +481,10 @@ object VersionedStore {
       val cur = snap.manifest
       batches.foreach { case (n, df) =>
         if (cur.tables.contains(n)) {
-          def shape(s: org.apache.spark.sql.types.StructType) =
-            s.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-          val stored = shape(snap.table(n).schema)
-          val batch = shape(df.schema)
+          def shape(s: StructType, t: DataType => DataType) =
+            s.fields.map(f => (f.name, t(f.dataType))).sortBy(_._1).toSeq
+          val stored = shape(snap.schema(n), nullable)
+          val batch = shape(df.schema, identity)
           require(stored == batch,
             s"VersionedStore.append: batch schema for table '$n' disagrees " +
               s"with the stored segments — stored ${stored.mkString(", ")}; " +
@@ -515,6 +506,18 @@ object VersionedStore {
         commit(spark, dir, Manifest(cur.version + 1, cur.version, note, tables, tag))
       }
     }
+
+  // a parquet read types every nested field nullable, so the stored shape
+  // an append is checked against is the footer schema made nullable —
+  // what Spark's own `asNullable` (not public) does to the read schema
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Idempotent [[append]] for at-least-once delivery: `tag` names the
     * batch (it becomes the version's note), and a tag some un-vacuumed
@@ -597,7 +600,7 @@ object VersionedStore {
     val added = newer.filterNot(s => older.contains(s.name))
     if (added.isEmpty)
       snapshot(spark, dir, Some(to)).table(table).limit(0)
-    else spark.read.parquet(added.map(s => s"$dir/_segments/${s.name}"): _*)
+    else IndexFiles.readParquet(spark, added.map(s => s"$dir/_segments/${s.name}"): _*)
   }
 
   /** Reclaim space: keep the newest `keepLast` manifests, delete the
@@ -608,7 +611,8 @@ object VersionedStore {
     * live writer can be mid-append (its not-yet-committed segment would
     * look like an orphan) while the lease is held here. Time travel to a
     * vacuumed version fails loudly with the remaining range. Returns
-    * (segments deleted, manifests deleted). */
+    * (segments deleted, manifests deleted), the manifests counting both
+    * dropped versions and the `.tmp-` manifests of crashed commits. */
   def vacuum(spark: SparkSession, dir: String, keepLast: Int = 2): (Int, Int) = {
     require(keepLast >= 1, "VersionedStore.vacuum: keepLast must be >= 1")
     IndexFiles.withWriteLease(spark, dir, "VersionedStore.vacuum") {
@@ -638,7 +642,7 @@ object VersionedStore {
       val deadTmps = f.listStatus(manifestsPath(dir)).toSeq
         .map(_.getPath).filter(_.getName.startsWith(".tmp-"))
       deadTmps.foreach(p => f.delete(p, false))
-      (deadSegs.size, drop.size)
+      (deadSegs.size, drop.size + deadTmps.size)
     }
   }
 }

@@ -3385,7 +3385,7 @@ object OperatorQueries {
            |  UNION ALL SELECT 'bm25', 'live_doclens_rows', (SELECT n FROM d200)
            |  UNION ALL SELECT 'bm25', 'live_posting_rows',
            |    (SELECT COUNT(*) FROM (SELECT DISTINCT term, doc_id FROM pslice))
-           |  UNION ALL SELECT 'bm25', 'vacuumed_manifests', 0
+           |  UNION ALL SELECT 'bm25', 'vacuumed_manifests', 1
            |  UNION ALL SELECT 'bm25', 'vacuumed_segments', 1
            |  UNION ALL SELECT 'cluster', 'fsck_dangling_keepers', 0
            |  UNION ALL SELECT 'cluster', 'fsck_duplicate_doc_rows', 0
