@@ -14,139 +14,99 @@ import org.apache.spark.sql.functions._
   * `/root/reference/tajo-core/src/main/java/org/apache/tajo/engine/query/`);
   * this is that idea made INCREMENTAL, LSM-style, in Spark.
   *
-  * Stored layout under `dir/`:
+  * Stored layout: `dir/` is a [[VersionedStore]] with two tables:
   *   - `state` — one row per (group, __batch): the group columns, `__batch`
   *     (which fold produced the row), `cnt`, and per value column
-  *     `sum_<v>` (DECIMAL(38,6) — exact, order-independent, so recomputing
-  *     a batch's partials yields BIT-IDENTICAL rows every time; the
-  *     foundation of the replay story below), `min_<v>`, `max_<v>`.
-  *   - `_meta.json` — group/value column lists; every fold and read
-  *     validates against it and fails loudly on mismatch (folding under a
-  *     different grouping would silently corrupt every merged result).
-  *   - `_tags.json` — the append-only list of every batch tag ever folded.
-  *     Survives compaction, which is exactly its job: see the replay
-  *     contract.
+  *     `sum_<v>` (DECIMAL(38,6) — exact and order-independent), `min_<v>`,
+  *     `max_<v>`. Its footer schema names every group and value column, so
+  *     each entry point checks the caller's columns against it (folding or
+  *     reading under a different grouping would silently corrupt every
+  *     merged result).
+  *   - `tags` — one row per batch tag ever folded, with its status:
+  *     `folded` (rows present, retractable), `sealed` (rows merged by a
+  *     compaction) or `retracted` (rows dropped). The reserved `__base`
+  *     row names the base build and keeps the table non-empty, which the
+  *     store requires.
   *
-  * EXACTNESS UNDER AT-LEAST-ONCE DELIVERY — the design's core claim, each
-  * leg spec-pinned:
-  *   1. A fold writes its partial rows FIRST, then appends its tag to
-  *      `_tags.json`. A replay of a COMMITTED fold (tag present) is a
-  *      no-op before any write.
-  *   2. A retry of the torn state (rows landed, tag did not) re-appends
-  *      the same rows — and because partials are deterministic (DECIMAL
-  *      sums, min/max, count), the duplicates are bit-identical, and the
-  *      read-side dropDuplicates on (group, __batch) collapses them
-  *      EXACTLY.
-  *   3. Compaction merges all delta rows into one row per group under the
-  *      reserved `__compacted` tag — after which dropDuplicates could no
-  *      longer catch a replay of a pre-compaction fold (its tag rows are
-  *      gone). That replay is instead blocked by leg 1: `_tags.json` is
-  *      never pruned, so the tag is still present — and compaction first
-  *      ADOPTS any orphan tags it finds (rows landed, tag never
-  *      committed) so even a torn fold merged away cannot double-count on
-  *      a late retry. This is why user tags must not start with `__`.
-  *      The tags file grows one short string per fold forever — at one
-  *      fold a minute that is ~5 MB/decade, the deliberate price of a
-  *      compaction-proof replay guard.
+  * EXACTNESS UNDER AT-LEAST-ONCE DELIVERY: every mutation is ONE store
+  * commit, and a fold commits its rows and its tag in the same version, so
+  * a batch's rows never exist without its tag. A fold whose tag is already
+  * in `tags`, in any status, is a no-op that writes nothing — including
+  * the replay of a fold whose rows a compaction merged away or a
+  * retraction dropped, because `tags` survives both. A fold that crashed
+  * before its commit left only an invisible orphan segment (reclaimed by
+  * [[IndexRepair.repairAggState]]), so its retry is simply the fold. The
+  * tags table grows one short row per fold forever — at one fold a minute
+  * that is a few MB a decade, the price of a compaction-proof replay
+  * guard; a compaction rewrites it to one segment.
   *
-  * Scale: a fold is one batch-sized partial aggregation + one parquet
-  * append — the fact table is NEVER rescanned. A read merges
-  * (groups x folds-since-compaction) rows; compaction (index-sized staged
-  * swap, [[IndexFiles]] crash recovery at read, LSM non-concurrency
-  * contract) bounds that factor back to 1. The measure algebra is closed
-  * under merge, so reads at ANY moment are exact over every committed
-  * fold. avg derives as sum/cnt at read; count-distinct is NOT in the
-  * algebra (not mergeable exactly — use the HLL sketch operators for an
-  * approximate mergeable spelling). A DECIMAL(38,6) sum holds
-  * magnitudes to 10^32 — far past any physical measure at 100 TB — but
-  * note Spark's default non-ANSI behavior on a genuine overflow is a
-  * NULL sum, not an error; enable `spark.sql.ansi.enabled` in
-  * deployments whose measures could plausibly approach the bound. */
+  * Scale: a fold is one batch-sized partial aggregation + one two-table
+  * append — the fact table is NEVER rescanned, and the tag lookup reads
+  * `tags` on the driver with no Spark job. A read merges
+  * (groups x folds-since-compaction) rows; compaction bounds that factor
+  * back to 1. The measure algebra is closed under merge, so reads at ANY
+  * version are exact over every committed fold. avg derives as sum/cnt at
+  * read; count-distinct is NOT in the algebra (not mergeable exactly — use
+  * the HLL sketch operators for an approximate mergeable spelling). A
+  * DECIMAL(38,6) sum holds magnitudes to 10^32 — far past any physical
+  * measure at 100 TB — but note Spark's default non-ANSI behavior on a
+  * genuine overflow is a NULL sum, not an error; enable
+  * `spark.sql.ansi.enabled` in deployments whose measures could plausibly
+  * approach the bound. Writers are single-writer under the store's lease,
+  * like every family. */
 object AggState {
 
   /** The reserved tag compaction rewrites merged rows under. */
   val CompactedTag = "__compacted"
 
-  // bracket marker for writeAggState's rebuild-in-place: the build writes
-  // five artifacts (meta, three sidecars, the state table) that are only
-  // consistent as a SET — a crash midway would otherwise leave the OLD
-  // incarnation's state table served under the NEW incarnation's fresh
-  // sidecars, a silent mixed-incarnation read no single-file recovery can
-  // detect. The marker turns that window into a loud error at every entry
-  // point until writeAggState is re-run.
-  private val RebuildMarker = "_rebuild_intent"
+  // the reserved tag of the base build's rows and its `tags` row
+  private val BaseTag = "__base"
 
-  // private[operators]: the consistency checker ([[IndexFsck]]) must
-  // refuse the same mixed-incarnation state every entry point here does
-  private[operators] def requireNoTornRebuild(spark: SparkSession, dir: String,
-                                              what: String): Unit =
-    require(!IndexFiles.markerExists(spark, dir, RebuildMarker),
-      s"$what: torn writeAggState rebuild at $dir (its $RebuildMarker marker " +
-        "survived a crash) — the state table and sidecars may be from " +
-        "different incarnations; re-run writeAggState, or build into a " +
-        "fresh directory")
+  // the statuses of a `tags` row
+  private val Folded = "folded"
+  private val Sealed = "sealed"
+  private val Retracted = "retracted"
 
-  final case class AggStateMeta(groupCols: Seq[String], valueCols: Seq[String])
+  private def tagRow(spark: SparkSession, tag: String): DataFrame =
+    spark.createDataFrame(Seq((tag, Folded))).toDF("tag", "status")
 
-  object AggStateMeta {
-    private def arr(xs: Seq[String]) =
-      xs.map(x => "\"" + x + "\"").mkString("[", ",", "]")
-    def write(spark: SparkSession, dir: String, m: AggStateMeta): Unit =
-      IndexFiles.writeFileSwap(spark, dir, "_meta.json",
-        s"""{"groupCols":${arr(m.groupCols)},"valueCols":${arr(m.valueCols)}}"""
-          .getBytes("UTF-8"))
-    def read(spark: SparkSession, dir: String): Option[AggStateMeta] =
-      IndexFiles.readFileWithRecovery(spark, dir, "_meta.json").map { bytes =>
-        val j = org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8"))
-        def strs(name: String): Seq[String] = (j \ name) match {
-          case org.json4s.JArray(vs) => vs.map {
-            case org.json4s.JString(s) => s
-            case other => throw new IllegalArgumentException(
-              s"malformed AggState meta at $dir/_meta.json: $name entry $other")
-          }
-          case other => throw new IllegalArgumentException(
-            s"malformed AggState meta at $dir/_meta.json: field $name = $other")
-        }
-        AggStateMeta(strs("groupCols"), strs("valueCols"))
-      }
+  private def requireUserTag(what: String, tag: String): Unit = {
+    require(tag.nonEmpty, s"$what: empty batch tag")
+    require(!tag.startsWith("__"), s"$what: tag '$tag' uses the reserved __ prefix")
   }
 
-  private def requireMeta(spark: SparkSession, dir: String,
-                          groupCols: Seq[String], valueCols: Seq[String]): Unit =
-    AggStateMeta.read(spark, dir).foreach { m =>
-      val passed = AggStateMeta(groupCols, valueCols)
-      require(m == passed,
-        s"AggState column mismatch: stored $m, passed $passed — folding or " +
-          "reading under different group/value columns silently corrupts " +
-          "every merged result; use the stored values")
-    }
+  // the `state` columns `partials` writes for these group/value columns
+  private def stateColumns(groupCols: Seq[String], valueCols: Seq[String]): Seq[String] =
+    (groupCols :+ "cnt") ++
+      valueCols.flatMap(v => Seq(s"sum_$v", s"min_$v", s"max_$v")) :+ "__batch"
 
-  /** The folded-tags sidecar: one JSON array, append-only, compaction-proof.
-    * A silently-dropped committed tag would let its fold replay past the
-    * contains() check, so the shared parser throws on any malformed entry. */
-  private def readTags(spark: SparkSession, dir: String): Seq[String] =
-    readStringList(spark, dir, "_tags.json")
+  /** The latest version, after checking the caller's columns against the
+    * footer schema of `state` (no job). Throws on a directory that holds
+    * no store — a torn first build or a typo'd path must not bootstrap a
+    * state missing its base. */
+  private def current(spark: SparkSession, dir: String, groupCols: Seq[String],
+                      valueCols: Seq[String], what: String): VersionedStore.Snapshot = {
+    val snap = VersionedStore.snapshot(spark, dir)
+    val stored = snap.schema("state").fieldNames.toSeq
+    val passed = stateColumns(groupCols, valueCols)
+    require(stored == passed,
+      s"$what: AggState column mismatch at $dir: stored state columns " +
+        s"${stored.mkString(", ")}; passed ${passed.mkString(", ")} — folding " +
+        "or reading under different group/value columns silently corrupts " +
+        "every merged result; use the stored values")
+    snap
+  }
 
-  private def writeTags(spark: SparkSession, dir: String,
-                        tags: Seq[String]): Unit =
-    writeStringList(spark, dir, "_tags.json", tags)
+  // the tag's status, read on the driver: the lookup is on every fold's
+  // path, where a Spark job would cost several times the read
+  private def statusOf(snap: VersionedStore.Snapshot, tag: String): Option[String] =
+    snap.driverRows("tags", "tag", "status").collectFirst { case Seq(`tag`, s) => s }
 
-  // read-only sidecar views for the consistency checker ([[IndexFsck]])
-  private[operators] def committedTags(spark: SparkSession,
-                                       dir: String): Seq[String] =
-    readTags(spark, dir)
-
-  private[operators] def retractedTags(spark: SparkSession,
-                                       dir: String): Seq[String] =
-    readStringList(spark, dir, "_retracted.json")
-
-  // tags and column names are embedded in hand-built JSON sidecars:
-  // restrict them to identifier characters so the files can never be
-  // rendered malformed (a broken _tags.json bricks every later fold)
-  private def requireJsonSafe(what: String, s: String): Unit =
-    require(s.nonEmpty && s.forall(c =>
-        c.isLetterOrDigit || c == '_' || c == '-' || c == '.'),
-      s"$what '$s' must be non-empty and use only [A-Za-z0-9_.-]")
+  // a build, compaction or retraction supersedes every stored segment;
+  // reclaim them right away, as a rebuild in place always has (a handle
+  // read before the commit must be re-read)
+  private def reclaim(spark: SparkSession, dir: String): Unit =
+    VersionedStore.vacuum(spark, dir, keepLast = 1)
 
   /** Deterministic per-batch partials: the one aggregation spelling shared
     * by the base build, every fold, and the read-side merge's oracle —
@@ -163,167 +123,91 @@ object AggState {
   }
 
   /** Build AND persist the aggregate state from the base table — one scan,
-    * one group-sized write, the `__base` tag. Stamps `_meta.json` FIRST
-    * (same crash discipline as the BM25 index: a torn build must fail
-    * loudly on the missing state path, not read as a validation-bypassing
-    * legacy directory).
-    *
-    * The whole build — meta, the three sidecars, the state overwrite — is
-    * bracketed by a `_rebuild_intent` marker: a rebuild-in-place that
-    * crashes after resetting the sidecars but before the state overwrite
-    * would otherwise serve the PREVIOUS incarnation's folds under fresh
-    * sidecars with no loud signal (the first-build path fails on the
-    * missing state table; the rebuild path has no missing file to trip
-    * on). Every other entry point refuses a directory whose marker
-    * survived; re-running writeAggState clears it. */
+    * one group-sized write under the `__base` tag — as version 1 of a
+    * fresh store, or, into a directory that already holds one, as ONE
+    * rewrite of both tables (a rebuild in place: the new incarnation's
+    * tags start over, so the previous one's seals and retractions cannot
+    * leak into it). An empty base is refused (the store refuses an empty
+    * table). */
   def writeAggState(df: DataFrame, dir: String, groupCols: Seq[String],
                     valueCols: Seq[String]): DataFrame = {
     require(groupCols.nonEmpty && valueCols.nonEmpty,
       "writeAggState: need at least one group column and one value column")
-    (groupCols ++ valueCols).foreach(requireJsonSafe("writeAggState: column", _))
     val spark = df.sparkSession
+    val tables = Map(
+      "state" -> partials(df, groupCols, valueCols, BaseTag),
+      "tags" -> tagRow(spark, BaseTag))
     IndexFiles.withWriteLease(spark, dir, "writeAggState") {
-      IndexFiles.createMarker(spark, dir, RebuildMarker)
-      AggStateMeta.write(spark, dir, AggStateMeta(groupCols, valueCols))
-      writeTags(spark, dir, Seq("__base"))
-      // a rebuild-in-place starts a NEW incarnation: stale seal/retraction
-      // sidecars from the previous one would make a fresh tag spuriously
-      // throw "sealed" or turn its retraction into a vacuous no-op
-      writeStringList(spark, dir, "_sealed.json", Seq.empty)
-      writeStringList(spark, dir, "_retracted.json", Seq.empty)
-      partials(df, groupCols, valueCols, "__base")
-        .write.mode("overwrite").parquet(s"$dir/state")
-      IndexFiles.deleteMarker(spark, dir, RebuildMarker)
+      if (VersionedStore.versionNumbers(spark, dir).isEmpty)
+        VersionedStore.create(spark, dir, tables, note = "writeAggState")
+      else VersionedStore.rewrite(spark, dir, note = "writeAggState")(_ => tables)
+      reclaim(spark, dir)
     }
     readAggState(spark, dir, groupCols, valueCols)
   }
 
   /** Fold one ingest batch into the stored state: one BATCH-SIZED partial
-    * aggregation appended as delta rows, then the tag commit — the fact
-    * table is never rescanned. `batchTag` names the batch for the replay
-    * contract (see the object scaladoc): a committed fold re-run under the
-    * same tag is a no-op; a torn retry lands bit-identical duplicate rows
-    * that the read collapses. Tags must be unique per logical batch, use
-    * only identifier characters, and must not start with `__` (reserved).
-    *
-    * Fails loudly when `dir/state` does not exist (a torn build, an
-    * interrupted-and-unrecovered swap already handled below, or a typo'd
-    * path): a parquet append would CREATE the directory and silently
-    * bootstrap a state missing the entire base. */
+    * aggregation appended together with the batch's `tags` row, in one
+    * commit — the fact table is never rescanned. `batchTag` names the
+    * batch for the replay contract (see the object scaladoc): a tag
+    * already in `tags` makes the call a no-op that writes nothing. Tags
+    * must be unique per logical batch and must not start with `__`
+    * (reserved). */
   def foldAggState(batch: DataFrame, dir: String, batchTag: String,
                    groupCols: Seq[String], valueCols: Seq[String]): Unit = {
-    require(!batchTag.startsWith("__"),
-      s"foldAggState: tag '$batchTag' uses the reserved __ prefix")
-    requireJsonSafe("foldAggState: tag", batchTag)
+    requireUserTag("foldAggState", batchTag)
     val spark = batch.sparkSession
-    requireNoTornRebuild(spark, dir, "foldAggState")
-    requireMeta(spark, dir, groupCols, valueCols)
+    // ONE lease from the tag lookup through the commit: two racing folds
+    // of the same batch could otherwise both miss the tag and double-count
     IndexFiles.withWriteLease(spark, dir, "foldAggState") {
-      // a compaction swap that crashed between its renames left no live
-      // state directory — recover it BEFORE the existence check and append,
-      // or this fold's parquet append would create a fresh table containing
-      // only this batch and the recovery rename could never run again
-      IndexFiles.recoverInterruptedSwap(spark, dir, "state", "foldAggState")
-      val statePath = new org.apache.hadoop.fs.Path(s"$dir/state")
-      require(IndexFiles.fs(spark, statePath).exists(statePath),
-        s"foldAggState: no state table at $dir/state — run writeAggState " +
-          "first (a torn build or wrong path must not silently bootstrap " +
-          "a state missing its base)")
-      val tags = readTags(spark, dir)
-      if (!tags.contains(batchTag)) { // committed replay = no-op
-        partials(batch, groupCols, valueCols, batchTag)
-          .write.mode("append").parquet(s"$dir/state")
-        writeTags(spark, dir, tags :+ batchTag)
-      }
+      val snap = current(spark, dir, groupCols, valueCols, "foldAggState")
+      if (statusOf(snap, batchTag).isEmpty)
+        VersionedStore.append(spark, dir, Map(
+          "state" -> partials(batch, groupCols, valueCols, batchTag),
+          "tags" -> tagRow(spark, batchTag)), note = s"foldAggState $batchTag")
     }
   }
 
-  /** Merge the delta rows into the current exact aggregate: collapse
-    * torn-retry duplicates on (group, __batch), then merge the mergeable
-    * measures. `sum_<v>` is exposed as DOUBLE (the exact DECIMAL total
-    * cast once at the edge — the house determinism idiom); `avg_<v>`
-    * derives from it. Cost: (groups x folds-since-compaction) rows. */
+  /** Merge the delta rows into the current exact aggregate. `sum_<v>` is
+    * exposed as DOUBLE (the exact DECIMAL total cast once at the edge —
+    * the house determinism idiom); `avg_<v>` derives from it. Cost:
+    * (groups x folds-since-compaction) rows. */
   def readAggState(spark: SparkSession, dir: String, groupCols: Seq[String],
                    valueCols: Seq[String]): DataFrame = {
-    requireNoTornRebuild(spark, dir, "readAggState")
-    requireMeta(spark, dir, groupCols, valueCols)
-    IndexFiles.recoverInterruptedSwap(spark, dir, "state", "readAggState")
     val measures = sum(col("cnt")).cast("bigint").as("cnt") +:
       valueCols.flatMap(v => Seq(
         sum(col(s"sum_$v")).cast("decimal(38,6)").cast("double").as(s"sum_$v"),
         min(col(s"min_$v")).as(s"min_$v"),
         max(col(s"max_$v")).as(s"max_$v")))
-    IndexFiles.readParquet(spark, s"$dir/state")
-      .dropDuplicates(groupCols :+ "__batch")
+    current(spark, dir, groupCols, valueCols, "readAggState").table("state")
       .groupBy(groupCols.map(col): _*)
       .agg(measures.head, measures.tail: _*)
   }
 
   /** Compact the delta rows to ONE row per group under the reserved
-    * `__compacted` tag — the read-side merge factor returns to 1. The
-    * staged swap carries the usual [[IndexFiles]] crash recovery and LSM
-    * non-concurrency contract; `_meta.json` and `_tags.json` are siblings
-    * the swap never touches — the tags list in particular MUST survive,
-    * it is what blocks a pre-compaction fold from replaying into a state
-    * that no longer holds its rows.
-    *
-    * ORPHAN ADOPTION, before the swap: delta rows whose tag never
-    * committed (a torn fold that was never retried) are about to be
-    * merged into `__compacted`, after which neither the (group, __batch)
-    * dedupe nor the tag check could stop that fold's retry from
-    * double-counting. So compaction first commits those orphan tags —
-    * adopting the fold as happened — and only then merges. Crash-safe in
-    * that order: tags committed but swap not run leaves the rows in
-    * place, counted once, with the retry now a no-op. */
+    * `__compacted` tag — the read-side merge factor returns to 1 — and
+    * SEAL every folded tag: its rows are merged, so it can no longer be
+    * individually retracted, and its `tags` row still blocks its replay.
+    * One rewrite of both tables, then the superseded segments are
+    * reclaimed. */
   def compactAggState(spark: SparkSession, dir: String, groupCols: Seq[String],
                       valueCols: Seq[String]): DataFrame = {
-    requireNoTornRebuild(spark, dir, "compactAggState")
-    requireMeta(spark, dir, groupCols, valueCols)
-    // ONE lease from the sidecar reads through the swap: the tag/seal/
-    // retraction sidecars are read-modify-written here, and a concurrent
-    // fold or retraction interleaving between those writes and the swap
-    // would clobber sidecar state the crash contracts depend on
-    IndexFiles.withWriteLease(spark, dir, "compactAggState") {
-    IndexFiles.recoverInterruptedSwap(spark, dir, "state", "compactAggState")
-    val tags = readTags(spark, dir)
-    val orphans = IndexFiles.readParquet(spark, s"$dir/state")
-      .select("__batch").distinct().collect().map(_.getString(0))
-      .filter(t => !t.startsWith("__") && !tags.contains(t)).sorted
-    val allTags = tags ++ orphans
-    if (orphans.nonEmpty) {
-      OpLog.warn("agg.orphan_adopted", s"compactAggState: adopting ${orphans.length} " +
-        s"torn-fold tag(s) before merging: ${orphans.mkString(", ")}")
-      writeTags(spark, dir, allTags)
-    }
-    // FINISH pending retractions before merging: a retraction that crashed
-    // between its _retracted.json write and its swap left the tag's rows
-    // in place — merging them into __compacted would make the retraction
-    // unrecoverable while its sidecar claims it happened
-    val retractedTags = readStringList(spark, dir, "_retracted.json")
-    // SEAL before the swap: every non-reserved committed tag is about to
-    // lose its per-batch rows to the merge, after which a retraction could
-    // only silently remove nothing. Seal-then-swap is the safe crash
-    // order — a crash between them refuses a retraction that would still
-    // have been possible (conservative; re-run the compaction), where the
-    // reverse order would let a retraction of already-merged rows report
-    // success while removing nothing.
-    val sealedNow = readStringList(spark, dir, "_sealed.json")
-    val toSeal = allTags.filterNot(_.startsWith("__"))
-      .filterNot(sealedNow.contains).sorted
-    if (toSeal.nonEmpty)
-      writeStringList(spark, dir, "_sealed.json", sealedNow ++ toSeal)
     val mergeMeasures = sum(col("cnt")).cast("bigint").as("cnt") +:
       valueCols.flatMap(v => Seq(
         sum(col(s"sum_$v")).cast("decimal(38,6)").as(s"sum_$v"),
         min(col(s"min_$v")).as(s"min_$v"),
         max(col(s"max_$v")).as(s"max_$v")))
-    IndexFiles.stagedSwap(spark, dir, "state")(df =>
-      (if (retractedTags.isEmpty) df
-       else df.filter(!col("__batch").isin(retractedTags: _*)))
-        .dropDuplicates(groupCols :+ "__batch")
-        .groupBy(groupCols.map(col): _*)
-        .agg(mergeMeasures.head, mergeMeasures.tail: _*)
-        .withColumn("__batch", lit(CompactedTag)))
+    IndexFiles.withWriteLease(spark, dir, "compactAggState") {
+      current(spark, dir, groupCols, valueCols, "compactAggState")
+      VersionedStore.rewrite(spark, dir, note = "compactAggState") { cur =>
+        Map(
+          "state" -> cur("state").groupBy(groupCols.map(col): _*)
+            .agg(mergeMeasures.head, mergeMeasures.tail: _*)
+            .withColumn("__batch", lit(CompactedTag)),
+          "tags" -> cur("tags").withColumn("status",
+            when(col("status") === Folded, lit(Sealed)).otherwise(col("status"))))
+      }
+      reclaim(spark, dir)
     }
     readAggState(spark, dir, groupCols, valueCols)
   }
@@ -331,92 +215,43 @@ object AggState {
   /** Retract a folded batch — the late-arriving-correction path, THE
     * classic pain of incremental aggregates. Because every fold's delta
     * rows are retained verbatim until compaction, retraction is simply
-    * dropping the tag's rows (a staged swap of the state table), and it is
-    * EXACT for every measure — min/max included, which no
-    * negative-compensation scheme can retract (a count can go down; a max
-    * cannot un-happen without the surviving candidates, which the
-    * remaining per-batch rows ARE). The retracted tag STAYS in
-    * `_tags.json`, so a replay of the original fold cannot resurrect the
-    * data; fold the corrected batch under a NEW tag.
+    * dropping the tag's rows, and it is EXACT for every measure — min/max
+    * included, which no negative-compensation scheme can retract (a count
+    * can go down; a max cannot un-happen without the surviving
+    * candidates, which the remaining per-batch rows ARE). One rewrite
+    * drops the rows and marks the tag `retracted`, so a replay of the
+    * original fold cannot resurrect the data; fold the corrected batch
+    * under a NEW tag.
     *
-    * Boundary, enforced loudly: compaction SEALS batches (their rows merge
-    * into `__compacted` and individual retraction becomes impossible) —
-    * retracting a sealed tag throws. Schedule compaction at the
-    * correction horizon: batches old enough to compact are batches you
-    * have promised not to retract, the same contract as any LSM seal. A
-    * torn fold (rows landed, tag never committed) is adopted-then-
-    * retracted, so the call works uniformly; a tag that neither was
-    * committed nor has rows is a TYPO and throws (silently committing it
-    * would block the real batch's future fold forever). Re-retracting is
-    * an idempotent completion: the intent lands in `_retracted.json`
-    * BEFORE the swap, and both the retry and the next compaction finish a
-    * swap that crashed after the intent — so at every point the sidecar
-    * claims only retractions that are done or will be completed by
-    * whichever maintenance action runs next. Not concurrent-safe with
-    * folds/compaction (the standard quiesce contract). */
+    * By the tag's status: `retracted` is a no-op (retrying a retraction
+    * is safe); `sealed` throws — compaction merged its rows, so schedule
+    * compaction at the correction horizon (batches old enough to compact
+    * are batches you have promised not to retract, the same contract as
+    * any LSM seal); a tag never folded throws as an unknown batch (a
+    * typo must fail loudly, and a fold that crashed before its commit is
+    * not folded). */
   def retractAggState(spark: SparkSession, dir: String, batchTag: String,
                       groupCols: Seq[String], valueCols: Seq[String]): DataFrame = {
-    require(!batchTag.startsWith("__"),
-      s"retractAggState: tag '$batchTag' uses the reserved __ prefix")
-    requireJsonSafe("retractAggState: tag", batchTag)
-    requireNoTornRebuild(spark, dir, "retractAggState")
-    requireMeta(spark, dir, groupCols, valueCols)
-    // ONE lease from the sidecar reads through the swap (see
-    // compactAggState's note): two racing retractions would otherwise
-    // read _retracted.json as the same base list and the second write
-    // would clobber the first tag's intent
+    requireUserTag("retractAggState", batchTag)
     IndexFiles.withWriteLease(spark, dir, "retractAggState") {
-    IndexFiles.recoverInterruptedSwap(spark, dir, "state", "retractAggState")
-    val retracted = readStringList(spark, dir, "_retracted.json")
-    val hasRows = !IndexFiles.readParquet(spark, s"$dir/state")
-      .filter(col("__batch") === batchTag).isEmpty
-    if (retracted.contains(batchTag)) {
-      // already retracted — but a crash between the intent write and the
-      // swap leaves the rows in place: completion semantics, not a blind
-      // no-op (a blind no-op would leave the data counted while the
-      // sidecar claims it gone)
-      if (hasRows) IndexFiles.stagedSwap(spark, dir, "state")(
-        _.filter(col("__batch") =!= batchTag))
-    } else {
-      require(!readStringList(spark, dir, "_sealed.json").contains(batchTag),
+      val status = statusOf(current(spark, dir, groupCols, valueCols,
+        "retractAggState"), batchTag)
+      require(status.nonEmpty,
+        s"retractAggState: unknown batch '$batchTag' — never folded into $dir")
+      require(!status.contains(Sealed),
         s"retractAggState: batch '$batchTag' was sealed by a compaction — " +
           "its rows are merged and cannot be individually retracted; " +
           "compact only past the correction horizon")
-      val tags = readTags(spark, dir)
-      require(tags.contains(batchTag) || hasRows,
-        s"retractAggState: unknown batch '$batchTag' — neither committed nor " +
-          "any delta rows; committing a typo'd tag would silently block the " +
-          "real batch's future fold")
-      // adopt a torn fold so the retraction ALSO blocks its late replay
-      if (!tags.contains(batchTag)) writeTags(spark, dir, tags :+ batchTag)
-      // intent BEFORE the swap: if the swap crashes, the retry above and the
-      // next compaction both finish it; the reverse order let a compaction
-      // seal-and-merge the rows of a retraction that had already succeeded,
-      // turning its documented idempotent retry into a spurious throw
-      writeStringList(spark, dir, "_retracted.json", retracted :+ batchTag)
-      IndexFiles.stagedSwap(spark, dir, "state")(
-        _.filter(col("__batch") =!= batchTag))
-    }
+      if (status.contains(Folded)) {
+        VersionedStore.rewrite(spark, dir, note = s"retractAggState $batchTag") { cur =>
+          Map(
+            "state" -> cur("state").filter(col("__batch") =!= batchTag),
+            "tags" -> cur("tags").withColumn("status",
+              when(col("tag") === batchTag, lit(Retracted)).otherwise(col("status"))))
+        }
+        reclaim(spark, dir)
+      }
     }
     readAggState(spark, dir, groupCols, valueCols)
   }
-
-  private def readStringList(spark: SparkSession, dir: String,
-                             name: String): Seq[String] =
-    IndexFiles.readFileWithRecovery(spark, dir, name).map { bytes =>
-      org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8")) match {
-        case org.json4s.JArray(vs) => vs.map {
-          case org.json4s.JString(s) => s
-          case other => throw new IllegalArgumentException(
-            s"malformed AggState sidecar at $dir/$name: entry $other")
-        }
-        case other => throw new IllegalArgumentException(
-          s"malformed AggState sidecar at $dir/$name: $other")
-      }
-    }.getOrElse(Seq.empty)
-
-  private def writeStringList(spark: SparkSession, dir: String, name: String,
-                              xs: Seq[String]): Unit =
-    IndexFiles.writeFileSwap(spark, dir, name,
-      xs.map(t => "\"" + t + "\"").mkString("[", ",", "]").getBytes("UTF-8"))
 }

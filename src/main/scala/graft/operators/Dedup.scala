@@ -202,9 +202,9 @@ object Dedup {
       s"bands * rowsPerBand must equal k, got $bands * $rowsPerBand != $k")
     val spark = corpus.sparkSession
     IndexFiles.withWriteLease(spark, dir, "writeMinhashIndex") {
-      // rebuild bracket (same discipline as writeBm25Index/writeAggState):
-      // a crash between the two overwrites pairs new sigs with the old
-      // band table, and only the marker can detect the mixed build
+      // rebuild bracket: a crash between the two overwrites pairs new
+      // sigs with the old band table, and only the marker can detect the
+      // mixed build
       IndexFiles.createMarker(spark, dir, "_rebuild_intent")
       minhashSignature(corpus, idCol, textCol, k, shingleN)
         .write.mode("overwrite").parquet(s"$dir/sigs")

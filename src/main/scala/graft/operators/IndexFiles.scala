@@ -2,7 +2,9 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,8 +13,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 
 /** The ONE copy of the crash-sensitive filesystem protocol shared by every
   * persisted family still on the rename swap (the MinHash near-dup and
-  * cluster state, the residual IVF-PQ index, the aggregate state — the
-  * BM25 index lives on [[VersionedStore]]), plus the write lease and
+  * cluster state, the residual IVF-PQ index — the BM25 index and the
+  * aggregate state live on [[VersionedStore]]), plus the write lease and
   * sidecar IO every family uses: staged-and-swap table rewrites, read-side
   * recovery from an interrupted swap, small sidecar file IO. Six
   * hand-rolled copies of rename choreography is how object-store fixes
@@ -72,6 +74,30 @@ private[operators] object IndexFiles {
     }
   }
 
+  /** Driver reads of a file, kept by its path, length and modification
+    * time: a store segment is never written again, and a file that is
+    * gets a new key, so a hit is the file's current content. Commit paths
+    * read the same few files again and again — every append checks its
+    * schema against the first segment, every fold looks its tag up in the
+    * same ledger segments — and opening a footer costs several ms where
+    * the key costs a listing the caller makes anyway. LRU-bounded: a
+    * long-lived writer meets each new file once. */
+  private final class PerFile[V <: AnyRef](max: Int) {
+    private val m = new java.util.LinkedHashMap[(String, Long, Long), V](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long), V]): Boolean =
+        size > max
+    }
+    def apply(f: FileStatus)(load: => V): V = {
+      val k = (f.getPath.toString, f.getLen, f.getModificationTime)
+      m.synchronized(m.get(k)) match {
+        case null => val v = load; m.synchronized(m.put(k, v)); v
+        case v => v
+      }
+    }
+  }
+  private val schemaFooters = new PerFile[ParquetMetadata](4096)
+  private val smallTables = new PerFile[Vector[Group]](4096)
+
   // Spark's own footer-to-schema step, with the converter its inference
   // builds from the session's SQL conf, so the result is the schema a
   // plain read would infer from the same file
@@ -85,7 +111,7 @@ private[operators] object IndexFiles {
     * None when no path holds a data file. */
   def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
     paths.iterator.flatMap(p => dataFiles(spark, p).headOption).nextOption()
-      .map(f => sparkSchema(spark, footers(spark, Seq(f)).head))
+      .map(f => sparkSchema(spark, f -> schemaFooters(f)(footers(spark, Seq(f)).head._2)))
 
   /** `spark.read.parquet(paths)` with the schema passed from a footer: the
     * same DataFrame without the inference job. Paths with no data file
@@ -96,6 +122,23 @@ private[operators] object IndexFiles {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
+
+  /** The string columns `cols` of every row of the parquet at `paths`,
+    * read on the driver through parquet-hadoop's record reader — no Spark
+    * job, for ledger-sized tables (a handful of rows per commit) whose
+    * lookup sits on a commit path: a Spark job on a 3-row table costs
+    * several times the driver read. Rows are held in driver memory. */
+  def driverRows(spark: SparkSession, paths: Seq[String],
+                 cols: Seq[String]): Seq[Seq[String]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    paths.flatMap(dataFiles(spark, _)).flatMap { f =>
+      smallTables(f) {
+        val in = ParquetReader.builder(new GroupReadSupport(), f.getPath).withConf(conf).build()
+        try Iterator.continually(in.read()).takeWhile(_ != null).toVector
+        finally in.close()
+      }
+    }.map(g => cols.map(g.getString(_, 0)))
+  }
 
   final case class FooterStats(rows: Long, min: Map[String, Long],
                                max: Map[String, Long])

@@ -21,19 +21,10 @@ import org.apache.spark.sql.functions._
   * compacted 100 TB index costs an index scan, not a corpus scan.
   *
   * What `violations` means per check (0 = invariant holds):
-  *   - bm25 — the BM25 index is a [[VersionedStore]] (one commit per
-  *     build, append or compaction, so its two tables cannot disagree):
-  *     its checks are exactly the versioned ones below, reported under
-  *     the bm25 family name.
-  *   - agg_state/orphan_tag_rows — delta rows whose tag was never
-  *     committed to `_tags.json` (a torn fold awaiting retry or
-  *     compaction adoption).
-  *   - agg_state/duplicate_partials — surplus (group, tag) rows (a torn
-  *     retry; bit-identical by DECIMAL determinism, collapsed at read,
-  *     reclaimed by compaction).
-  *   - agg_state/retracted_rows_present — rows whose tag is recorded
-  *     retracted in `_retracted.json` (a retraction that crashed between
-  *     intent and swap; finished by its retry or the next compaction).
+  *   - bm25, agg_state — the BM25 index and the aggregate state are
+  *     [[VersionedStore]]s (one commit per mutation, so their two tables
+  *     cannot disagree): their checks are exactly the versioned ones
+  *     below, reported under the family name.
   *   - minhash/sig_band_id_mismatch — ids present in exactly one of the
   *     sigs/bands tables (a torn append: the two tables must cover the
   *     same documents or band candidates lose their verify rows — and
@@ -117,40 +108,10 @@ object IndexFsck {
   def checkBm25(spark: SparkSession, dir: String): DataFrame =
     checkVersionedStore(spark, dir).withColumn("family", lit("bm25"))
 
-  /** The three aggregate-state invariants; group columns come from the
-    * stored `_meta.json`, the committed/retracted tag sets from their
-    * sidecars. */
-  def checkAggState(spark: SparkSession, dir: String): DataFrame = {
-    // refuse the same mixed-incarnation state every AggState entry point
-    // refuses — an auditor that reads the NEW incarnation's fresh
-    // sidecars against the OLD incarnation's state table would report
-    // every old fold as orphaned, a silent misdiagnosis of the one state
-    // the marker exists to flag — and recover an interrupted compaction
-    // swap instead of throwing PATH_NOT_FOUND at the crashed state it
-    // exists to audit
-    AggState.requireNoTornRebuild(spark, dir, "IndexFsck.checkAggState")
-    IndexFiles.recoverInterruptedSwap(spark, dir, "state",
-      "IndexFsck.checkAggState")
-    val meta = AggState.AggStateMeta.read(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"IndexFsck.checkAggState: no _meta.json at $dir — not an " +
-          "aggregate-state directory (or a torn first build)"))
-    import spark.implicits._
-    // the tag sidecars grow one entry per fold FOREVER (the documented
-    // compaction-proof replay guard), so they join as tables — inlining
-    // them as isin() literals would hand the planner an unbounded
-    // expression tree on a long-lived state
-    val committed = AggState.committedTags(spark, dir).toDF("__batch")
-    val retracted = AggState.retractedTags(spark, dir).toDF("__batch")
-    val state = IndexFiles.readParquet(spark, s"$dir/state")
-    val orphan = state.filter(!col("__batch").startsWith("__"))
-      .join(committed, Seq("__batch"), "left_anti")
-    val retr = state.join(retracted, Seq("__batch"), "left_semi")
-    checkRow("agg_state", "orphan_tag_rows", orphan)
-      .unionAll(surplusRow("agg_state", "duplicate_partials",
-        state, meta.groupCols :+ "__batch"))
-      .unionAll(checkRow("agg_state", "retracted_rows_present", retr))
-  }
+  /** The aggregate state's invariants: [[checkVersionedStore]] over its
+    * store, under the agg_state family name. */
+  def checkAggState(spark: SparkSession, dir: String): DataFrame =
+    checkVersionedStore(spark, dir).withColumn("family", lit("agg_state"))
 
   /** The three keeper-map invariants, generic over ANY (doc_id, keeper)
     * assignment (plain table, partitioned layout, or an in-memory frame) —

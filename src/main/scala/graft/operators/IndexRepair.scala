@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * Two repair classes, stated per check:
   *   - HEALABLE from the stored state alone — duplicate rows collapse
-  *     (the crash-retried-append shape), uncommitted BM25 store writes
-  *     vacuum away, orphan agg tags adopt, pending retractions finish,
-  *     torn cluster relabels re-solve. These end repaired-and-complete.
+  *     (the crash-retried-append shape), uncommitted store writes (BM25,
+  *     aggregate state) vacuum away, torn cluster relabels re-solve.
+  *     These end repaired-and-complete.
   *   - DROP-AND-REAPPEND — a document/vector whose index rows are
   *     PARTIAL (a torn append: sigs without bands, three of m subspace
   *     rows, codes against a vanished cell). The missing half exists only
@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
   * re-read after the swap would count the post-repair state.
   *
   * What repair does NOT do: re-derive data from the corpus (re-append is
-  * the caller's move, with corpus access), un-retract a finished
-  * retraction, or recover a torn rebuild (`_rebuild_intent` survivors are
+  * the caller's move, with corpus access), retry a fold or append that
+  * crashed before its commit (its debris is vacuumed; the retry is the
+  * caller's), or recover a torn rebuild (`_rebuild_intent` survivors are
   * mixed-incarnation states only the original rebuild can finish — every
   * entry point here refuses them, same as the families' own reads). */
 object IndexRepair {
@@ -57,44 +58,31 @@ object IndexRepair {
       .agg(coalesce(sum(col("n") - 1), lit(0L)).as("s"))
       .collect().head.getLong(0)
 
-  // ---------------------------------------------------------------- BM25
+  // ------------------------------------------------- BM25 and agg state
 
-  /** Repair a persisted BM25 index: its store can only hold the crash
-    * debris of an uncommitted write (orphan segments, `.tmp-` manifests —
-    * [[IndexFsck.checkBm25]]'s orphan_segments), so the repair is
-    * [[VersionedStore.vacuum]] at its default retention. Returns the
-    * (family, action, n) report of what it deleted: `vacuumed_manifests`
-    * counts the `.tmp-` manifests with the dropped versions, so the two
-    * rows sum to the orphans fsck found (plus any versions past the
-    * retention). */
-  def repairBm25Index(spark: SparkSession, dir: String): DataFrame = {
+  /** A store family's repair: its store can only hold the crash debris of
+    * an uncommitted write (orphan segments, `.tmp-` manifests — fsck's
+    * orphan_segments), so the repair is [[VersionedStore.vacuum]] at its
+    * default retention. Returns the (family, action, n) report of what it
+    * deleted: `vacuumed_manifests` counts the `.tmp-` manifests with the
+    * dropped versions, so the two rows sum to the orphans fsck found
+    * (plus any versions past the retention). */
+  private def vacuumStore(spark: SparkSession, family: String, dir: String): DataFrame = {
     val (segs, manifests) = VersionedStore.vacuum(spark, dir)
     report(spark, Seq(
-      ("bm25", "vacuumed_segments", segs.toLong),
-      ("bm25", "vacuumed_manifests", manifests.toLong)))
+      (family, "vacuumed_segments", segs.toLong),
+      (family, "vacuumed_manifests", manifests.toLong)))
   }
 
-  // ----------------------------------------------------------- agg state
+  /** Repair a persisted BM25 index ([[IndexFsck.checkBm25]]). */
+  def repairBm25Index(spark: SparkSession, dir: String): DataFrame =
+    vacuumStore(spark, "bm25", dir)
 
-  /** Repair a materialized aggregate state: [[AggState.compactAggState]]
-    * already embodies every named repair — orphan tags are ADOPTED (the
-    * torn fold is accepted as happened and its replay blocked), pending
-    * retractions finish, torn-retry duplicate partials collapse bit-
-    * identically — so the repair is one compaction. Note the adoption
-    * semantic: an orphan's rows are merged IN, not discarded; a deployment
-    * that instead wants the torn fold retried must retry it BEFORE
-    * repairing (the retry is a no-op afterwards — the tag is committed). */
-  def repairAggState(spark: SparkSession, dir: String, groupCols: Seq[String],
-                     valueCols: Seq[String]): DataFrame =
-    IndexFiles.withWriteLease(spark, dir, "repairAggState") {
-      val before = IndexFsck.checkAggState(spark, dir).collect()
-        .map(r => r.getString(1) -> r.getLong(2)).toMap
-      AggState.compactAggState(spark, dir, groupCols, valueCols)
-      report(spark, Seq(
-        ("agg_state", "adopted_orphan_partial_rows", before("orphan_tag_rows")),
-        ("agg_state", "collapsed_duplicate_partial_rows", before("duplicate_partials")),
-        ("agg_state", "finished_retraction_rows", before("retracted_rows_present"))))
-    }
+  /** Repair a materialized aggregate state ([[IndexFsck.checkAggState]]).
+    * A fold that crashed before its commit is not counted, so its retry
+    * after the repair folds it. */
+  def repairAggState(spark: SparkSession, dir: String): DataFrame =
+    vacuumStore(spark, "agg_state", dir)
 
   // -------------------------------------------------------------- MinHash
 

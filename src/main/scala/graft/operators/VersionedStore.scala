@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     table segment-lists at once, so a two-table torn window (the
   *     rename-swap MinHash index's "sigs appended, bands not yet"; the
   *     BM25 index keeps its `postings` + `doclens` here for this reason,
-  *     see [[Retrieval]]) is UNREPRESENTABLE here — there is no
+  *     see [[Retrieval]], and the aggregate state its `state` + `tags`,
+  *     see [[AggState]]) is UNREPRESENTABLE here — there is no
   *     observable state between versions, hence no intent markers, no
   *     swap-order reasoning, and no recovery protocol at read.
   *   - **Snapshot isolation.** A reader pins a manifest; every file it
@@ -124,6 +125,11 @@ object VersionedStore {
 
     def table(name: String): DataFrame =
       IndexFiles.readParquet(spark, pathsOf(segsOf(name)): _*)
+
+    /** The string columns `cols` of every row of `name`, read on the
+      * driver ([[IndexFiles.driverRows]]) — no job; for small tables only. */
+    private[operators] def driverRows(name: String, cols: String*): Seq[Seq[String]] =
+      IndexFiles.driverRows(spark, pathsOf(segsOf(name)), cols)
 
     /** The stored schema of `name`, from a segment footer — no job. */
     private[operators] def schema(name: String): StructType =
@@ -529,11 +535,10 @@ object VersionedStore {
     * [[vacuum]]'s `keepLast` must exceed the caller's replay horizon —
     * with a durable streaming checkpoint Spark replays at most the last
     * uncommitted trigger, so the default keepLast=2 suffices; vacuuming
-    * the ledger shorter than the horizon re-opens the duplicate (the
-    * same contract as the aggregate state's compaction-proof
-    * `_tags.json`, priced here as a retention knob instead of an
-    * append-only sidecar). Cost: one manifest-listing scan per call,
-    * O(versions since vacuum). */
+    * the ledger shorter than the horizon re-opens the duplicate. (The
+    * aggregate state keeps its tags in a store TABLE instead, which no
+    * vacuum prunes — see [[AggState]].) Cost: one manifest-listing scan
+    * per call, O(versions since vacuum). */
   def appendOnce(spark: SparkSession, dir: String,
                  batches: Map[String, DataFrame], tag: String): Long = {
     // tags live in their own manifest field (ADVICE r12): a free-form

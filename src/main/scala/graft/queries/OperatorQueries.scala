@@ -2714,8 +2714,8 @@ object OperatorQueries {
         |  SELECT doc_id + 100000, text FROM documents WHERE doc_id BETWEEN 300 AND 349""".stripMargin)))
 
   // The lifecycle end: after the append, the fixture plants the debris of
-  // a crashed re-append of the batch (its postings segment and a `.tmp-`
-  // manifest, never committed), tombstones a tenth of the original
+  // a crashed re-append of the batch (a segment and a `.tmp-` manifest,
+  // never committed), tombstones a tenth of the original
   // corpus, and compacts. The oracle is (corpus MINUS drops) UNION batch
   // counted once — debris leaking into the index (over-counted tf/df), a
   // failed drop, or a lost doc all hash-fail. Dropping ids also moves df/avgdl
@@ -2730,7 +2730,7 @@ object OperatorQueries {
       val idxDir = s"$bm25IdxScratch/${java.util.UUID.randomUUID().toString.take(8)}"
       Retrieval.writeBm25Index(corpus, "doc_id", "text", idxDir)
       Retrieval.appendBm25Index(batch, "doc_id", "text", idxDir)
-      plantUncommittedBm25Append(spark, batch, idxDir)
+      plantUncommittedAppend(spark, batch, idxDir)
       val dropped = corpus.filter(col("doc_id") % 10 === 3).select("doc_id")
       val idx = Retrieval.compactBm25Index(spark, idxDir, dropIds = Some(dropped))
       Retrieval.queryBm25Index(idx, bm25IdxTopTerms(idx))
@@ -2745,7 +2745,7 @@ object OperatorQueries {
   // Streaming document ingest against the persisted BM25 index
   // (StreamingRetrieval.indexedBm25Stream): two mtime-ordered micro-batches
   // flow through the fold-then-rescore loop — each trigger appends its docs
-  // (heal-mode, replay-safe) and re-scores a FIXED query-term set (derived
+  // (replay-safe) and re-scores a FIXED query-term set (derived
   // from the CORPUS index postings before any fold) against the updated
   // index, tagging rows with the index version (doclens count after the
   // fold). The oracle replays BOTH steps from scratch (step 1 over corpus
@@ -2920,9 +2920,10 @@ object OperatorQueries {
       li.filter(col("l_orderkey") % 8 === 4).drop("l_orderkey"))
   }
   // base + two folds + a replayed committed fold (must no-op on the tag
-  // check) + a planted torn-retry duplicate of batch b2's delta rows
-  // (bit-identical by DECIMAL determinism; the read-side dedupe collapses
-  // them) — the read is exact over base UNION b1 UNION b2 counted once.
+  // check) + the planted debris of a re-fold of b2 that crashed before its
+  // commit (b2's delta rows as an orphan segment, and a `.tmp-` manifest;
+  // invisible to the read) — the read is exact over base UNION b1 UNION b2
+  // counted once.
   private val qAggState = df("q_op_agg_state",
     (spark, dir) => {
       val (base, b1, b2, _) = aggSlices(spark, dir)
@@ -2932,12 +2933,10 @@ object OperatorQueries {
       graft.operators.AggState.foldAggState(b2, sdir, "b2", aggGroupCols, aggValueCols)
       // committed replay: tag present, must not double-count
       graft.operators.AggState.foldAggState(b1, sdir, "b1", aggGroupCols, aggValueCols)
-      // torn-retry state: b2's delta rows land a second time WITHOUT a tag
-      // transition (a crash between the rows write and the tag commit,
-      // then a retry) — recomputed partials are bit-identical, so the
-      // read-side (group, __batch) dedupe must restore exactness
-      graft.operators.AggState.partials(b2, aggGroupCols, aggValueCols, "b2")
-        .write.mode("append").parquet(s"$sdir/state")
+      // a re-fold of b2 that crashed before its commit: its rows must
+      // stay invisible
+      plantUncommittedAppend(spark,
+        graft.operators.AggState.partials(b2, aggGroupCols, aggValueCols, "b2"), sdir)
       graft.operators.AggState.readAggState(spark, sdir, aggGroupCols, aggValueCols)
         .orderBy(aggGroupCols.map(col): _*)
     },
@@ -2945,7 +2944,7 @@ object OperatorQueries {
 
   // The lifecycle end: compact to one row per group, fold a THIRD batch
   // after compaction, then replay a PRE-compaction fold — whose delta
-  // rows no longer exist, so only the compaction-proof tags sidecar can
+  // rows no longer exist, so only the compaction-proof `tags` table can
   // block the double-count (the design's leg 3; a failed guard hash-fails
   // the oracle, which counts each batch exactly once).
   private val qAggStateCompact = df("q_op_agg_state_compact",
@@ -2957,8 +2956,8 @@ object OperatorQueries {
       graft.operators.AggState.foldAggState(b2, sdir, "b2", aggGroupCols, aggValueCols)
       graft.operators.AggState.compactAggState(spark, sdir, aggGroupCols, aggValueCols)
       graft.operators.AggState.foldAggState(b3, sdir, "b3", aggGroupCols, aggValueCols)
-      // replay of a pre-compaction fold: its rows were merged away, so
-      // dropDuplicates can no longer catch this — _tags.json must
+      // replay of a pre-compaction fold: its rows were merged away, and
+      // its sealed `tags` row must block it
       graft.operators.AggState.foldAggState(b1, sdir, "b1", aggGroupCols, aggValueCols)
       graft.operators.AggState.readAggState(spark, sdir, aggGroupCols, aggValueCols)
         .orderBy(aggGroupCols.map(col): _*)
@@ -3076,15 +3075,14 @@ object OperatorQueries {
 
   // Persisted-state consistency checker (IndexFsck): build small instances
   // of all four families, PLANT a known corruption set — torn appends
-  // (orphan agg tags; an uncommitted BM25 store append: one orphan
-  // segment + one `.tmp-` manifest), crash-retried duplicates (partials,
-  // code rows), an interrupted retraction, torn cluster
-  // relabels, partial/mixed-build code writes — and report every
-  // invariant's violation count. The oracle recomputes each count from the
-  // SOURCE tables through the same deterministic plant arithmetic, so a
-  // check that under- or over-counts (or a plant that quietly stopped
-  // planting) hash-fails. One corruption tripping several checks is
-  // realistic and priced in: the duplicated code rows also break the
+  // (an uncommitted BM25 append and an uncommitted agg fold: one orphan
+  // segment + one `.tmp-` manifest each), crash-retried duplicate code
+  // rows, torn cluster relabels, partial/mixed-build code writes — and
+  // report every invariant's violation count. The oracle recomputes each
+  // count from the SOURCE tables through the same deterministic plant
+  // arithmetic, so a check that under- or over-counts (or a plant that
+  // quietly stopped planting) hash-fails. One corruption tripping several
+  // checks is realistic and priced in: the duplicated code rows also break the
   // per-id row count, and the keeper-above plant is also dangling.
   // Build small instances of all four persisted families under `base` and
   // PLANT the shared corruption set described on q_op_index_fsck — the
@@ -3099,16 +3097,14 @@ object OperatorQueries {
   private[graft] def concurrently(tasks: (() => Unit)*): Unit =
     graft.operators.Jobs.concurrently(tasks: _*)
 
-  // The crash debris a BM25 append can still leave on its store: a writer
-  // that died after writing a segment (postings of `docs`) but before its
-  // commit, and one that died between its manifest write and the commit
-  // rename (a `.tmp-` manifest).
-  private[graft] def plantUncommittedBm25Append(spark: org.apache.spark.sql.SparkSession,
-                                                docs: org.apache.spark.sql.DataFrame,
-                                                dir: String): Unit = {
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .write.parquet(s"$dir/_segments/orphan-${java.util.UUID.randomUUID().toString.take(8)}")
+  // The crash debris any store writer can leave (VersionedStore): one that
+  // died after writing a segment (`rows`) but before its commit, and one
+  // that died between its manifest write and the commit rename (a `.tmp-`
+  // manifest).
+  private[graft] def plantUncommittedAppend(spark: org.apache.spark.sql.SparkSession,
+                                            rows: org.apache.spark.sql.DataFrame,
+                                            dir: String): Unit = {
+    rows.write.parquet(s"$dir/_segments/orphan-${java.util.UUID.randomUUID().toString.take(8)}")
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/_manifests/.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = tmp.getFileSystem(spark.sessionState.newHadoopConf()).create(tmp, false)
@@ -3129,7 +3125,7 @@ object OperatorQueries {
           // ---- BM25: an append that crashed before its commit
           graft.operators.Retrieval.writeBm25Index(
             docs.filter(col("doc_id") < 200), "doc_id", "text", s"$base/bm25", termShards = 4)
-          plantUncommittedBm25Append(spark, docs.filter(col("doc_id").between(200, 219)),
+          plantUncommittedAppend(spark, docs.filter(col("doc_id").between(200, 219)),
             s"$base/bm25")
         },
         () => {
@@ -3148,11 +3144,10 @@ object OperatorQueries {
             .write.mode("append").parquet(s"$base/mh/bands")
         },
         () => {
-          // ---- aggregate state: orphan tag, torn-retry duplicate, crashed
-          // retraction (intent recorded, rows re-present). The fact-table
-          // slices are capped at l_orderkey < 30000: the checks count GROUPS,
-          // which saturate immediately, so scanning the whole fact table per
-          // plant buys nothing
+          // ---- aggregate state: two folds, a retraction, then a fold that
+          // crashed before its commit. The fact-table slices are capped at
+          // l_orderkey < 30000: the readback counts groups, which saturate
+          // immediately, so scanning the whole fact table buys nothing
           val liCap = Tables.table(spark, dir, "lineitem")
             .filter(col("l_orderkey") < 30000)
             .select("l_orderkey", "l_returnflag", "l_linestatus",
@@ -3167,10 +3162,8 @@ object OperatorQueries {
           graft.operators.AggState.foldAggState(b1, s"$base/agg", "b1", aggGroupCols, aggValueCols)
           graft.operators.AggState.foldAggState(b2, s"$base/agg", "b2", aggGroupCols, aggValueCols)
           graft.operators.AggState.retractAggState(spark, s"$base/agg", "b2", aggGroupCols, aggValueCols)
-          Seq((b2, "b2"), (b3, "zz_orphan"), (b1, "b1")).foreach { case (b, tag) =>
-            graft.operators.AggState.partials(b, aggGroupCols, aggValueCols, tag)
-              .write.mode("append").parquet(s"$base/agg/state")
-          }
+          plantUncommittedAppend(spark,
+            graft.operators.AggState.partials(b3, aggGroupCols, aggValueCols, "b3"), s"$base/agg")
         },
         () => {
           // ---- cluster assignment: disjoint 2-cliques + three torn-relabel
@@ -3227,12 +3220,6 @@ object OperatorQueries {
         .orderBy("family", "check")
     },
     Some("""WITH
-           |b1g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 4 = 3),
-           |b2g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 8 = 0),
-           |b3g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 8 = 4),
            |c1 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 1),
            |c7 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 7),
            |c20 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 20 = 0),
@@ -3249,9 +3236,11 @@ object OperatorQueries {
            |  UNION ALL SELECT 'bm25', 'orphan_segments', 2
            |  UNION ALL SELECT 'bm25', 'rows_stat_mismatch', 0
            |  UNION ALL SELECT 'bm25', 'stat_bounds_mismatch', 0
-           |  UNION ALL SELECT 'agg_state', 'orphan_tag_rows', (SELECT COUNT(*) FROM b3g)
-           |  UNION ALL SELECT 'agg_state', 'duplicate_partials', (SELECT COUNT(*) FROM b1g)
-           |  UNION ALL SELECT 'agg_state', 'retracted_rows_present', (SELECT COUNT(*) FROM b2g)
+           |  UNION ALL SELECT 'agg_state', 'broken_parent_chain', 0
+           |  UNION ALL SELECT 'agg_state', 'missing_segment_dirs', 0
+           |  UNION ALL SELECT 'agg_state', 'orphan_segments', 2
+           |  UNION ALL SELECT 'agg_state', 'rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'agg_state', 'stat_bounds_mismatch', 0
            |  UNION ALL SELECT 'cluster', 'keeper_above_doc', (SELECT n FROM c1)
            |  UNION ALL SELECT 'cluster', 'dangling_keepers', (SELECT n FROM c1) + (SELECT n FROM c7)
            |  UNION ALL SELECT 'cluster', 'keeper_not_fixpoint', (SELECT n FROM c20)
@@ -3269,14 +3258,14 @@ object OperatorQueries {
   // checker is graded against, run every family's repair, then prove three
   // things in one tall (family, action, n) table the oracle recomputes
   // from the source tables: (1) the repairs reported exactly the planted
-  // damage (vacuumed BM25 debris, collapsed duplicates, adopted orphans,
-  // finished retractions, dropped partial ids); (2) EVERY IndexFsck
+  // damage (vacuumed BM25 and agg debris, collapsed duplicates, dropped
+  // partial ids); (2) EVERY IndexFsck
   // invariant reads zero afterwards (the fsck_* rows); (3) membership and
   // content survived — BM25 serves exactly the base corpus's postings,
   // the MinHash drop-and-reappend loop restores full coverage (165 ids),
   // the IVF-PQ codes are exactly m rows per base vector, the cluster map
   // re-solves to the planted connectivity's canonical min-labels, and the
-  // aggregate readback equals base+b1+b3 (b2 retracted, b3 adopted). A
+  // aggregate readback equals base+b1 (b2 retracted, b3 never committed). A
   // repair that over-drops, under-heals, or invents connectivity
   // hash-fails one of the three layers.
   private val qIndexRepair = df("q_op_index_repair",
@@ -3306,8 +3295,7 @@ object OperatorQueries {
             docs.join(mhBad, Seq("doc_id"), "left_semi"), "doc_id", "text", s"$base/mh")
           graft.operators.Checkpoints.free(mhBad) // re-append landed
         },
-        () => repAgg = graft.operators.IndexRepair.repairAggState(
-          spark, s"$base/agg", aggGroupCols, aggValueCols),
+        () => repAgg = graft.operators.IndexRepair.repairAggState(spark, s"$base/agg"),
         () => repIvf = graft.operators.IndexRepair.repairIvfPqIndex(spark, s"$base/ivf"),
         () => repaired = graft.operators.IndexRepair.repairClusterAssignment(planted)
           .localCheckpoint())
@@ -3345,14 +3333,7 @@ object OperatorQueries {
            |pslice AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
            |           FROM documents WHERE doc_id < 200),
            |aslice AS (SELECT l_returnflag, l_linestatus FROM lineitem
-           |           WHERE l_orderkey < 30000
-           |             AND (l_orderkey % 4 IN (1, 2, 3) OR l_orderkey % 8 = 4)),
-           |b1g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 4 = 3),
-           |b2g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 8 = 0),
-           |b3g AS (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-           |        WHERE l_orderkey < 30000 AND l_orderkey % 8 = 4),
+           |           WHERE l_orderkey < 30000 AND l_orderkey % 4 IN (1, 2, 3)),
            |c10 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 0),
            |c1 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 1),
            |c7 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 7),
@@ -3367,16 +3348,16 @@ object OperatorQueries {
            |d165 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id < 165),
            |d200 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id < 200)
            |SELECT family, action, CAST(n AS BIGINT) AS n FROM (
-           |  SELECT 'agg_state' AS family, 'adopted_orphan_partial_rows' AS action,
-           |    (SELECT COUNT(*) FROM b3g) AS n
-           |  UNION ALL SELECT 'agg_state', 'collapsed_duplicate_partial_rows', (SELECT COUNT(*) FROM b1g)
-           |  UNION ALL SELECT 'agg_state', 'finished_retraction_rows', (SELECT COUNT(*) FROM b2g)
-           |  UNION ALL SELECT 'agg_state', 'fsck_duplicate_partials', 0
-           |  UNION ALL SELECT 'agg_state', 'fsck_orphan_tag_rows', 0
-           |  UNION ALL SELECT 'agg_state', 'fsck_retracted_rows_present', 0
+           |  SELECT 'agg_state' AS family, 'fsck_broken_parent_chain' AS action, 0 AS n
+           |  UNION ALL SELECT 'agg_state', 'fsck_missing_segment_dirs', 0
+           |  UNION ALL SELECT 'agg_state', 'fsck_orphan_segments', 0
+           |  UNION ALL SELECT 'agg_state', 'fsck_rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'agg_state', 'fsck_stat_bounds_mismatch', 0
            |  UNION ALL SELECT 'agg_state', 'readback_groups',
            |    (SELECT COUNT(*) FROM (SELECT DISTINCT l_returnflag, l_linestatus FROM aslice))
            |  UNION ALL SELECT 'agg_state', 'readback_total_cnt', (SELECT COUNT(*) FROM aslice)
+           |  UNION ALL SELECT 'agg_state', 'vacuumed_manifests', 1
+           |  UNION ALL SELECT 'agg_state', 'vacuumed_segments', 1
            |  UNION ALL SELECT 'bm25', 'fsck_broken_parent_chain', 0
            |  UNION ALL SELECT 'bm25', 'fsck_missing_segment_dirs', 0
            |  UNION ALL SELECT 'bm25', 'fsck_orphan_segments', 0

@@ -11,10 +11,11 @@ import graft.operators.AggState
   *
   * Delivery: foreachBatch is at-least-once, and this loop is where the
   * AggState replay contract earns its keep with NO extra guard code: the
-  * batch tag derives from the trigger's batchId, so a replayed trigger
-  * either no-ops on the tag check (tag committed) or re-appends
-  * bit-identical partial rows that the read-side dedupe collapses (tag
-  * not yet committed) — exact either way. The tag-from-batchId scheme is
+  * batch tag derives from the trigger's batchId, and a fold commits its
+  * rows and its tag together, so a replayed trigger either no-ops on the
+  * tag check (fold committed) or folds for the first time (the earlier
+  * attempt crashed before its commit and left nothing visible) — exact
+  * either way. The tag-from-batchId scheme is
   * only sound when batchIds are DURABLE across restarts, so this loop
   * REQUIRES an explicit checkpoint location: with Spark's throwaway
   * temporary checkpoint, a restarted stream would reissue batchId 0 for

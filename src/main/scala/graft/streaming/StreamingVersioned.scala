@@ -17,7 +17,7 @@ import graft.operators.VersionedStore
   * whose manifest TAG ledger (a field of its own — free-form notes can
   * never match it) makes a replayed trigger a no-op — the same
   * replay-exactness as the agg-state loop, with the version history
-  * playing the role of `_tags.json`. Two consequences, stated plainly:
+  * playing the role of its `tags` table. Two consequences, stated plainly:
   * a durable checkpoint is REQUIRED (a temporary checkpoint reissues
   * batchId 0 for brand-new data after a restart and the tag-ledger check
   * would silently discard it — the exact failure mode the agg-state

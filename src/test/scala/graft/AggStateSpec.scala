@@ -2,12 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.AggState
+import graft.operators.{AggState, IndexFsck, IndexRepair, VersionedStore}
 
 /** The materialized aggregate state lifecycle (AggState): fold+read equals
-  * a from-scratch recompute, the three replay legs (committed no-op, torn
-  * duplicate collapse, replay-after-compaction blocked by the tags
-  * sidecar), meta validation, and interrupted-swap recovery. */
+  * a from-scratch recompute, the replay contract (a committed fold
+  * replays as a no-op that writes nothing, before and after compaction or
+  * retraction; a fold that crashed before its commit is invisible until
+  * its retry), column validation, retraction and sealing, and the crash
+  * shapes its store can hold (an orphan segment, a `.tmp-` manifest). The
+  * every-call crash sweep is [[graft.operators.AggStateCrashSpec]]. */
 class AggStateSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -41,90 +44,121 @@ class AggStateSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.orderBy(gCols.map(col): _*).collect().map(_.toSeq.toVector).toSeq
 
+  private def read(dir: String) = rows(AggState.readAggState(spark, dir, gCols, vCols))
+
+  private def stored(dir: String, table: String) =
+    VersionedStore.snapshot(spark, dir).table(table)
+
+  private def tags(dir: String): Map[String, String] =
+    stored(dir, "tags").as[(String, String)].collect().toMap
+
+  // every file under the directory, with its length
+  private def listing(dir: String): Map[String, Long] =
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), null, true)
+      .toArray(Array.empty[java.io.File]).map(f => f.getPath -> f.length).toMap
+
+  // the debris of a commit that crashed before its rename: a segment of
+  // `rows`, and a half-written `.tmp-` manifest
+  private def plantUncommitted(rows: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    graft.queries.OperatorQueries.plantUncommittedAppend(spark, rows, dir)
+
+  private def violations(dir: String): Long =
+    IndexFsck.checkAggState(spark, dir).agg(sum("violations")).head().getLong(0)
+
   test("write + fold + read equals a from-scratch recompute, bit-exact") {
     val dir = scratch("aggstate")
     AggState.writeAggState(base, dir, gCols, vCols)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
     AggState.foldAggState(b2, dir, "b2", gCols, vCols)
-    val got = rows(AggState.readAggState(spark, dir, gCols, vCols))
+    val got = read(dir)
     assert(got.nonEmpty)
     assert(got == rows(recompute(base.unionAll(b1).unionAll(b2))))
+    // one store, one commit per mutation: the base build and two folds
+    assert(VersionedStore.versionNumbers(spark, dir) == Seq(1L, 2L, 3L))
+    assert(tags(dir) == Map("__base" -> "folded", "b1" -> "folded", "b2" -> "folded"))
   }
 
-  test("replay legs: committed no-op, torn duplicates collapse") {
+  test("replay legs: a committed fold replays as a no-op; a crashed fold is invisible until retried") {
     val dir = scratch("aggstate_rp")
     AggState.writeAggState(base, dir, gCols, vCols)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    val want = rows(AggState.readAggState(spark, dir, gCols, vCols))
-    val nRows = spark.read.parquet(s"$dir/state").count()
-    // leg 1: committed replay is a no-op before any write
+    val want = read(dir)
+    // leg 1: a committed replay writes nothing at all
+    val files = listing(dir)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    assert(spark.read.parquet(s"$dir/state").count() == nRows)
-    // leg 2: torn retry (rows landed twice under one tag) — bit-identical
-    // duplicates, collapsed by the read-side (group, __batch) dedupe
-    // localCheckpoint: materialize before appending into the same path the
-    // rows were read from
-    val dup = spark.read.parquet(s"$dir/state").filter($"__batch" === "b1")
-      .localCheckpoint()
-    dup.write.mode("append").parquet(s"$dir/state")
-    assert(spark.read.parquet(s"$dir/state").count() > nRows)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(listing(dir) == files)
+    assert(read(dir) == want)
+    // leg 2: a fold of b2 that crashed before its commit left its rows in
+    // an orphan segment — not counted, reported by fsck
+    plantUncommitted(AggState.partials(b2, gCols, vCols, "b2"), dir)
+    assert(read(dir) == want)
+    assert(violations(dir) == 2L)
+    // its retry is simply the fold, and counts b2 once
+    AggState.foldAggState(b2, dir, "b2", gCols, vCols)
+    assert(read(dir) == rows(recompute(base.unionAll(b1).unionAll(b2))))
+    IndexRepair.repairAggState(spark, dir)
+    assert(violations(dir) == 0L)
+    assert(read(dir) == rows(recompute(base.unionAll(b1).unionAll(b2))))
   }
 
   test("compaction: one row per group, reads unchanged, pre-compaction replay blocked") {
     val dir = scratch("aggstate_cmp")
     AggState.writeAggState(base, dir, gCols, vCols)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    val want = rows(AggState.readAggState(spark, dir, gCols, vCols))
+    val want = read(dir)
     AggState.compactAggState(spark, dir, gCols, vCols)
-    val st = spark.read.parquet(s"$dir/state")
+    val st = stored(dir, "state")
     assert(st.groupBy(gCols.map(col): _*).count().filter($"count" > 1).count() == 0)
     assert(st.select("__batch").distinct().collect()
       .map(_.getString(0)).toSeq == Seq(AggState.CompactedTag))
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
-    // leg 3: b1's delta rows were merged away — only the compaction-proof
-    // tags sidecar can block this replay from double-counting
+    assert(read(dir) == want)
+    // the superseded versions are reclaimed
+    assert(VersionedStore.versionNumbers(spark, dir).size == 1)
+    assert(tags(dir) == Map("__base" -> "sealed", "b1" -> "sealed"))
+    // leg 3: b1's delta rows were merged away — only its sealed tag can
+    // block this replay from double-counting
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == want)
     // and a genuinely new fold after compaction still lands
     AggState.foldAggState(b2, dir, "b2", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) ==
-      rows(recompute(base.unionAll(b1).unionAll(b2))))
+    assert(read(dir) == rows(recompute(base.unionAll(b1).unionAll(b2))))
   }
 
-  test("compaction adopts orphan tags: a merged-away torn fold cannot double-count on retry") {
+  test("a crashed fold compacted past is not merged; its retry after compaction counts once") {
     val dir = scratch("aggstate_orphan")
     AggState.writeAggState(base, dir, gCols, vCols)
-    // torn fold: rows landed under tag "tb1", the tag commit never ran
-    AggState.partials(b1, gCols, vCols, "tb1")
-      .write.mode("append").parquet(s"$dir/state")
-    val want = rows(recompute(base.unionAll(b1)))
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    plantUncommitted(AggState.partials(b1, gCols, vCols, "tb1"), dir)
     AggState.compactAggState(spark, dir, gCols, vCols)
-    // the late retry of the torn fold: its rows are merged away, so only
-    // the adopted tag can block the re-append
+    assert(read(dir) == rows(recompute(base)))
+    // the compaction's reclaim swept the debris with the superseded versions
+    assert(violations(dir) == 0L)
     AggState.foldAggState(b1, dir, "tb1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
+    AggState.foldAggState(b1, dir, "tb1", gCols, vCols)
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
   }
 
   test("fold refuses a missing state table and recovers a torn compaction swap") {
+    // no store (torn first build / typo'd path) must not silently bootstrap
     val dir = scratch("aggstate_guard")
-    // missing state (torn build / typo'd path) must not silently bootstrap
-    AggState.AggStateMeta.write(spark, dir,
-      AggState.AggStateMeta(gCols, vCols))
     val e = intercept[IllegalArgumentException] {
       AggState.foldAggState(b1, dir, "b1", gCols, vCols)
     }
-    assert(e.getMessage.contains("no state table"))
-    // torn compaction swap (live dir gone, _state_old present): a fold must
-    // recover the pre-swap table BEFORE appending, not create a fresh state
+    assert(e.getMessage.contains("no versions"))
+    assert(VersionedStore.versionNumbers(spark, dir).isEmpty)
+    // a compaction whose commit never landed (its merged segment and a
+    // `.tmp-` manifest): the previous version still serves, and the fold
+    // appends to it
     val dir2 = scratch("aggstate_guard2")
     AggState.writeAggState(base, dir2, gCols, vCols)
-    assert(new java.io.File(s"$dir2/state")
-      .renameTo(new java.io.File(s"$dir2/_state_old")))
+    AggState.foldAggState(b2, dir2, "b2", gCols, vCols)
+    plantUncommitted(AggState.partials(base.unionAll(b2), gCols, vCols, AggState.CompactedTag), dir2)
     AggState.foldAggState(b1, dir2, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir2, gCols, vCols)) ==
-      rows(recompute(base.unionAll(b1))))
+    assert(read(dir2) == rows(recompute(base.unionAll(b1).unionAll(b2))))
+    // the re-run compaction reaches the same merged state
+    AggState.compactAggState(spark, dir2, gCols, vCols)
+    assert(read(dir2) == rows(recompute(base.unionAll(b1).unionAll(b2))))
+    assert(violations(dir2) == 0L)
   }
 
   test("retraction: exact for every measure, blocked after sealing, idempotent") {
@@ -136,55 +170,41 @@ class AggStateSpec extends AnyFunSuite {
     // rows ARE the remaining candidates
     val want = rows(recompute(base.unionAll(b2)))
     AggState.retractAggState(spark, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == want)
+    assert(tags(dir)("b1") == "retracted")
     // the retracted fold's replay must not resurrect the data
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == want)
     // re-retract is a no-op
     AggState.retractAggState(spark, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == want)
     // sealing: after compaction, b2 cannot be individually retracted
     AggState.compactAggState(spark, dir, gCols, vCols)
     val e = intercept[IllegalArgumentException] {
       AggState.retractAggState(spark, dir, "b2", gCols, vCols)
     }
     assert(e.getMessage.contains("sealed"))
-    // but the already-retracted tag still no-ops politely post-seal...
-    // (retracted check runs before the sealed check)
+    // but the already-retracted tag still no-ops politely post-seal
     AggState.retractAggState(spark, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == want)
+    assert(tags(dir) == Map("__base" -> "sealed", "b1" -> "retracted", "b2" -> "sealed"))
   }
 
-  test("retraction intent is crash-recoverable: retry and compaction both finish a torn swap") {
-    // crash window: _retracted.json written, the swap never ran
-    def tornRetract(dir: String): Unit = {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/_retracted.json"),
-        "[\"b1\"]".getBytes("UTF-8"))
-      // the build wrote this sidecar through Hadoop's checksummed local FS;
-      // overwriting the bytes directly leaves a stale .crc behind
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$dir/._retracted.json.crc"))
-    }
-    val want = rows(recompute(base))
-    // leg A: the retract retry completes the swap instead of no-opping
-    val d1 = scratch("aggstate_ri1")
-    AggState.writeAggState(base, d1, gCols, vCols)
-    AggState.foldAggState(b1, d1, "b1", gCols, vCols)
-    tornRetract(d1)
-    AggState.retractAggState(spark, d1, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, d1, gCols, vCols)) == want)
-    // leg B: a compaction finishes the pending retraction instead of
-    // sealing-and-merging rows the sidecar already claims are gone
-    val d2 = scratch("aggstate_ri2")
-    AggState.writeAggState(base, d2, gCols, vCols)
-    AggState.foldAggState(b1, d2, "b1", gCols, vCols)
-    tornRetract(d2)
-    AggState.compactAggState(spark, d2, gCols, vCols)
-    assert(rows(AggState.readAggState(spark, d2, gCols, vCols)) == want)
+  test("a retraction is one commit: a crashed one leaves the batch counted and retractable") {
+    val dir = scratch("aggstate_ri")
+    AggState.writeAggState(base, dir, gCols, vCols)
+    AggState.foldAggState(b1, dir, "b1", gCols, vCols)
+    // the retraction's rewritten state segment landed, its commit did not
+    plantUncommitted(stored(dir, "state").filter($"__batch" =!= "b1"), dir)
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
+    assert(tags(dir)("b1") == "folded")
+    // a compaction now would seal b1; the retry retracts it instead
+    AggState.retractAggState(spark, dir, "b1", gCols, vCols)
+    assert(read(dir) == rows(recompute(base)))
+    assert(violations(dir) == 0L)
   }
 
-  test("rebuild-in-place resets seal/retraction sidecars; unknown-tag retract throws") {
+  test("rebuild-in-place starts a fresh tags table; unknown-tag retract throws") {
     val dir = scratch("aggstate_rebuild")
     AggState.writeAggState(base, dir, gCols, vCols)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
@@ -192,66 +212,69 @@ class AggStateSpec extends AnyFunSuite {
     AggState.compactAggState(spark, dir, gCols, vCols) // seals everything
     // new incarnation in the same directory
     AggState.writeAggState(base, dir, gCols, vCols)
+    assert(tags(dir) == Map("__base" -> "folded"))
     // the previous incarnation's retraction must not turn this fold's tag
     // into a vacuous no-op...
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) ==
-      rows(recompute(base.unionAll(b1))))
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
     // ...and the previous seal must not block its retraction
     AggState.retractAggState(spark, dir, "b1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) ==
-      rows(recompute(base)))
-    // a typo'd tag (never folded, no rows) fails loudly instead of being
-    // silently committed (which would block the real batch's future fold)
+    assert(read(dir) == rows(recompute(base)))
+    // a typo'd tag (never folded) fails loudly
     val e = intercept[IllegalArgumentException] {
       AggState.retractAggState(spark, dir, "b99", gCols, vCols)
     }
     assert(e.getMessage.contains("unknown batch"))
   }
 
-  test("retracting a torn fold adopts its tag, so the late replay stays blocked") {
+  test("retracting a crashed fold throws as unknown; its retry then folds") {
     val dir = scratch("aggstate_retract_torn")
     AggState.writeAggState(base, dir, gCols, vCols)
-    // torn: rows landed, tag never committed
-    AggState.partials(b1, gCols, vCols, "tb1")
-      .write.mode("append").parquet(s"$dir/state")
-    val want = rows(recompute(base))
-    AggState.retractAggState(spark, dir, "tb1", gCols, vCols)
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    plantUncommitted(AggState.partials(b1, gCols, vCols, "tb1"), dir)
+    val e = intercept[IllegalArgumentException] {
+      AggState.retractAggState(spark, dir, "tb1", gCols, vCols)
+    }
+    assert(e.getMessage.contains("unknown batch"))
+    assert(read(dir) == rows(recompute(base)))
     AggState.foldAggState(b1, dir, "tb1", gCols, vCols) // the late retry
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
   }
 
   test("meta validation fails loudly; reserved tags rejected") {
     val dir = scratch("aggstate_meta")
     AggState.writeAggState(base, dir, gCols, vCols)
-    val e = intercept[IllegalArgumentException] {
-      AggState.readAggState(spark, dir, Seq("l_returnflag"), vCols)
+    Seq(
+      () => AggState.readAggState(spark, dir, Seq("l_returnflag"), vCols),
+      () => AggState.readAggState(spark, dir, gCols.reverse, vCols),
+      () => AggState.foldAggState(b1, dir, "b1", gCols, vCols.take(1))
+    ).foreach { f =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("column mismatch"))
     }
-    assert(e.getMessage.contains("column mismatch"))
     val e2 = intercept[IllegalArgumentException] {
       AggState.foldAggState(b1, dir, "__sneaky", gCols, vCols)
     }
     assert(e2.getMessage.contains("reserved"))
-    // a tag that would render _tags.json malformed is rejected up front
-    val e3 = intercept[IllegalArgumentException] {
-      AggState.foldAggState(b1, dir, "b\"1", gCols, vCols)
-    }
-    assert(e3.getMessage.contains("A-Za-z0-9"))
+    intercept[IllegalArgumentException](AggState.foldAggState(b1, dir, "", gCols, vCols))
+    // tags are data now, not hand-built JSON: any other string is a tag
+    AggState.foldAggState(b1, dir, "b\"1", gCols, vCols)
+    AggState.foldAggState(b1, dir, "b\"1", gCols, vCols)
+    assert(read(dir) == rows(recompute(base.unionAll(b1))))
   }
 
   test("read recovers an interrupted compaction swap; streaming body is replay-exact") {
     val dir = scratch("aggstate_torn")
     AggState.writeAggState(base, dir, gCols, vCols)
-    val want = rows(AggState.readAggState(spark, dir, gCols, vCols))
-    val f = new java.io.File(s"$dir/state")
-    assert(f.renameTo(new java.io.File(s"$dir/_state_old")))
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == want)
+    val want = read(dir)
+    // a compaction that crashed before its commit: the read serves the
+    // committed version
+    plantUncommitted(AggState.partials(b1, gCols, vCols, AggState.CompactedTag), dir)
+    assert(read(dir) == want)
     // streaming per-batch body: same tag twice, merged read unchanged
     graft.streaming.StreamingAggState.aggStateBatch(b1, dir, gCols, vCols, "t_0")
-    val after = rows(AggState.readAggState(spark, dir, gCols, vCols))
+    val after = read(dir)
     graft.streaming.StreamingAggState.aggStateBatch(b1, dir, gCols, vCols, "t_0")
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols)) == after)
+    assert(read(dir) == after)
     assert(after == rows(recompute(base.unionAll(b1))))
   }
 
@@ -284,7 +307,7 @@ class AggStateSpec extends AnyFunSuite {
     val want = rows(recompute(base.unionAll(b1).unionAll(b2)))
     assert(rows(AggState.readAggState(spark, s"$dir/st", gCols, vCols)) == want)
     // batchId continuity pinned directly: b2's fold committed under t_1
-    assert(spark.read.parquet(s"$dir/st/state").select("__batch")
+    assert(stored(s"$dir/st", "state").select("__batch")
       .distinct().collect().map(_.getString(0)).toSet
       == Set("__base", "t_0", "t_1"))
     // the failure mode the durable-checkpoint requirement exists for,
@@ -306,29 +329,34 @@ class AggStateSpec extends AnyFunSuite {
     assert(e.getMessage.contains("durable checkpoint"))
   }
 
-  test("torn rebuild marker: a crashed writeAggState refuses every entry point until re-run") {
+  test("a crashed rebuild in place leaves the previous build serving; re-run equals a fresh build") {
     val dir = scratch("aggstate_reb_torn")
     AggState.writeAggState(base, dir, gCols, vCols)
     AggState.foldAggState(b1, dir, "b1", gCols, vCols)
-    // the crash window: a rebuild-in-place died after resetting the
-    // sidecars but before the state overwrite — the OLD incarnation's
-    // state sits under fresh sidecars, and only the surviving intent
-    // marker distinguishes that from a healthy directory
-    new java.io.File(s"$dir/_rebuild_intent").createNewFile()
-    Seq(
-      () => AggState.readAggState(spark, dir, gCols, vCols).collect(),
-      () => AggState.foldAggState(b2, dir, "b2", gCols, vCols),
-      () => AggState.compactAggState(spark, dir, gCols, vCols),
-      () => AggState.retractAggState(spark, dir, "b1", gCols, vCols)
-    ).foreach { f =>
-      val e = intercept[IllegalArgumentException](f())
-      assert(e.getMessage.contains("torn writeAggState"))
+    val want = read(dir)
+    // the rebuild's state segment landed, its commit did not
+    plantUncommitted(AggState.partials(b2, gCols, vCols, "__base"), dir)
+    assert(read(dir) == want)
+    AggState.foldAggState(b2, dir, "b2", gCols, vCols)
+    assert(read(dir) == rows(recompute(base.unionAll(b1).unionAll(b2))))
+    // the re-run rebuild replaces the whole previous incarnation
+    AggState.writeAggState(b2, dir, gCols, vCols)
+    assert(read(dir) == rows(recompute(b2)))
+    assert(tags(dir) == Map("__base" -> "folded"))
+    assert(violations(dir) == 0L)
+  }
+
+  test("an empty base is refused: the store holds no empty table") {
+    val dir = scratch("aggstate_empty")
+    val e = intercept[IllegalArgumentException] {
+      AggState.writeAggState(base.limit(0), dir, gCols, vCols)
     }
-    // the documented remedy — re-run the rebuild — clears the marker and
-    // starts the new incarnation cleanly
+    assert(e.getMessage.contains("EMPTY"))
+    assert(VersionedStore.versionNumbers(spark, dir).isEmpty)
+    // an empty batch folds: its tag is recorded, no rows change
     AggState.writeAggState(base, dir, gCols, vCols)
-    assert(!new java.io.File(s"$dir/_rebuild_intent").exists())
-    assert(rows(AggState.readAggState(spark, dir, gCols, vCols))
-      == rows(recompute(base)))
+    AggState.foldAggState(b1.limit(0), dir, "e1", gCols, vCols)
+    assert(read(dir) == rows(recompute(base)))
+    assert(tags(dir)("e1") == "folded")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, IndexFsck, IndexRepair, Retrieval, Similarity}
+import graft.operators.{AggState, Dedup, IndexFsck, IndexRepair, Retrieval, Similarity}
 
 /** IndexRepair — the apply mode of IndexFsck. The registry query
   * q_op_index_repair oracle-gates the full planted-corruption loop at both
@@ -93,7 +93,7 @@ class IndexRepairSpec extends AnyFunSuite {
     val before = Retrieval.Bm25Index.read(spark, dir).postings.count()
     // two appends that crashed before their commits
     Seq((120, 124), (125, 129)).foreach { case (lo, hi) =>
-      graft.queries.OperatorQueries.plantUncommittedBm25Append(spark,
+      graft.queries.OperatorQueries.plantUncommittedAppend(spark,
         graft.engine.Tables.table(spark, sfDir, "documents")
           .filter(col("doc_id").between(lo, hi)), dir)
     }
@@ -103,6 +103,32 @@ class IndexRepairSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 0L)
     assert(Retrieval.Bm25Index.read(spark, dir).postings.count() == before)
     assert(reportMap(IndexRepair.repairBm25Index(spark, dir)).values.forall(_ == 0L))
+  }
+
+  test("agg-state repair reports the vacuumed debris; the crashed fold's retry then counts once") {
+    val dir = scratch("rep_agg")
+    val li = graft.engine.Tables.table(spark, sfDir, "lineitem")
+      .select("l_orderkey", "l_returnflag", "l_quantity")
+    val (g, v) = (Seq("l_returnflag"), Seq("l_quantity"))
+    val base = li.filter(col("l_orderkey") % 2 === 0).drop("l_orderkey")
+    val batch = li.filter(col("l_orderkey") % 2 === 1).drop("l_orderkey")
+    AggState.writeAggState(base, dir, g, v)
+    def read() = AggState.readAggState(spark, dir, g, v).orderBy("l_returnflag")
+      .collect().map(_.toSeq).toSeq
+    val before = read()
+    // a fold that crashed before its commit: invisible, reported, vacuumed
+    graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+      AggState.partials(batch, g, v, "b1"), dir)
+    assert(read() == before)
+    assert(reportMap(IndexFsck.checkAggState(spark, dir))("orphan_segments") == 2L)
+    assert(reportMap(IndexRepair.repairAggState(spark, dir)) ==
+      Map("vacuumed_segments" -> 1L, "vacuumed_manifests" -> 1L))
+    assert(IndexFsck.checkAggState(spark, dir).agg(sum("violations"))
+      .collect().head.getLong(0) == 0L)
+    assert(reportMap(IndexRepair.repairAggState(spark, dir)).values.forall(_ == 0L))
+    AggState.foldAggState(batch, dir, "b1", g, v)
+    assert(read() == AggState.writeAggState(base.unionAll(batch), scratch("rep_agg_all"), g, v)
+      .orderBy("l_returnflag").collect().map(_.toSeq).toSeq)
   }
 
   test("repairClusterAssignment preserves singletons and never invents connectivity") {

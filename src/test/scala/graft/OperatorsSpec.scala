@@ -1160,7 +1160,7 @@ class OperatorsSpec extends AnyFunSuite {
         .unionAll(IndexFsck.checkAggState(spark, adir))
         .unionAll(IndexFsck.checkClusterAssignment(cleanClusters))
         .unionAll(IndexFsck.checkIvfPq(spark, vdir)))
-      assert(clean.size == 17 && clean.values.forall(_ == 0L),
+      assert(clean.size == 19 && clean.values.forall(_ == 0L),
         s"clean state must report zero violations everywhere: $clean")
       // minhash: a torn append (sigs landed, bands did not) is an id-set
       // mismatch; a retried full append doubles the band count
@@ -1173,15 +1173,13 @@ class OperatorsSpec extends AnyFunSuite {
       assert(mrep(("minhash", "sig_band_id_mismatch")) == nTorn &&
         mrep(("minhash", "wrong_band_count")) == 0L)
       // one plant per family, each counted exactly
-      graft.queries.OperatorQueries.plantUncommittedBm25Append(spark,
+      graft.queries.OperatorQueries.plantUncommittedAppend(spark,
         docs.filter($"doc_id" < 5).select($"doc_id" + 5000L as "doc_id", $"text"), bdir)
       assert(report(IndexFsck.checkBm25(spark, bdir))(("bm25", "orphan_segments")) == 2L)
-      val orphan = AggState.partials(li.filter($"l_returnflag" === "R"),
-        Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), "torn")
-        .localCheckpoint()
-      val nOrphan = orphan.count()
-      orphan.write.mode("append").parquet(s"$adir/state")
-      assert(report(IndexFsck.checkAggState(spark, adir))(("agg_state", "orphan_tag_rows")) == nOrphan)
+      graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+        AggState.partials(li.filter($"l_returnflag" === "R"),
+          Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"), "torn"), adir)
+      assert(report(IndexFsck.checkAggState(spark, adir))(("agg_state", "orphan_segments")) == 2L)
       val torn = cleanClusters.unionAll(Seq((99L, 98L)).toDF("doc_id", "keeper"))
       val rep = report(IndexFsck.checkClusterAssignment(torn))
       assert(rep(("cluster", "dangling_keepers")) == 1L &&

@@ -26,10 +26,10 @@ class RetrievalSpec extends AnyFunSuite {
     idx.postings.groupBy("term").agg(sum($"tf").as("n"))
       .orderBy($"n".desc, $"term").limit(n).select("term")
 
-  // the crash debris of an append that died before its commit: the
-  // batch's postings segment, and a half-written `.tmp-` manifest
+  // the crash debris of an append that died before its commit: a segment
+  // of the batch's rows, and a half-written `.tmp-` manifest
   private def plantUncommittedAppend(batch: org.apache.spark.sql.DataFrame, dir: String): Unit =
-    graft.queries.OperatorQueries.plantUncommittedBm25Append(spark, batch, dir)
+    graft.queries.OperatorQueries.plantUncommittedAppend(spark, batch, dir)
 
   private def orphanSegment(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
     df.write.parquet(s"$dir/_segments/orphan-${java.util.UUID.randomUUID().toString.take(8)}")

@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * schemas and segment statistics come from parquet footers on the
   * driver, so building a read's DataFrame runs no Spark job, a store
   * commit runs one write job per non-empty table and nothing else, and a
-  * replayed `appendOnce` runs none. At the data sizes these paths serve,
-  * every extra job is a fixed driver round trip, so a budget that grows
-  * is a regression even when results stay equal. */
+  * replayed `appendOnce` or aggregate-state fold runs none. At the data
+  * sizes these paths serve, every extra job is a fixed driver round trip,
+  * so a budget that grows is a regression even when results stay equal. */
 class StoreJobBudgetSpec extends AnyFunSuite {
   import graft.TestSpark._
   import spark.implicits._
@@ -91,5 +91,23 @@ class StoreJobBudgetSpec extends AnyFunSuite {
     assert(jobs(VersionedStore.appendOnce(spark, dir, Map("t" -> rows(10, 20)), "b0")) == 1)
     val (v, n) = jobsOf(VersionedStore.appendOnce(spark, dir, Map("t" -> rows(10, 20)), "b0"))
     assert(n == 0 && v == 2L)
+  }
+
+  test("the aggregate state: a replayed fold runs no job, a new one only its segment writes") {
+    val dir = scratch("jb_agg_ops")
+    val li = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L)).toDF("k", "g", "v")
+    val (g, v) = (Seq("g"), Seq("v"))
+    AggState.writeAggState(li, dir, g, v)
+    // the state segment (its partial aggregate's shuffle stage, then the
+    // write) and the one-row tags segment; the tag lookup reads on the
+    // driver
+    assert(jobs(AggState.foldAggState(li, dir, "b1", g, v)) == 3)
+    assert(jobs(AggState.foldAggState(li, dir, "b1", g, v)) == 0)
+    // compaction: the merge's shuffle stage and write, and the tags
+    // rewrite; retraction: two filtered rewrites
+    assert(jobs(AggState.compactAggState(spark, dir, g, v)) == 3)
+    AggState.foldAggState(li, dir, "b2", g, v)
+    assert(jobs(AggState.retractAggState(spark, dir, "b2", g, v)) == 2)
+    assert(jobs(AggState.readAggState(spark, dir, g, v)) == 0)
   }
 }
