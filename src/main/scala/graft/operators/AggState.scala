@@ -102,12 +102,6 @@ object AggState {
   private def statusOf(snap: VersionedStore.Snapshot, tag: String): Option[String] =
     snap.driverRows("tags", "tag", "status").collectFirst { case Seq(`tag`, s) => s }
 
-  // a build, compaction or retraction supersedes every stored segment;
-  // reclaim them right away, as a rebuild in place always has (a handle
-  // read before the commit must be re-read)
-  private def reclaim(spark: SparkSession, dir: String): Unit =
-    VersionedStore.vacuum(spark, dir, keepLast = 1)
-
   /** Deterministic per-batch partials: the one aggregation spelling shared
     * by the base build, every fold, and the read-side merge's oracle —
     * DECIMAL sums so a recomputed batch yields bit-identical rows. */
@@ -138,10 +132,8 @@ object AggState {
       "state" -> partials(df, groupCols, valueCols, BaseTag),
       "tags" -> tagRow(spark, BaseTag))
     IndexFiles.withWriteLease(spark, dir, "writeAggState") {
-      if (VersionedStore.versionNumbers(spark, dir).isEmpty)
-        VersionedStore.create(spark, dir, tables, note = "writeAggState")
-      else VersionedStore.rewrite(spark, dir, note = "writeAggState")(_ => tables)
-      reclaim(spark, dir)
+      VersionedStore.build(spark, dir, tables, "writeAggState")
+      VersionedStore.reclaim(spark, dir)
     }
     readAggState(spark, dir, groupCols, valueCols)
   }
@@ -207,7 +199,7 @@ object AggState {
           "tags" -> cur("tags").withColumn("status",
             when(col("status") === Folded, lit(Sealed)).otherwise(col("status"))))
       }
-      reclaim(spark, dir)
+      VersionedStore.reclaim(spark, dir)
     }
     readAggState(spark, dir, groupCols, valueCols)
   }
@@ -249,7 +241,7 @@ object AggState {
             "tags" -> cur("tags").withColumn("status",
               when(col("tag") === batchTag, lit(Retracted)).otherwise(col("status"))))
         }
-        reclaim(spark, dir)
+        VersionedStore.reclaim(spark, dir)
       }
     }
     readAggState(spark, dir, groupCols, valueCols)

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
 
 /** The ONE copy of the crash-sensitive filesystem protocol shared by every
   * persisted family still on the rename swap (the MinHash near-dup and
-  * cluster state, the residual IVF-PQ index — the BM25 index and the
-  * aggregate state live on [[VersionedStore]]), plus the write lease and
+  * cluster state — the BM25 index, the aggregate state and the residual
+  * IVF-PQ index live on [[VersionedStore]]), plus the write lease and
   * sidecar IO every family uses: staged-and-swap table rewrites, read-side
   * recovery from an interrupted swap, small sidecar file IO. Six
   * hand-rolled copies of rename choreography is how object-store fixes
@@ -296,7 +296,9 @@ private[operators] object IndexFiles {
     *     `ttlMs` (default 30 min — far past any single maintenance call
     *     here). A crashed writer's lease ages out and the next writer
     *     takes over with a loud stderr note (crash-age override); a
-    *     writer that THROWS releases its lease in the finally. An
+    *     writer that THROWS releases its lease on the way out. A failed
+    *     release after a body that returned is logged
+    *     (`lease.release_failed`), not thrown: the change has landed. An
     *     unparseable lease (a writer crashed mid-acquisition) falls back
     *     to file mtime for staleness, so it too ages out instead of
     *     bricking the directory.
@@ -327,16 +329,28 @@ private[operators] object IndexFiles {
     // deletion is gated on actually having acquired: a FAILED acquisition
     // (fresh foreign lease) must never delete the other writer's lease
     var acquired = false
-    try {
-      if (first) { acquireLease(spark, dir, what, ttlMs); acquired = true }
-      body
-    } finally {
+    def release(): Unit = {
       val left = held.merge(key, -1, (a, b) => a + b)
       if (left <= 0) {
         held.remove(key)
         if (acquired) deleteMarker(spark, dir, LeaseFile)
       }
     }
+    val out = try {
+      if (first) { acquireLease(spark, dir, what, ttlMs); acquired = true }
+      body
+    } catch { case e: Throwable =>
+      try release() catch { case r: Throwable => e.addSuppressed(r) }
+      throw e
+    }
+    // the body returned, so its change stands: a lease the delete leaves
+    // behind is this process's (its next writer takes it over) and ages
+    // out for any other — a committed call must not report a failure
+    try release() catch { case scala.util.control.NonFatal(e) =>
+      OpLog.warn("lease.release_failed", s"$what: could not delete $LeaseFile at " +
+        s"$dir (${e.getMessage}); it ages out after its TTL")
+    }
+    out
   }
 
   private def acquireLease(spark: SparkSession, dir: String, what: String,
@@ -380,11 +394,14 @@ private[operators] object IndexFiles {
       takeoverStale(f, dir, what, bytes)
     }
     // exclusive create (atomic on HDFS/POSIX): a racer that re-created the
-    // file first wins and this writer fails loudly
+    // file first wins and this writer fails loudly; any other I/O failure
+    // is reported as what it is
     val out = try f.create(p, false) catch {
-      case e: java.io.IOException => throw new IllegalStateException(
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException => throw new IllegalStateException(
         s"$what: lost the write-lease race at $dir — another writer " +
-          s"created $LeaseFile concurrently (${e.getMessage})")
+          s"created $LeaseFile concurrently (${e.getMessage})", e)
+      case e: java.io.IOException => throw new java.io.IOException(
+        s"$what: could not create $LeaseFile at $dir (${e.getMessage})", e)
     }
     try out.write(
       (s"""{"owner":"$processOwner","epochMs":$now,""" +

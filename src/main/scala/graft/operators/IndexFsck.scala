@@ -21,10 +21,10 @@ import org.apache.spark.sql.functions._
   * compacted 100 TB index costs an index scan, not a corpus scan.
   *
   * What `violations` means per check (0 = invariant holds):
-  *   - bm25, agg_state — the BM25 index and the aggregate state are
-  *     [[VersionedStore]]s (one commit per mutation, so their two tables
-  *     cannot disagree): their checks are exactly the versioned ones
-  *     below, reported under the family name.
+  *   - bm25, agg_state, ivf_pq — the BM25 index, the aggregate state and
+  *     the residual IVF-PQ index are [[VersionedStore]]s (one commit per
+  *     mutation, so their tables cannot disagree): their checks are
+  *     exactly the versioned ones below, reported under the family name.
   *   - minhash/sig_band_id_mismatch — ids present in exactly one of the
   *     sigs/bands tables (a torn append: the two tables must cover the
   *     same documents or band candidates lose their verify rows — and
@@ -47,21 +47,11 @@ import org.apache.spark.sql.functions._
   *     crash-retried fold append; the keeper map must be a FUNCTION of
   *     doc_id — conflicting duplicates make every downstream relabel
   *     nondeterministic).
-  *   - ivf_pq/wrong_subspace_count — vector ids with a code-row count
-  *     other than the stored geometry's m (a partial code write, or an
-  *     id re-encoded under a different cell — the state compaction can
-  *     NOT repair; drop the id and re-append).
-  *   - ivf_pq/cell_out_of_range — code rows referencing a cell absent
-  *     from the centroid table (mixed-build state).
-  *   - ivf_pq/duplicate_codes — surplus (id, cell, subspace) rows (a
-  *     retried append; doubles summed ADC distances). Keyed exactly like
-  *     `compactIvfPqResidualIndex`'s dedup, so this check and its named
-  *     repair agree: what fsck flags here, compaction fixes.
   *
-  * One real corruption often trips SEVERAL checks (a half-written code
-  * batch is both wrong_subspace_count and possibly cell_out_of_range) —
-  * that is signal, not double-counting: each row states which invariant
-  * is broken. Repairs are the families' own maintenance calls (compact /
+  * One real corruption often trips SEVERAL checks (a torn MinHash append
+  * is both a sig/band id mismatch and possibly a wrong band count) — that
+  * is signal, not double-counting: each row states which invariant is
+  * broken. Repairs are the families' own maintenance calls (compact /
   * repair / re-run the interrupted operation), named above per check. */
 object IndexFsck {
 
@@ -235,25 +225,8 @@ object IndexFsck {
       .toDF("family", "check", "violations")
     }
 
-  /** The three residual-IVF-PQ invariants; m comes from the stored
-    * `_meta.json` (geometry is a build property, never a parameter). */
-  def checkIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val m = Similarity.IvfPqMeta.read(spark, dir).map(_.m).getOrElse(
-      throw new IllegalArgumentException(
-        s"IndexFsck.checkIvfPq: no _meta.json at $dir — not a tagged " +
-          "residual IVF-PQ index directory"))
-    val idx = Similarity.IvfPqResidualIndex.read(spark, dir)
-    val wrongCount = idx.codes.groupBy("__cid")
-      .agg(count(lit(1)).as("n")).filter(col("n") =!= m)
-    val badCell = idx.codes.join(
-      idx.cent.select(col("cid").as("cell")), Seq("cell"), "left_anti")
-    checkRow("ivf_pq", "wrong_subspace_count", wrongCount)
-      .unionAll(checkRow("ivf_pq", "cell_out_of_range", badCell))
-      // keyed (__cid, cell, s) — exactly compactIvfPqResidualIndex's
-      // dedup key, so the flagged rows are the ones the named repair
-      // collapses (a re-encoded id under a DIFFERENT cell is not a
-      // duplicate; it shows as wrong_subspace_count instead)
-      .unionAll(surplusRow("ivf_pq", "duplicate_codes",
-        idx.codes, Seq("__cid", "cell", "s")))
-  }
+  /** The residual IVF-PQ index's invariants: [[checkVersionedStore]] over
+    * its store, under the ivf_pq family name. */
+  def checkIvfPq(spark: SparkSession, dir: String): DataFrame =
+    checkVersionedStore(spark, dir).withColumn("family", lit("ivf_pq"))
 }

@@ -16,11 +16,10 @@ import org.apache.spark.sql.functions._
   * Two repair classes, stated per check:
   *   - HEALABLE from the stored state alone — duplicate rows collapse
   *     (the crash-retried-append shape), uncommitted store writes (BM25,
-  *     aggregate state) vacuum away, torn cluster relabels re-solve.
-  *     These end repaired-and-complete.
-  *   - DROP-AND-REAPPEND — a document/vector whose index rows are
-  *     PARTIAL (a torn append: sigs without bands, three of m subspace
-  *     rows, codes against a vanished cell). The missing half exists only
+  *     aggregate state, IVF-PQ) vacuum away, torn cluster relabels
+  *     re-solve. These end repaired-and-complete.
+  *   - DROP-AND-REAPPEND — a MinHash document whose index rows are
+  *     PARTIAL (a torn append: sigs without bands). The missing half exists only
   *     in the source corpus, which this module never reads (repairs are
   *     index-sized at any corpus scale), so the id's surviving rows are
   *     dropped to restore consistency and the id is REPORTED via the
@@ -38,9 +37,10 @@ import org.apache.spark.sql.functions._
   * What repair does NOT do: re-derive data from the corpus (re-append is
   * the caller's move, with corpus access), retry a fold or append that
   * crashed before its commit (its debris is vacuumed; the retry is the
-  * caller's), or recover a torn rebuild (`_rebuild_intent` survivors are
-  * mixed-incarnation states only the original rebuild can finish — every
-  * entry point here refuses them, same as the families' own reads). */
+  * caller's), or recover a torn MinHash rebuild (`_rebuild_intent`
+  * survivors are mixed-incarnation states only the original rebuild can
+  * finish — every entry point here refuses them, same as the family's own
+  * reads). A store family has no torn rebuild: its build is one commit. */
 object IndexRepair {
 
   private def report(spark: SparkSession,
@@ -58,7 +58,7 @@ object IndexRepair {
       .agg(coalesce(sum(col("n") - 1), lit(0L)).as("s"))
       .collect().head.getLong(0)
 
-  // ------------------------------------------------- BM25 and agg state
+  // -------------------------------------- BM25, agg state and IVF-PQ
 
   /** A store family's repair: its store can only hold the crash debris of
     * an uncommitted write (orphan segments, `.tmp-` manifests — fsck's
@@ -83,6 +83,12 @@ object IndexRepair {
     * after the repair folds it. */
   def repairAggState(spark: SparkSession, dir: String): DataFrame =
     vacuumStore(spark, "agg_state", dir)
+
+  /** Repair a persisted residual IVF-PQ index ([[IndexFsck.checkIvfPq]]).
+    * An append that crashed before its commit added no codes, so its
+    * retry after the repair appends them. */
+  def repairIvfPqIndex(spark: SparkSession, dir: String): DataFrame =
+    vacuumStore(spark, "ivf_pq", dir)
 
   // -------------------------------------------------------------- MinHash
 
@@ -167,93 +173,4 @@ object IndexRepair {
     cc.unionAll(singletons)
   }
 
-  // ---------------------------------------------------------- residual IVF-PQ
-
-  /** Vector ids whose stored code rows are PARTIAL or mixed-build — after
-    * collapsing retried duplicates (dedup key (id, cell, subspace)) and
-    * dropping rows whose cell is absent from the centroid table, the id
-    * does not have exactly one row per subspace 0..m-1. ADC sums per-
-    * subspace distances, so a partial id scores on a truncated sum and
-    * ranks garbage — unhealable without the raw vector: drop via
-    * [[repairIvfPqIndex]] and re-append these ids through
-    * [[Similarity.appendIvfPqResidualIndex]]. */
-  def ivfPqInconsistentIds(spark: SparkSession, dir: String): DataFrame = {
-    val m = Similarity.IvfPqMeta.read(spark, dir).map(_.m).getOrElse(
-      throw new IllegalArgumentException(
-        s"ivfPqInconsistentIds: no _meta.json at $dir — not a tagged " +
-          "residual IVF-PQ index directory"))
-    val idx = Similarity.IvfPqResidualIndex.read(spark, dir)
-    idx.codes.dropDuplicates("__cid", "cell", "s")
-      .join(idx.cent.select(col("cid").as("cell")), Seq("cell"), "left_semi")
-      .groupBy(col("__cid"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("nd"))
-      // right-join against ALL stored ids so an id whose every row was
-      // out-of-range (count 0 after the semi join) is still flagged
-      .join(idx.codes.select(col("__cid")).distinct(), Seq("__cid"), "right")
-      .filter(col("n").isNull || col("n") =!= m || col("nd") =!= m)
-      .select(col("__cid"))
-  }
-
-  /** Repair a persisted residual IVF-PQ index: collapse retried-duplicate
-    * code rows (exactly [[Similarity.compactIvfPqResidualIndex]]'s dedup
-    * key), drop rows referencing a cell absent from the centroid table
-    * (mixed-build state — scoring them would use residuals against
-    * centroids they were never quantized under), then drop the ids left
-    * without a complete subspace set (report `dropped_ids_for_reappend`;
-    * obtain the set via [[ivfPqInconsistentIds]] BEFORE repairing if you
-    * plan to re-append). One staged swap of the codes table; centroids
-    * and codebooks are frozen statistics the repair never touches. */
-  def repairIvfPqIndex(spark: SparkSession, dir: String): DataFrame =
-    IndexFiles.withWriteLease(spark, dir, "repairIvfPqIndex") {
-      val m = Similarity.IvfPqMeta.read(spark, dir).map(_.m).getOrElse(
-        throw new IllegalArgumentException(
-          s"repairIvfPqIndex: no _meta.json at $dir — not a tagged " +
-            "residual IVF-PQ index directory"))
-      val idx = Similarity.IvfPqResidualIndex.read(spark, dir)
-      val cells = idx.cent.select(col("cid").as("cell"))
-      // ONE dedup shuffle, materialized: the counts, the drop-set, and the
-      // staged rewrite below all derive from this checkpoint — without it
-      // the repair re-scans and re-shuffles the full codes table four
-      // times, an index-sized cost ×4 at the 100 TB scale this module
-      // advertises. Consistent under the lease: no writer can move the
-      // live table between the checkpoint and the swap.
-      val deduped = idx.codes.dropDuplicates("__cid", "cell", "s")
-        .localCheckpoint()
-      // declared outside the try so the finally can free it: being
-      // referenced by the staged rewrite's plan does NOT release a
-      // checkpoint's blocks (stagedSwap has no sweep of its own — the
-      // r13 comment claiming otherwise leaked one block set per call,
-      // the exact VERDICT r12 #1 class; ADVICE r13)
-      var bad: DataFrame = null
-      try {
-        val dupRows = cnt(idx.codes) - cnt(deduped)
-        val inRange = deduped.join(cells, Seq("cell"), "left_semi")
-        val rangeDropped = cnt(deduped) - cnt(inRange)
-        // same arithmetic as ivfPqInconsistentIds, from the checkpoint (the
-        // spec pins the two against each other); dedup removes only
-        // duplicate rows, so deduped's id set equals the raw table's
-        bad = inRange
-          .groupBy(col("__cid"))
-          .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("nd"))
-          .join(deduped.select(col("__cid")).distinct(), Seq("__cid"), "right")
-          .filter(col("n").isNull || col("n") =!= m || col("nd") =!= m)
-          .select(col("__cid"))
-          .localCheckpoint()
-        val nBad = cnt(bad)
-        IndexFiles.stagedSwap(spark, dir, "codes") { _ =>
-          // the checkpoint IS the current live table (lease-held since the
-          // read), so the rewrite ignores the re-read handle
-          inRange.join(bad, Seq("__cid"), "left_anti")
-        }
-        report(spark, Seq(
-          ("ivf_pq", "collapsed_duplicate_code_rows", dupRows),
-          ("ivf_pq", "dropped_out_of_range_rows", rangeDropped),
-          ("ivf_pq", "dropped_ids_for_reappend", nBad)))
-      } finally {
-        // swap committed — bad's last consumers (the nBad count and the
-        // staged write) have completed
-        if (bad != null) Checkpoints.free(deduped, bad)
-        else Checkpoints.free(deduped)
-      }
-    }
 }

@@ -117,12 +117,6 @@ object Retrieval {
   private def termSharded(postings: DataFrame, termShards: Int): DataFrame =
     postings.repartition(termShards, col("term")).sortWithinPartitions("term")
 
-  // a build or compaction supersedes every stored segment; reclaim them
-  // right away, as a rebuild in place always has (a handle read before
-  // the commit must be re-read)
-  private def reclaim(spark: SparkSession, dir: String): Unit =
-    VersionedStore.vacuum(spark, dir, keepLast = 1)
-
   /** Build AND persist the BM25 index: one corpus tokenize feeds both
     * aggregations (two corpus scans total — postings and doclens are
     * independent aggregates of the same explode; at build-once scale the
@@ -147,10 +141,8 @@ object Retrieval {
       // no version (reads fail loudly) or the previous build under the
       // same tag
       Bm25Meta.write(spark, dir, Bm25Meta(TokenizerWs1))
-      if (VersionedStore.versionNumbers(spark, dir).isEmpty)
-        VersionedStore.create(spark, dir, tables, note = "writeBm25Index")
-      else VersionedStore.rewrite(spark, dir, note = "writeBm25Index")(_ => tables)
-      reclaim(spark, dir)
+      VersionedStore.build(spark, dir, tables, "writeBm25Index")
+      VersionedStore.reclaim(spark, dir)
     }
     Bm25Index.read(spark, dir)
   }
@@ -243,7 +235,7 @@ object Retrieval {
         Map("doclens" -> live(cur("doclens")),
           "postings" -> termSharded(live(cur("postings")), termShards))
       }
-      reclaim(spark, dir)
+      VersionedStore.reclaim(spark, dir)
     }
     Bm25Index.read(spark, dir)
   }

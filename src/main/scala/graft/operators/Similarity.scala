@@ -363,14 +363,13 @@ object Similarity {
     * BIGINT micro units before the final integer sum.
     *
     * Scale: identical shape to [[ivfPqTopK]] — centroid/codebook/ADC tables
-    * all bounded broadcasts, corpus touched once to assign + once to code,
-    * candidates shuffle only within the probe's cell. A deployment
-    * persists the build half — `cent` (K rows), `codebook` (m·2^pqBits
-    * rows), `codes` (N·m rows) — and runs only the query half per batch;
-    * composed build+query in one DAG re-evaluates the build at each
-    * consumer, which the fixture-scale demo tolerates (SCALING §8b: an
-    * inline checkpoint was measured SLOWER at sf0.1/sf1 — concurrent
-    * re-evaluation beats serialized materialization on a small corpus).
+    * all bounded broadcasts, corpus touched once to build the centroids +
+    * once to assign and encode, candidates shuffle only within the probe's
+    * cell. This is the one-call demo of the build/query split: the build
+    * ([[buildIvfPqResidualIndex]]'s stages) checkpoints each stage once
+    * (`localCheckpoint`), then [[queryIvfPqResidual]] runs on it. A
+    * deployment persists the build instead ([[writeIvfPqResidualIndex]])
+    * and runs only the query half per batch.
     *
     * `nProbe` — multi-probe: each query builds one residual + ADC table
     * PER probed cell (its nProbe nearest — the canonical IVFADC
@@ -391,80 +390,28 @@ object Similarity {
     * pruning); richer codes m=16/pqBits=8 (16-byte codes, 16x
     * compression) reach 71.5% there, and rerank=200 recovers the
     * nProbe=8 cell ceiling (74.8%) EXACTLY — the canonical IVFADC+R
-    * result: spend bits or spend re-ranking, the ceiling is the cells. */
+    * result: spend bits or spend re-ranking, the ceiling is the cells.
+    *
+    * PRECONDITION: corpus ids unique (see [[buildIvfPqResidualIndex]]). */
   def ivfPqResidualTopK(corpus: DataFrame, probes: DataFrame, idCol: String,
                         vecCol: String, k: Int = 10, nBits: Int = 4,
                         dim: Int = 64, m: Int = 8, pqBits: Int = 4,
-                        nProbe: Int = 1, rerank: Int = 0,
-                        materialize: Boolean = true): DataFrame = {
-    // materialize=true (default): each training stage materializes ONCE
-    // (eager localCheckpoint) and the next stage builds on the
-    // materialized table — the naive composed plan re-evaluated the
-    // build at every consumer (32+ corpus scans in one query DAG at
-    // fixture scale, measured; the r9-adjudicated trade this replaces).
-    // Measured A/B at sf0.1: the standalone ADC and IVFADC+R queries run
-    // ~30% faster materialized, but a consumer that immediately JOINS
-    // this output against another arm over the same corpus (the recall
-    // audit) ran ~2.5x FASTER composed — runtime exchange reuse shares
-    // the training subplans across the one DAG there, and the serialized
-    // checkpoint jobs only cost. Hence the knob; both spellings are
-    // bit-identical (every stage deterministic — the DuckDB oracle
-    // replays the exact arithmetic). The caller frees the checkpoint
-    // blocks after its terminal action (the bench/verify harnesses sweep
-    // them per query); the persisted build/serve split
-    // (writeIvfPqResidualIndex) remains the 100 TB deployment shape.
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    graft.functions.TajoFunctions.register(corpus.sparkSession)
-    if (!materialize)
-      queryIvfPqResidual(
-        buildIvfPqResidualIndex(corpus, idCol, vecCol, nBits, dim, m, pqBits),
-        corpus, probes, idCol, vecCol, k, dim, m, nProbe, rerank)
-    else {
-      val subDim = dim / m
-      val c0 = ivfInitial(corpus, idCol, vecCol, nBits, dim)
-      val cent = ivfCentTable(c0).localCheckpoint()
-      val corpusCells = ivfAssign(c0, cent, idCol)
-      val cres = ivfResid(corpus, corpusCells, cent, idCol, vecCol, "__cid")
-      val csubs = pqResidSubs(cres, "__cid", m, subDim).localCheckpoint()
-      val codebook = ivfResidCodebook(csubs, pqBits, subDim).localCheckpoint()
-      val codes = ivfResidCodes(csubs, codebook).localCheckpoint()
-      // csubs' last consumer is codes' (eager) checkpoint above, and it is
-      // NOT reachable from the returned plan (only cent/codebook/codes
-      // are) — without this free even a caller sweep of the result's plan
-      // would strand its corpus-sized blocks (ADVICE r13). The surviving
-      // three checkpoints ARE the returned plan; the caller's terminal
-      // action frees them (the bench/verify harnesses sweep
-      // sparkContext.getPersistentRDDs per query).
-      Checkpoints.free(csubs)
-      queryIvfPqResidual(IvfPqResidualIndex(cent, codebook, codes),
-        corpus, probes, idCol, vecCol, k, dim, m, nProbe, rerank)
-    }
+                        nProbe: Int = 1, rerank: Int = 0): DataFrame = {
+    // each stage is checkpointed ONCE (eager localCheckpoint) and the next
+    // builds on it: the lazy composed plan re-evaluated the build at every
+    // consumer (32+ corpus scans in one query DAG at fixture scale,
+    // measured). The residual stage is not reachable from the returned
+    // plan, so it is freed once codes is; the three surviving checkpoints
+    // ARE the returned plan, freed by the caller after its terminal action
+    // (the bench and verify harnesses sweep them per query). A consumer
+    // that joins this output against another arm over the same corpus
+    // (the recall audit) composes the lazy build with the query instead:
+    // exchange reuse shares its stages across the one DAG.
+    val index = ivfPqBuild(corpus, idCol, vecCol, nBits, dim, m, pqBits)(
+      (_, df) => df.localCheckpoint(), Checkpoints.free(_))
+    queryIvfPqResidual(index, corpus, probes, idCol, vecCol, k, dim, m, nProbe, rerank)
   }
 
-  /** The PERSISTED half of a residual IVF-PQ (IVFADC) index — the
-    * build/query split SCALING §8b prescribes for deployment (build once,
-    * store, query many times; the composed [[ivfPqResidualTopK]] demo
-    * materializes each training stage once via localCheckpoint — same
-    * single-evaluation shape, ephemeral storage instead of parquet):
-    *
-    *  - `cent`:     K rows — (cid, ivec SUM-centroid, mvec mean-centroid,
-    *                inrm) — the cell router + residual base
-    *  - `codebook`: m·2^pqBits rows — (s, cid, cvec) per-subspace
-    *                residual centroids
-    *  - `codes`:    N·m rows — (__cid, cell, s, code), the compressed
-    *                corpus itself
-    *
-    * All three are plain DataFrames of parquet-serializable columns
-    * (BIGINTs, BIGINT arrays, one double) — `write(dir)` / `read(spark,
-    * dir)` round-trip them exactly, so a query against a re-read index is
-    * bit-identical to one against the freshly built tables
-    * (`OperatorsSpec` pins that equality end to end).
-    *
-    * To build AND store from a corpus, use [[writeIvfPqResidualIndex]]:
-    * `write` below runs three independent actions, so on LAZY tables each
-    * re-evaluates its shared upstream (codes' lineage contains codebook's
-    * contains cent's — ~3x the corpus reads); the staged writer persists
-    * each artifact once and derives the next from storage. */
   /** Build parameters of a persisted [[IvfPqResidualIndex]], stamped into
     * `dir/_meta.json` by [[writeIvfPqResidualIndex]] — the same
     * quiet-failure guard as [[graft.operators.Dedup.MinhashMeta]]: an
@@ -474,13 +421,13 @@ object Similarity {
 
   object IvfPqMeta {
     def write(spark: SparkSession, dir: String, m: IvfPqMeta): Unit =
-      graft.operators.IndexFiles.writeFileSwap(spark, dir, "_meta.json",
+      IndexFiles.writeFileSwap(spark, dir, "_meta.json",
         s"""{"nBits":${m.nBits},"dim":${m.dim},"m":${m.m},"pqBits":${m.pqBits}}"""
           .getBytes("UTF-8"))
 
-    /** None for a pre-meta (legacy) index directory. */
+    /** None for a directory that holds no tag. */
     def read(spark: SparkSession, dir: String): Option[IvfPqMeta] =
-      graft.operators.IndexFiles.readFileWithRecovery(spark, dir, "_meta.json")
+      IndexFiles.readFileWithRecovery(spark, dir, "_meta.json")
         .map { bytes =>
           val j = org.json4s.jackson.JsonMethods.parse(new String(bytes, "UTF-8"))
           def int(name: String): Int = (j \ name) match {
@@ -492,26 +439,32 @@ object Similarity {
         }
   }
 
+  /** A residual IVF-PQ (IVFADC) index — the build half of the build/query
+    * split SCALING §8b prescribes (build once, query many times):
+    *
+    *  - `cent`:     K rows — (cid, ivec SUM-centroid, mvec mean-centroid,
+    *                inrm) — the cell router + residual base
+    *  - `codebook`: m·2^pqBits rows — (s, cid, cvec) per-subspace
+    *                residual centroids
+    *  - `codes`:    N·m rows — (__cid, cell, s, code), the compressed
+    *                corpus itself
+    *
+    * Persisted, `dir/` is a [[VersionedStore]] with these three tables,
+    * plus the geometry tag [[IvfPqMeta]] beside it. A build, an append and
+    * a compaction are each ONE commit, so the three tables always come
+    * from the same version: a crashed writer leaves only an orphan segment
+    * or a `.tmp-` manifest, invisible to every read, reported by
+    * [[IndexFsck.checkIvfPq]] and reclaimed by [[IndexRepair.repairIvfPqIndex]]
+    * (a vacuum). All three are plain parquet-serializable columns (BIGINTs,
+    * BIGINT arrays, one double), so a query against a re-read index is
+    * bit-identical to one against the freshly built tables (`OperatorsSpec`
+    * pins that equality end to end). */
   final case class IvfPqResidualIndex(cent: DataFrame, codebook: DataFrame,
                                       codes: DataFrame,
                                       meta: Option[IvfPqMeta] = None) {
-    def write(dir: String): Unit =
-      graft.operators.IndexFiles.withWriteLease(
-          cent.sparkSession, dir, "IvfPqResidualIndex.write") {
-        // rebuild bracket: the three overwrites are only consistent as a
-        // set (see IvfPqResidualIndex.read's torn-rebuild check)
-        graft.operators.IndexFiles.createMarker(
-          cent.sparkSession, dir, "_rebuild_intent")
-        cent.write.mode("overwrite").parquet(s"$dir/cent")
-        codebook.write.mode("overwrite").parquet(s"$dir/codebook")
-        codes.write.mode("overwrite").parquet(s"$dir/codes")
-        graft.operators.IndexFiles.deleteMarker(
-          cent.sparkSession, dir, "_rebuild_intent")
-      }
-
     /** Fail loudly when the caller's (dim, m) disagree with the stored
       * build geometry — a mismatch silently mis-slices residual subspaces.
-      * No-op for an untagged in-memory/legacy index. */
+      * No-op for an untagged in-memory index. */
     def requireGeometry(dim: Int, m: Int): Unit = meta.foreach { stored =>
       require(stored.dim == dim && stored.m == m,
         s"IvfPqResidualIndex geometry mismatch: stored (dim=${stored.dim}, " +
@@ -522,54 +475,36 @@ object Similarity {
   }
 
   object IvfPqResidualIndex {
-    /** Read a persisted index. Performs the same read-side crash recovery
-      * as [[graft.operators.Dedup.MinhashIndex.read]]: if a table's live
-      * directory is missing but its `_*_old` sibling exists (an
-      * interrupted [[compactIvfPqResidualIndex]] swap), the pre-compaction
-      * table is renamed back into place. */
+    /** Read the latest committed version and its geometry tag. */
     def read(spark: SparkSession, dir: String): IvfPqResidualIndex = {
-      // a rebuild-in-place that crashed between the cent/codebook/codes
-      // overwrites pairs new quantizers with the previous build's codes —
-      // every ANN query would score against centroids the stored codes
-      // were never quantized under, silently; only the surviving intent
-      // marker distinguishes that mixed-build state
-      require(!graft.operators.IndexFiles.markerExists(spark, dir, "_rebuild_intent"),
-        s"IvfPqResidualIndex.read: torn rebuild at $dir (its _rebuild_intent " +
-          "marker survived a crash) — cent/codebook/codes may be from " +
-          "different builds; re-run the build, or build into a fresh directory")
-      Seq("cent", "codebook", "codes").foreach(
-        graft.operators.IndexFiles.recoverInterruptedSwap(
-          spark, dir, _, "IvfPqResidualIndex.read"))
-      IvfPqResidualIndex(
-        graft.operators.IndexFiles.readParquet(spark, s"$dir/cent"),
-        graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook"),
-        graft.operators.IndexFiles.readParquet(spark, s"$dir/codes"),
-        IvfPqMeta.read(spark, dir))
+      val snap = VersionedStore.snapshot(spark, dir)
+      val meta = IvfPqMeta.read(spark, dir).getOrElse(throw new IllegalArgumentException(
+        s"IvfPqResidualIndex: no _meta.json at $dir — not an IVF-PQ index directory"))
+      IvfPqResidualIndex(snap.table("cent"), snap.table("codebook"), snap.table("codes"),
+        Some(meta))
     }
   }
 
   /** Compact a stored residual IVF-PQ index: drop tombstoned vector ids
     * (deleted from the corpus — their codes would keep surfacing as
-    * neighbors forever) and collapse duplicate code rows left by a
-    * retried [[appendIvfPqResidualIndex]] (duplicates are NOT harmless
-    * here: ADC sums per-subspace distances, so a duplicated vector's
-    * l2_micro doubles and its ranking corrupts — compaction restores it).
+    * neighbors forever) and merge the appended segments into one.
     * Centroids and codebooks stay FROZEN: they are statistics of the
     * training corpus, not of live membership, so deletes never retrain
     * (same drift/rebuild contract as append). Only the codes table
     * rewrites — index-sized (4 BIGINT-ish columns per (vector, subspace)),
-    * never raw vectors — staged to `_codes_compact` and swapped in via
-    * two renames, with the same crash-recovery-at-read,
-    * NOT-concurrent-with-appends, re-read-after-compaction, and
-    * object-store rename caveats as
-    * [[graft.operators.Dedup.compactMinhashIndex]]. */
+    * never raw vectors — as ONE store rewrite, then the superseded
+    * segments are reclaimed (a handle read before the commit must be
+    * re-read). Dropping every vector is refused (the store refuses an
+    * empty table). */
   def compactIvfPqResidualIndex(spark: SparkSession, dir: String,
                                 dropIds: Option[DataFrame] = None,
                                 idCol: String = "vec_id"): IvfPqResidualIndex = {
-    graft.operators.IndexFiles.stagedSwap(spark, dir, "codes") { current =>
-      dropIds.fold(current)(ids => current.join(
-          ids.select(col(idCol).as("__cid")).distinct(), Seq("__cid"), "left_anti"))
-        .dropDuplicates("__cid", "cell", "s")
+    IndexFiles.withWriteLease(spark, dir, "compactIvfPqResidualIndex") {
+      VersionedStore.rewrite(spark, dir, note = "compactIvfPqResidualIndex") { cur =>
+        Map("codes" -> dropIds.fold(cur("codes"))(ids => cur("codes").join(
+          ids.select(col(idCol).as("__cid")), Seq("__cid"), "left_anti")))
+      }
+      VersionedStore.reclaim(spark, dir)
     }
     IvfPqResidualIndex.read(spark, dir)
   }
@@ -606,6 +541,9 @@ object Similarity {
       .filter(col("__cr") <= n)
       .select(col(idCol), col("cid").as("cell"))
 
+  private val residExpr =
+    "ZIP_WITH(__v, mvec, (x, c) -> CAST(x AS DOUBLE) - CAST(c AS DOUBLE) / 1000000)"
+
   // residuals: x − mean(cell), exact double subtraction of the micro-unit
   // integer mean (one row per (vector, assigned cell) — the probe side
   // carries nProbe rows, each with its own per-cell residual)
@@ -614,9 +552,23 @@ object Similarity {
     .select(col(idCol), col(vecCol).as("__v"))
     .join(cells.withColumnRenamed(idCol, "___ri"), col(idCol) === col("___ri"))
     .join(broadcast(cent.select(col("cid").as("cell"), col("mvec"))), Seq("cell"))
-    .withColumn("rvec", expr(
-      "ZIP_WITH(__v, mvec, (x, c) -> CAST(x AS DOUBLE) - CAST(c AS DOUBLE) / 1000000)"))
+    .withColumn("rvec", expr(residExpr))
     .select(col(idCol).as(as), col("cell"), col("rvec"))
+
+  // the corpus-side residual in ONE scan of a withNorm'd `df`: the vector
+  // rides through the argmax aggregate instead of joining the assignment
+  // back to a second scan (ivfResid's shape, right for the probe side's
+  // nProbe cells). It is functionally dependent on the id, so first() is
+  // deterministic — the unique-id precondition of every build and append
+  private def ivfFusedResid(df: DataFrame, cent: DataFrame, idCol: String): DataFrame =
+    ivfScored(df, cent)
+      .groupBy(col(idCol))
+      .agg(max(struct(col("__score").as("s"), (lit(0) - col("cid")).as("nc"))).as("b"),
+        first(col("__vec")).as("__v"))
+      .select(col(idCol).as("__cid"), (lit(0) - col("b.nc")).as("cell"), col("__v"))
+      .join(broadcast(cent.select(col("cid").as("cell"), col("mvec"))), Seq("cell"))
+      .withColumn("rvec", expr(residExpr))
+      .select(col("__cid"), col("cell"), col("rvec"))
 
   private def pqResidSubs(df: DataFrame, as: String, m: Int, subDim: Int) =
     df.select(col(as), col("cell"),
@@ -629,12 +581,8 @@ object Similarity {
     "(CAST(x AS DOUBLE) - CAST(c AS DOUBLE) / 1000000)), " +
     "CAST(0 AS DOUBLE), (a, v) -> a + v)"
 
-  /** Build the residual IVF-PQ index tables from a corpus — the half a
-    * deployment runs once and persists ([[IvfPqResidualIndex]]). Assignment
-    * by SUM centroids (scale-invariant cosine, identical to [[ivfPqTopK]]),
-    * mean centroids kept alongside for residuals; codebooks over per-cell
-    * residual subvectors; engine-exact fixed-point arithmetic throughout
-    * (see [[ivfPqResidualTopK]]'s determinism notes). */
+  // Assignment by SUM centroids (scale-invariant cosine, identical to
+  // ivfPqTopK), mean centroids kept alongside for residuals
   private def ivfCentTable(c0: DataFrame): DataFrame = c0
     .select(col("__cell0").as("cid"), posexplode(col("__vec")).as(Seq("i", "x")))
     .groupBy("cid", "i")
@@ -663,91 +611,80 @@ object Similarity {
       .agg(min(struct(col("d2"), col("cid"))).as("b"))
       .select(col("__cid"), col("cell"), col("s"), col("b.cid").as("code"))
 
-  def buildIvfPqResidualIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                              nBits: Int = 4, dim: Int = 64, m: Int = 8,
-                              pqBits: Int = 4): IvfPqResidualIndex = {
+  /** The one IVFADC build: centroids, then the residual sub-vectors (the
+    * fused assign+residual scan — the corpus is read twice in all), the
+    * codebook over them, and the codes. `sink(stage, df)` decides how each
+    * stage ("cent", "subs", "codebook", "codes") is held before the next
+    * reads it — lazily, checkpointed, or written to storage; `release`
+    * gets the residual stage once `codes`, its last consumer, has been
+    * sunk. Engine-exact fixed-point arithmetic throughout (see
+    * [[ivfPqResidualTopK]]'s determinism notes). */
+  private def ivfPqBuild(corpus: DataFrame, idCol: String, vecCol: String,
+                         nBits: Int, dim: Int, m: Int, pqBits: Int)
+                        (sink: (String, DataFrame) => DataFrame,
+                         release: DataFrame => Unit = _ => ()): IvfPqResidualIndex = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     graft.functions.TajoFunctions.register(corpus.sparkSession)
     val subDim = dim / m
     val c0 = ivfInitial(corpus, idCol, vecCol, nBits, dim)
-    val cent = ivfCentTable(c0)
-    val corpusCells = ivfAssign(c0, cent, idCol)
-    val cres = ivfResid(corpus, corpusCells, cent, idCol, vecCol, "__cid")
-    val csubs = pqResidSubs(cres, "__cid", m, subDim)
-    val codebook = ivfResidCodebook(csubs, pqBits, subDim)
-    val codes = ivfResidCodes(csubs, codebook)
+    val cent = sink("cent", ivfCentTable(c0))
+    val subs = sink("subs", pqResidSubs(ivfFusedResid(c0, cent, idCol), "__cid", m, subDim))
+    val codebook = sink("codebook", ivfResidCodebook(subs, pqBits, subDim))
+    val codes = sink("codes", ivfResidCodes(subs, codebook))
+    release(subs)
     IvfPqResidualIndex(cent, codebook, codes)
   }
 
-  /** Build AND persist the index with each artifact materialized exactly
-    * once — the true build-once path a deployment runs. The lazy
-    * [[buildIvfPqResidualIndex]] + `index.write(dir)` spelling runs three
-    * independent actions whose lineages nest, costing ~3x the corpus
-    * reads; here each stage writes to storage and the NEXT stage reads the
-    * stored table, so the corpus is scanned exactly twice: once for the
-    * centroid aggregation, once for the `_subs` stage — whose single plan
-    * fuses assignment and residual by carrying the raw vector THROUGH the
-    * argmax aggregate (the composed `ivfResid` instead joins the
-    * assignment back to a second corpus select, which is the right shape
-    * when nothing is staged but a third scan here). Residual sub-vectors
-    * stage under `dir/_subs` and are deleted after; codebook/codes derive
-    * from the staged tables. Returns the index re-read from `dir` —
-    * queries against it are bit-identical to the composed operator
-    * (`OperatorsSpec`): assignment uses the same max-struct tie-break and
-    * the residual the same double arithmetic.
+  /** Build the residual IVF-PQ index tables from a corpus, lazily: every
+    * consumer of the returned tables re-derives them from the corpus, so
+    * it suits one DAG that reads them once (or shares them through
+    * exchange reuse, as the recall audit does). [[writeIvfPqResidualIndex]]
+    * persists the same tables, each stage written once.
     *
     * PRECONDITION: corpus ids must be UNIQUE (same contract as the Dedup
-    * index APIs). The fused assign+residual stage below groups by id and
-    * carries the vector through with first(); under duplicate ids first()
-    * would index an ARBITRARY one of the duplicate vectors, silently
-    * diverging from the composed spelling (which emits one residual per
-    * duplicate row). The bit-identical claim holds only under unique ids. */
+    * index APIs): the residual stage groups by id and carries the vector
+    * through with first(), which under duplicate ids indexes an ARBITRARY
+    * one of the duplicate vectors. */
+  def buildIvfPqResidualIndex(corpus: DataFrame, idCol: String, vecCol: String,
+                              nBits: Int = 4, dim: Int = 64, m: Int = 8,
+                              pqBits: Int = 4): IvfPqResidualIndex =
+    ivfPqBuild(corpus, idCol, vecCol, nBits, dim, m, pqBits)((_, df) => df)
+
+  /** Build AND persist the index — the build-once path a deployment runs.
+    * Each stage is written ONCE as an uncommitted store segment and the
+    * next stage reads it back, so the corpus is scanned exactly twice
+    * (the centroid aggregation, then the fused assign+residual stage);
+    * ONE commit then names the `cent`, `codebook` and `codes` segments —
+    * version 1 of a fresh store, or a rebuild in place — and the reclaim
+    * vacuum deletes the residual segment, which no manifest references,
+    * with the superseded build. `_meta.json` is stamped before the commit.
+    * A rebuild in place keeps the stored geometry (a different one is a
+    * new index: build it into a fresh directory), so a crash between the
+    * stamp and the commit leaves the previous build under its own tag.
+    * Returns the index re-read from `dir` — queries against it are
+    * bit-identical to the composed operator (`OperatorsSpec`).
+    *
+    * PRECONDITION: corpus ids must be UNIQUE (see
+    * [[buildIvfPqResidualIndex]]). */
   def writeIvfPqResidualIndex(corpus: DataFrame, idCol: String, vecCol: String,
                               dir: String, nBits: Int = 4, dim: Int = 64,
                               m: Int = 8, pqBits: Int = 4): IvfPqResidualIndex = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    graft.functions.TajoFunctions.register(corpus.sparkSession)
     val spark = corpus.sparkSession
-    val subDim = dim / m
-    val c0 = ivfInitial(corpus, idCol, vecCol, nBits, dim)
-    graft.operators.IndexFiles.withWriteLease(
-        spark, dir, "writeIvfPqResidualIndex") {
-    // rebuild bracket: four overwrites + the meta stamp are only
-    // consistent as a set (see IvfPqResidualIndex.read's check)
-    graft.operators.IndexFiles.createMarker(spark, dir, "_rebuild_intent")
-    ivfCentTable(c0).write.mode("overwrite").parquet(s"$dir/cent")
-    val cent = graft.operators.IndexFiles.readParquet(spark, s"$dir/cent")
-    // single-scan assign + residual: __vec rides through the aggregate
-    // (functionally dependent on the id — every fanned-out row of a group
-    // carries the same vector, so first() is deterministic here; this is
-    // exactly where the unique-ids precondition above is load-bearing)
-    val assigned = ivfScored(c0, cent)
-      .groupBy(col(idCol))
-      .agg(max(struct(col("__score").as("s"), (lit(0) - col("cid")).as("nc"))).as("b"),
-        first(col("__vec")).as("__v"))
-      .select(col(idCol).as("__cid"), (lit(0) - col("b.nc")).as("cell"), col("__v"))
-    val cres = assigned
-      .join(broadcast(cent.select(col("cid").as("cell"), col("mvec"))), Seq("cell"))
-      .withColumn("rvec", expr(
-        "ZIP_WITH(__v, mvec, (x, c) -> CAST(x AS DOUBLE) - CAST(c AS DOUBLE) / 1000000)"))
-      .select(col("__cid"), col("cell"), col("rvec"))
-    pqResidSubs(cres, "__cid", m, subDim)
-      .write.mode("overwrite").parquet(s"$dir/_subs")
-    val csubs = graft.operators.IndexFiles.readParquet(spark, s"$dir/_subs")
-    ivfResidCodebook(csubs, pqBits, subDim)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    val codebook = graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook")
-    ivfResidCodes(csubs, codebook)
-      .write.mode("overwrite").parquet(s"$dir/codes")
-    // the staged residual sub-vectors are scaffolding, not index surface —
-    // deleted through the Hadoop FileSystem resolved from the path itself,
-    // so the cleanup works on any supported filesystem (HDFS/S3), not just
-    // local disk
-    val subsPath = new org.apache.hadoop.fs.Path(s"$dir/_subs")
-    subsPath.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(subsPath, true)
-    IvfPqMeta.write(spark, dir, IvfPqMeta(nBits, dim, m, pqBits))
-    graft.operators.IndexFiles.deleteMarker(spark, dir, "_rebuild_intent")
+    val meta = IvfPqMeta(nBits, dim, m, pqBits)
+    IndexFiles.withWriteLease(spark, dir, "writeIvfPqResidualIndex") {
+      val stored = IvfPqMeta.read(spark, dir)
+      if (!stored.contains(meta)) {
+        require(VersionedStore.versionNumbers(spark, dir).isEmpty,
+          s"writeIvfPqResidualIndex: $dir holds an index of geometry " +
+            s"${stored.getOrElse("<untagged>")}; a rebuild in place keeps it " +
+            s"(passed $meta) — build a different geometry into a fresh directory")
+        IvfPqMeta.write(spark, dir, meta)
+      }
+      VersionedStore.buildStaged(spark, dir, Set("cent", "codebook", "codes"),
+          "writeIvfPqResidualIndex") { stage =>
+        ivfPqBuild(corpus, idCol, vecCol, nBits, dim, m, pqBits)(stage)
+      }
+      VersionedStore.reclaim(spark, dir)
     }
     IvfPqResidualIndex.read(spark, dir)
   }
@@ -758,55 +695,42 @@ object Similarity {
     * [[graft.operators.Dedup.appendMinhashIndex]]): each new vector is
     * assigned to its nearest STORED centroid (broadcast K-row fan-out,
     * map-side), its residual is encoded against the STORED codebooks, and
-    * the code rows APPEND to the codes table. Centroids and codebooks are
+    * the code rows land as ONE store append. Centroids and codebooks are
     * frozen, so (a) queries score every pre-existing vector exactly as
     * before the append, and (b) appended vectors score exactly as if they
     * had been present at build time under the same quantizers — which is
-    * precisely what the driver oracle replays. Cost is batch-sized
-    * (no corpus rescan, one parquet append); at 100 TB the add path is
-    * what absorbs continuous ingest while rebuilds stay scheduled,
+    * precisely what the driver oracle replays. Cost is batch-sized (no
+    * corpus rescan; an id-column scan of `codes`); at 100 TB the add path
+    * is what absorbs continuous ingest while rebuilds stay scheduled,
     * LSM-style. Drift contract: frozen quantizers fit a shifting
     * distribution progressively worse — audit recall ([[annRecall]])
     * and rebuild when it degrades, like every IVF deployment.
     *
-    * Failure semantics: ONE append action — a partial failure leaves
-    * torn parquet staging, not torn index semantics; re-run the append
-    * only if it did not commit (a committed duplicate would duplicate
-    * candidate rows — unlike the MinHash index, codes feed top-k, so
-    * keep ids unique and appends exactly-once-committed).
-    * PRECONDITION: ids unique across the corpus and every batch. */
+    * Exactly once under retries: ids that `codes` already holds are
+    * anti-joined out under the lease (a duplicate would double its summed
+    * ADC distance), so a re-run — of a crashed append or of a COMMITTED
+    * one (an at-least-once replay) — appends exactly the vectors not yet
+    * committed, and a fully replayed batch commits nothing.
+    * PRECONDITION: ids unique within the batch. */
   def appendIvfPqResidualIndex(batch: DataFrame, idCol: String, vecCol: String,
                                dir: String, dim: Int = 64,
                                m: Int = 8): IvfPqResidualIndex = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
-    graft.functions.TajoFunctions.register(batch.sparkSession)
     val spark = batch.sparkSession
-    // geometry mismatch must throw BEFORE any rows land — appending codes
-    // sliced under a different (dim, m) corrupts the index silently
-    IvfPqMeta.read(spark, dir).foreach { stored =>
-      require(stored.dim == dim && stored.m == m,
-        s"appendIvfPqResidualIndex geometry mismatch: stored (dim=${stored.dim}, " +
-          s"m=${stored.m}), passed (dim=$dim, m=$m) — use the stored values")
-    }
-    val subDim = dim / m
-    val cent = graft.operators.IndexFiles.readParquet(spark, s"$dir/cent")
-    val codebook = graft.operators.IndexFiles.readParquet(spark, s"$dir/codebook")
-    // fused assign+residual over the batch — same single-scan shape (and
-    // the same unique-id precondition) as writeIvfPqResidualIndex's stage
-    val assigned = ivfScored(withNorm(batch, idCol, vecCol), cent)
-      .groupBy(col(idCol))
-      .agg(max(struct(col("__score").as("s"), (lit(0) - col("cid")).as("nc"))).as("b"),
-        first(col("__vec")).as("__v"))
-      .select(col(idCol).as("__cid"), (lit(0) - col("b.nc")).as("cell"), col("__v"))
-    val cres = assigned
-      .join(broadcast(cent.select(col("cid").as("cell"), col("mvec"))), Seq("cell"))
-      .withColumn("rvec", expr(
-        "ZIP_WITH(__v, mvec, (x, c) -> CAST(x AS DOUBLE) - CAST(c AS DOUBLE) / 1000000)"))
-      .select(col("__cid"), col("cell"), col("rvec"))
-    graft.operators.IndexFiles.withWriteLease(
-        spark, dir, "appendIvfPqResidualIndex") {
-      ivfResidCodes(pqResidSubs(cres, "__cid", m, subDim), codebook)
-        .write.mode("append").parquet(s"$dir/codes")
+    graft.functions.TajoFunctions.register(spark)
+    // ONE lease from the presence check through the commit: two racing
+    // appends of the same batch could otherwise both compute the novel
+    // set against the pre-write snapshot and double-append
+    IndexFiles.withWriteLease(spark, dir, "appendIvfPqResidualIndex") {
+      val stored = IvfPqResidualIndex.read(spark, dir)
+      // a geometry mismatch throws BEFORE any rows land
+      stored.requireGeometry(dim, m)
+      val novel = batch.join(
+        stored.codes.select(col("__cid").as(idCol)), Seq(idCol), "left_anti")
+      val resid = ivfFusedResid(withNorm(novel, idCol, vecCol), stored.cent, idCol)
+      VersionedStore.append(spark, dir, Map("codes" -> ivfResidCodes(
+        pqResidSubs(resid, "__cid", m, dim / m), stored.codebook)),
+        note = "appendIvfPqResidualIndex")
     }
     IvfPqResidualIndex.read(spark, dir)
   }

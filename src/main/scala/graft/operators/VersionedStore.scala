@@ -30,10 +30,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   *     table segment-lists at once, so a two-table torn window (the
   *     rename-swap MinHash index's "sigs appended, bands not yet"; the
   *     BM25 index keeps its `postings` + `doclens` here for this reason,
-  *     see [[Retrieval]], and the aggregate state its `state` + `tags`,
-  *     see [[AggState]]) is UNREPRESENTABLE here — there is no
-  *     observable state between versions, hence no intent markers, no
-  *     swap-order reasoning, and no recovery protocol at read.
+  *     see [[Retrieval]], the aggregate state its `state` + `tags`, see
+  *     [[AggState]], and the residual IVF-PQ index its `cent` +
+  *     `codebook` + `codes`, see [[Similarity]]) is UNREPRESENTABLE
+  *     here — there is no observable state between versions, hence no
+  *     intent markers, no swap-order reasoning, and no recovery protocol
+  *     at read.
   *   - **Snapshot isolation.** A reader pins a manifest; every file it
   *     will ever touch is immutable, so a compaction (or a hundred) can
   *     commit underneath a running 6-hour scan without a vanished-file
@@ -458,6 +460,60 @@ object VersionedStore {
       val segs = writeSegments(spark, dir, tables)
       requireNonEmpty(spark, dir, "VersionedStore.create", tables.keys, segs)
       commit(spark, dir, Manifest(1L, 0L, note, segs.map { case (n, seg) => n -> Seq(seg) }))
+    }
+
+  /** Commit `tables` as a whole build: version 1 of a fresh store, or, in
+    * a directory that already holds one, the next version naming only
+    * these tables (a rebuild in place). The persisted families' builds all
+    * commit through here, then [[reclaim]] the superseded version. */
+  private[operators] def build(spark: SparkSession, dir: String,
+                               tables: Map[String, DataFrame], note: String): Long =
+    IndexFiles.withWriteLease(spark, dir, note) {
+      val segs = writeSegments(spark, dir, tables)
+      requireNonEmpty(spark, dir, note, tables.keys, segs)
+      commitBuild(spark, dir, note, segs)
+    }
+
+  /** [[build]] for a build whose later stages read its earlier ones from
+    * storage: `body` gets `stage(name, df)`, which writes `df` ONCE as an
+    * uncommitted segment and returns its read-back (footer schema, no
+    * job). The stages named in `tables` commit together as the build; any
+    * other stage is scaffolding no manifest references, which the
+    * caller's [[reclaim]] deletes. */
+  private[operators] def buildStaged(spark: SparkSession, dir: String,
+                                     tables: Set[String], note: String)
+                                    (body: ((String, DataFrame) => DataFrame) => Unit): Long =
+    IndexFiles.withWriteLease(spark, dir, note) {
+      val staged = scala.collection.mutable.Map.empty[String, SegMeta]
+      body { (name, df) =>
+        val seg = java.util.UUID.randomUUID().toString.take(12)
+        df.write.mode("error").parquet(s"$dir/_segments/$seg")
+        staged(name) = statsOf(spark, dir, seg)
+        IndexFiles.readParquet(spark, s"$dir/_segments/$seg")
+      }
+      val segs = staged.toMap.filter { case (n, s) => tables(n) && s.rows > 0 }
+      requireNonEmpty(spark, dir, note, tables, segs)
+      commitBuild(spark, dir, note, segs)
+    }
+
+  private def commitBuild(spark: SparkSession, dir: String, note: String,
+                          segs: Map[String, SegMeta]): Long = {
+    val parent = versionNumbers(spark, dir).lastOption.getOrElse(0L)
+    commit(spark, dir, Manifest(parent + 1, parent, note, segs.map { case (n, s) => n -> Seq(s) }))
+  }
+
+  /** Vacuum to the latest version right after a build, compaction or
+    * retraction superseded every stored segment, as a rebuild in place
+    * always has (a handle read before the commit must be re-read). The
+    * change has committed by then, so a failed delete is logged as
+    * `store.reclaim_failed` and the call returns: the leftovers are old
+    * versions and orphans that the next vacuum or repair removes. */
+  private[operators] def reclaim(spark: SparkSession, dir: String): Unit =
+    try vacuum(spark, dir, keepLast = 1) catch {
+      case e: java.io.IOException =>
+        OpLog.warn("store.reclaim_failed", s"VersionedStore.reclaim: vacuum of $dir " +
+          s"failed after the commit (${e.getMessage}); the next vacuum or repair " +
+          "removes what it left")
     }
 
   /** Append one batch per named table as a SINGLE commit — every table's

@@ -716,12 +716,13 @@ object OperatorQueries {
     (spark, dir) => {
       val vecs = Tables.table(spark, dir, "embeddings")
       val probes = vecs.filter(col("vec_id") < 20)
-      // composed (materialize = false), measured: the recall audit joins
-      // the ADC arm against the exact arm over the SAME corpus in one
-      // DAG, where runtime exchange reuse shares the training subplans —
-      // solo A/B at sf0.1 read 1.16s composed vs 3.43s materialized
-      val adc = Similarity.ivfPqResidualTopK(vecs, probes, "vec_id", "embedding",
-        k = 5, materialize = false)
+      // the lazy build composed with the query, measured: the recall
+      // audit joins the ADC arm against the exact arm over the SAME corpus
+      // in one DAG, where runtime exchange reuse shares the build stages —
+      // solo A/B at sf0.1 read 1.16s lazy vs 3.43s checkpointed
+      val adc = Similarity.queryIvfPqResidual(
+        Similarity.buildIvfPqResidualIndex(vecs, "vec_id", "embedding"),
+        vecs, probes, "vec_id", "embedding", k = 5)
       val exact = Similarity.bruteForceTopK(vecs, probes, "vec_id", "embedding", k = 5)
       Similarity.annRecall(adc, exact)
         .select(col("query_id"), col("k").cast("bigint").as("k"),
@@ -815,11 +816,11 @@ object OperatorQueries {
          |ORDER BY query_id, rnk""".stripMargin
   }
 
-  // Index persistence (Similarity.buildIvfPqResidualIndex / IvfPqResidualIndex
-  // write/read + queryIvfPqResidual): the build/query split a deployment
-  // actually runs — build the IVFADC index tables, WRITE them to parquet,
-  // read them back, and answer the same IVFADC+R query from the stored
-  // index. Same oracle as q_ann_ivfadc_rerank: the round-trip must be
+  // Index persistence (Similarity.writeIvfPqResidualIndex /
+  // IvfPqResidualIndex.read + queryIvfPqResidual): the build/query split a
+  // deployment actually runs — build the IVFADC index tables into a
+  // versioned store, read them back, and answer the same IVFADC+R query
+  // from the stored index. Same oracle as q_ann_ivfadc_rerank: the round-trip must be
   // bit-exact (fixed-point BIGINT tables + one IEEE double column).
   private val annIdxScratch = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_ann_idx-" +
@@ -896,13 +897,13 @@ object OperatorQueries {
 
   // The lifecycle end on the ANN side (Similarity.compactIvfPqResidualIndex,
   // mirroring q_dedup_minhash_index_compact): append the held-out quarter
-  // TWICE (the second = a retried partial failure, whose duplicate code
-  // rows would DOUBLE ADC distances if left in place), tombstone an eighth
-  // of the original corpus, compact, and query. The oracle's train side
-  // stays the original corpus (frozen quantizers survive deletes); its
-  // all side is (corpus MINUS the dropped ids) UNION the batch — so a drop
-  // that failed, a duplicate that survived (corrupting l2_micro), or a
-  // retrain all hash-fail. Probes avoid the dropped ids so both engines
+  // TWICE (the second = a replayed batch, whose duplicate code rows would
+  // DOUBLE ADC distances — the append's anti-join makes it commit
+  // nothing), tombstone an eighth of the original corpus, compact, and
+  // query. The oracle's train side stays the original corpus (frozen
+  // quantizers survive deletes); its all side is (corpus MINUS the
+  // dropped ids) UNION the batch — so a drop that failed, a duplicate
+  // that landed (corrupting l2_micro), or a retrain all hash-fail. Probes avoid the dropped ids so both engines
   // query the same probe set.
   private val qAnnIvfAdcCompact = df("q_ann_ivfadc_compact",
     (spark, dir) => {
@@ -3075,15 +3076,14 @@ object OperatorQueries {
 
   // Persisted-state consistency checker (IndexFsck): build small instances
   // of all four families, PLANT a known corruption set — torn appends
-  // (an uncommitted BM25 append and an uncommitted agg fold: one orphan
-  // segment + one `.tmp-` manifest each), crash-retried duplicate code
-  // rows, torn cluster relabels, partial/mixed-build code writes — and
-  // report every invariant's violation count. The oracle recomputes each
-  // count from the SOURCE tables through the same deterministic plant
-  // arithmetic, so a check that under- or over-counts (or a plant that
-  // quietly stopped planting) hash-fails. One corruption tripping several
-  // checks is realistic and priced in: the duplicated code rows also break the
-  // per-id row count, and the keeper-above plant is also dangling.
+  // (an uncommitted BM25 append, agg fold and IVF-PQ append: one orphan
+  // segment + one `.tmp-` manifest each), torn MinHash appends, torn
+  // cluster relabels — and report every invariant's violation count. The
+  // oracle recomputes each count from the SOURCE tables through the same
+  // deterministic plant arithmetic, so a check that under- or
+  // over-counts (or a plant that quietly stopped planting) hash-fails.
+  // One corruption tripping several checks is realistic and priced in:
+  // the keeper-above plant is also dangling.
   // Build small instances of all four persisted families under `base` and
   // PLANT the shared corruption set described on q_op_index_fsck — the
   // fixture BOTH the checker (q_op_index_fsck) and the repairer
@@ -3188,22 +3188,12 @@ object OperatorQueries {
             .unionAll(stored.filter(col("keeper") % 30 === 0))
         },
         () => {
-          // ---- residual IVF-PQ: partial code write, mixed-build cells,
-          // crash-retried duplicate append
-          graft.operators.Similarity.writeIvfPqResidualIndex(
+          // ---- residual IVF-PQ: an append that crashed before its commit
+          val ivf = graft.operators.Similarity.writeIvfPqResidualIndex(
             Tables.table(spark, dir, "embeddings").filter(col("vec_id") < 300),
             "vec_id", "embedding", s"$base/ivf")
-          val codes0 = spark.read.parquet(s"$base/ivf/codes").localCheckpoint()
-          codes0.filter(col("__cid") % 50 === 0 && col("s") < 3)
-            .withColumn("__cid", col("__cid") + 1000000L)
-            .write.mode("append").parquet(s"$base/ivf/codes")
-          codes0.filter(col("__cid") % 50 === 1)
-            .withColumn("__cid", col("__cid") + 2000000L)
-            .withColumn("cell", col("cell") - col("cell") + lit(999999))
-            .write.mode("append").parquet(s"$base/ivf/codes")
-          codes0.filter(col("__cid") % 50 === 2)
-            .write.mode("append").parquet(s"$base/ivf/codes")
-          graft.operators.Checkpoints.free(codes0) // all three plants landed
+          plantUncommittedAppend(spark, ivf.codes.filter(col("__cid") % 50 === 2)
+            .withColumn("__cid", col("__cid") + 1000000L), s"$base/ivf")
         })
       plantedClusters
   }
@@ -3224,9 +3214,6 @@ object OperatorQueries {
            |c7 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 7),
            |c20 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 20 = 0),
            |c30 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 30 = 0),
-           |v0 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 0),
-           |v1 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 1),
-           |v2 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 2),
            |m1 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id BETWEEN 150 AND 159),
            |m2 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id BETWEEN 160 AND 164),
            |m3 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id < 5)
@@ -3245,9 +3232,11 @@ object OperatorQueries {
            |  UNION ALL SELECT 'cluster', 'dangling_keepers', (SELECT n FROM c1) + (SELECT n FROM c7)
            |  UNION ALL SELECT 'cluster', 'keeper_not_fixpoint', (SELECT n FROM c20)
            |  UNION ALL SELECT 'cluster', 'duplicate_doc_rows', 2 * (SELECT n FROM c30)
-           |  UNION ALL SELECT 'ivf_pq', 'wrong_subspace_count', (SELECT n FROM v0) + (SELECT n FROM v2)
-           |  UNION ALL SELECT 'ivf_pq', 'cell_out_of_range', 8 * (SELECT n FROM v1)
-           |  UNION ALL SELECT 'ivf_pq', 'duplicate_codes', 8 * (SELECT n FROM v2)
+           |  UNION ALL SELECT 'ivf_pq', 'broken_parent_chain', 0
+           |  UNION ALL SELECT 'ivf_pq', 'missing_segment_dirs', 0
+           |  UNION ALL SELECT 'ivf_pq', 'orphan_segments', 2
+           |  UNION ALL SELECT 'ivf_pq', 'rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'ivf_pq', 'stat_bounds_mismatch', 0
            |  UNION ALL SELECT 'minhash', 'sig_band_id_mismatch',
            |    (SELECT n FROM m1) + (SELECT n FROM m2)
            |  UNION ALL SELECT 'minhash', 'wrong_band_count', (SELECT n FROM m3)
@@ -3258,8 +3247,8 @@ object OperatorQueries {
   // checker is graded against, run every family's repair, then prove three
   // things in one tall (family, action, n) table the oracle recomputes
   // from the source tables: (1) the repairs reported exactly the planted
-  // damage (vacuumed BM25 and agg debris, collapsed duplicates, dropped
-  // partial ids); (2) EVERY IndexFsck
+  // damage (vacuumed BM25, agg and IVF-PQ debris, collapsed duplicates,
+  // dropped partial ids); (2) EVERY IndexFsck
   // invariant reads zero afterwards (the fsck_* rows); (3) membership and
   // content survived — BM25 serves exactly the base corpus's postings,
   // the MinHash drop-and-reappend loop restores full coverage (165 ids),
@@ -3338,9 +3327,6 @@ object OperatorQueries {
            |c1 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 1),
            |c7 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 10 = 7),
            |c20 AS (SELECT COUNT(*) AS n FROM customer WHERE c_custkey % 20 = 0),
-           |v0 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 0),
-           |v1 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 1),
-           |v2 AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300 AND vec_id % 50 = 2),
            |vall AS (SELECT COUNT(*) AS n FROM embeddings WHERE vec_id < 300),
            |m1 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id BETWEEN 150 AND 159),
            |m2 AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id BETWEEN 160 AND 164),
@@ -3378,13 +3364,13 @@ object OperatorQueries {
            |    2 * (SELECT n FROM c10) + 2 * (SELECT n FROM c1)
            |      + (SELECT n FROM c7) + (SELECT n FROM c20) + 1
            |  UNION ALL SELECT 'ivf_pq', 'code_rows', 8 * (SELECT n FROM vall)
-           |  UNION ALL SELECT 'ivf_pq', 'collapsed_duplicate_code_rows', 8 * (SELECT n FROM v2)
-           |  UNION ALL SELECT 'ivf_pq', 'dropped_ids_for_reappend',
-           |    (SELECT n FROM v0) + (SELECT n FROM v1)
-           |  UNION ALL SELECT 'ivf_pq', 'dropped_out_of_range_rows', 8 * (SELECT n FROM v1)
-           |  UNION ALL SELECT 'ivf_pq', 'fsck_cell_out_of_range', 0
-           |  UNION ALL SELECT 'ivf_pq', 'fsck_duplicate_codes', 0
-           |  UNION ALL SELECT 'ivf_pq', 'fsck_wrong_subspace_count', 0
+           |  UNION ALL SELECT 'ivf_pq', 'fsck_broken_parent_chain', 0
+           |  UNION ALL SELECT 'ivf_pq', 'fsck_missing_segment_dirs', 0
+           |  UNION ALL SELECT 'ivf_pq', 'fsck_orphan_segments', 0
+           |  UNION ALL SELECT 'ivf_pq', 'fsck_rows_stat_mismatch', 0
+           |  UNION ALL SELECT 'ivf_pq', 'fsck_stat_bounds_mismatch', 0
+           |  UNION ALL SELECT 'ivf_pq', 'vacuumed_manifests', 1
+           |  UNION ALL SELECT 'ivf_pq', 'vacuumed_segments', 1
            |  UNION ALL SELECT 'minhash', 'band_rows', 8 * (SELECT n FROM d165)
            |  UNION ALL SELECT 'minhash', 'collapsed_duplicate_band_rows', 8 * (SELECT n FROM m3)
            |  UNION ALL SELECT 'minhash', 'dropped_ids_for_reappend',

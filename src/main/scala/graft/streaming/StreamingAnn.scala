@@ -24,17 +24,14 @@ import graft.operators.Similarity
   *
   * Delivery: foreachBatch is at-least-once, and the ANN index is the one
   * place a blind replay CORRUPTS state rather than duplicating it —
-  * duplicate code rows double summed ADC distances
-  * ([[Similarity.appendIvfPqResidualIndex]]'s exactly-once contract). The
-  * loop therefore makes the append idempotent itself: batch rows whose id
-  * already has code rows are anti-joined out before appending (an
-  * id-column scan of the codes table, the same order of work as the ADC
-  * join the search half already pays), and the search side anti-joins out
-  * neighbors that are in the current batch (on a replay the crashed
-  * attempt's append has already folded the batch in, and without the
-  * guard the rerun would emit within-batch matches the clean run never
-  * produces). A replay thus appends nothing and emits exactly the
-  * original match rows; consumers dedupe the sink on
+  * duplicate code rows double summed ADC distances. The fold is
+  * [[Similarity.appendIvfPqResidualIndex]], which anti-joins out ids the
+  * index already codes under its lease, so a replayed batch appends
+  * nothing; the search side anti-joins out neighbors that are in the
+  * current batch (on a replay the crashed attempt's append has already
+  * folded the batch in, and without the guard the rerun would emit
+  * within-batch matches the clean run never produces). A replay thus
+  * emits exactly the original match rows; consumers dedupe the sink on
   * (query_id, neighbor_id). Unique ids across the corpus and every batch
   * (the standard index contract). Not concurrent-safe with an external
   * compaction (quiesce writers, as everywhere). */
@@ -59,21 +56,17 @@ object StreamingAnn {
     val spark = batch.sparkSession
     val idx = Similarity.IvfPqResidualIndex.read(spark, indexDir)
     idx.requireGeometry(dim, m)
-    // one evaluation feeds search and append — and the idempotence
-    // anti-joins below must see a consistent batch
+    // one evaluation feeds search and append — and the replay guards
+    // must see a consistent batch
     val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint()
     // the search half and the fold half are INDEPENDENT given `b` and the
     // as-of-batch-start index read above, so they run as two concurrent
     // jobs (guide §2.6) instead of serializing a trigger's two heaviest
-    // actions: every frame of the search plan was listed by the `idx` read
-    // BEFORE the fold appends files (appends only ADD part files, so the
-    // pinned listing still reads exactly the batch-start index), and the
-    // crash shape concurrency can produce — append folded, matches not yet
-    // written — is the documented at-least-once replay case the guards
-    // below already handle (the replay appends nothing and re-emits the
-    // original rows).
-    // written on a pool thread, read here in the finally
-    @volatile var novel: DataFrame = null
+    // actions: the search reads the store version pinned by the `idx` read
+    // (a commit only adds segments and manifests, never changes them), and
+    // the crash shape concurrency can produce — append folded, matches not
+    // yet written — is the documented at-least-once replay case the guards
+    // handle (the replay appends nothing and re-emits the original rows).
     try {
       graft.operators.Jobs.concurrently(
         () =>
@@ -88,20 +81,13 @@ object StreamingAnn {
             .select("query_id", "neighbor_id", "cell", "l2_micro", "rnk")
             .write.mode("append").parquet(matchesDir),
         () => {
-          // idempotent append: drop rows whose id is already coded (a replayed
-          // trigger) — this is what keeps duplicate code rows (which would
-          // DOUBLE summed ADC distances) out of the index under at-least-once
-          novel = b.join(idx.codes.select(col("__cid").as("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti").localCheckpoint()
-          if (!novel.isEmpty)
-            Similarity.appendIvfPqResidualIndex(novel, "vec_id", "embedding",
-              indexDir, dim, m)
+          Similarity.appendIvfPqResidualIndex(b, "vec_id", "embedding", indexDir, dim, m)
+          ()
         })
     } finally {
       // trigger complete — release the per-trigger blocks (unbounded in a
       // long-lived stream otherwise; VERDICT r12 #1)
-      if (novel != null) graft.operators.Checkpoints.free(b, novel)
-      else graft.operators.Checkpoints.free(b)
+      graft.operators.Checkpoints.free(b)
     }
     ()
   }

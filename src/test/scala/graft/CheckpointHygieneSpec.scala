@@ -105,30 +105,24 @@ class CheckpointHygieneSpec extends AnyFunSuite {
   }
 
   test("repairIvfPqIndex leaves no persisted RDDs behind") {
-    // ADVICE r13: the `bad` drop-set checkpoint was NOT freed by the staged
-    // swap (being referenced by the rewrite plan does not unpersist it) —
-    // one corpus-scale block set leaked per repair call. This pins the fix.
+    // ADVICE r13: the old staged-swap repair leaked its drop-set
+    // checkpoint once per call; the repair is now a store vacuum and
+    // must pin nothing
     sweepAll()
     val dir = java.nio.file.Files.createTempDirectory("ckpt_ivfrepair").toString
     val vecs = graft.engine.Tables.table(spark, sfDir, "embeddings")
       .filter(col("vec_id") < 100)
-    graft.operators.Similarity.writeIvfPqResidualIndex(
+    val idx = graft.operators.Similarity.writeIvfPqResidualIndex(
       vecs, "vec_id", "embedding", dir)
-    // plant a crash-retried duplicate append + a torn partial so both the
-    // collapse and the drop-and-reappend paths run
-    val codes0 = spark.read.parquet(s"$dir/codes").localCheckpoint()
-    codes0.filter(col("__cid") % 10 === 2).write.mode("append").parquet(s"$dir/codes")
-    codes0.filter(col("__cid") % 10 === 3 && col("s") < 2)
-      .withColumn("__cid", col("__cid") + 1000000L)
-      .write.mode("append").parquet(s"$dir/codes")
-    graft.operators.Checkpoints.free(codes0)
+    // plant an append that crashed before its commit so the repair has
+    // debris to vacuum
+    graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+      idx.codes.filter(col("__cid") % 10 === 2), dir)
     val rep = graft.operators.IndexRepair.repairIvfPqIndex(spark, dir)
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-    assert(rep("collapsed_duplicate_code_rows") > 0L)
-    assert(rep("dropped_ids_for_reappend") > 0L)
+    assert(rep("vacuumed_segments") == 1L)
     assert(persistedCount == 0,
-      s"repairIvfPqIndex must release every checkpoint it created, " +
-        s"including the drop-set (held: $persistedCount)")
+      s"repairIvfPqIndex must release every checkpoint it created (held: $persistedCount)")
   }
 
   test("KMeans.lloyd releases its training checkpoint itself") {

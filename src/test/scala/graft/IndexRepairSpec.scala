@@ -9,8 +9,10 @@ import graft.operators.{AggState, Dedup, IndexFsck, IndexRepair, Retrieval, Simi
   * scale factors; this spec pins the API-level contracts the query shape
   * can't isolate: a repair on a CLEAN index is a no-op (reports all zeros,
   * membership unchanged — an over-eager repair that drops healthy rows is
-  * worse than no repair), the drop-set functions name exactly the partial
-  * ids, and the cluster re-solve preserves singletons and connectivity. */
+  * worse than no repair), the MinHash drop-set function names exactly the
+  * partial ids, a store family's repair reports the crash debris it
+  * vacuumed, and the cluster re-solve preserves singletons and
+  * connectivity. */
 class IndexRepairSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -62,29 +64,28 @@ class IndexRepairSpec extends AnyFunSuite {
       .collect().head.getLong(0) == 0L)
   }
 
-  test("ivfPqInconsistentIds flags ids whose every row is out-of-range (count-0 shape)") {
+  test("IVF-PQ repair reports the vacuumed debris; the crashed append's retry then codes once") {
     val dir = scratch("rep_ivf")
     val vecs = graft.engine.Tables.table(spark, sfDir, "embeddings")
-      .filter(col("vec_id") < 200)
-    Similarity.writeIvfPqResidualIndex(vecs, "vec_id", "embedding", dir)
-    assert(IndexRepair.ivfPqInconsistentIds(spark, dir).isEmpty)
-    // mixed-build plant: one id's full row set against a vanished cell
-    val someId = spark.read.parquet(s"$dir/codes")
-      .agg(min("__cid")).collect().head.getLong(0)
-    spark.read.parquet(s"$dir/codes").filter(col("__cid") === someId)
-      .withColumn("__cid", lit(900001L))
-      .withColumn("cell", col("cell") - col("cell") + lit(424242))
-      .write.mode("append").parquet(s"$dir/codes")
-    val bad = IndexRepair.ivfPqInconsistentIds(spark, dir).as[Long].collect()
-    assert(bad.toSeq == Seq(900001L), s"drop set was ${bad.toSeq}")
-    val rep = reportMap(IndexRepair.repairIvfPqIndex(spark, dir))
-    assert(rep("dropped_out_of_range_rows") > 0L)
-    assert(rep("dropped_ids_for_reappend") == 1L)
+      .select("vec_id", "embedding")
+    val corpus = vecs.filter(col("vec_id") < 200)
+    val batch = vecs.filter(col("vec_id").between(200, 219))
+    val idx = Similarity.writeIvfPqResidualIndex(corpus, "vec_id", "embedding", dir)
+    val before = idx.codes.count()
+    // an append that crashed before its commit: invisible, reported, vacuumed
+    graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+      idx.codes.filter(col("__cid") < 20).withColumn("__cid", col("__cid") + 200L), dir)
+    assert(Similarity.IvfPqResidualIndex.read(spark, dir).codes.count() == before)
+    assert(reportMap(IndexFsck.checkIvfPq(spark, dir))("orphan_segments") == 2L)
+    assert(reportMap(IndexRepair.repairIvfPqIndex(spark, dir)) ==
+      Map("vacuumed_segments" -> 1L, "vacuumed_manifests" -> 1L))
     assert(IndexFsck.checkIvfPq(spark, dir).agg(sum("violations"))
       .collect().head.getLong(0) == 0L)
-    // the healthy ids survived untouched
-    assert(spark.read.parquet(s"$dir/codes").select("__cid").distinct().count()
-      == vecs.count())
+    assert(reportMap(IndexRepair.repairIvfPqIndex(spark, dir)).values.forall(_ == 0L))
+    // the retry codes the batch once, as an append that never crashed does
+    val appended = Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
+    assert(appended.codes.count() == before + batch.count() * 8)
+    assert(appended.codes.groupBy("__cid").count().filter(col("count") =!= 8).isEmpty)
   }
 
   test("BM25 repair reports the vacuumed debris; a second repair is a no-op") {

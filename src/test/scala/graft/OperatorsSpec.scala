@@ -1113,10 +1113,15 @@ class OperatorsSpec extends AnyFunSuite {
       df.collect().map(_.toSeq).toSet
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
     try {
-      // the staged writer (each artifact materialized once, corpus scanned
-      // exactly twice) — the path q_ann_ivfadc_store ships
+      // the staged writer (each stage written once, corpus scanned exactly
+      // twice) — the path q_ann_ivfadc_store ships
       val stored = Similarity.writeIvfPqResidualIndex(vecs, "vec_id", "embedding", dir)
-      assert(!new java.io.File(s"$dir/_subs").exists, "staging scaffold must be cleaned up")
+      // one committed version of the three tables; the reclaim deleted
+      // the residual stage's segment, which no manifest references
+      val snap = graft.operators.VersionedStore.snapshot(spark, dir)
+      assert(snap.version == 1L && snap.tableNames == Seq("cent", "codebook", "codes"))
+      assert(new java.io.File(s"$dir/_segments").list().length == 3,
+        "the residual stage's segment must be reclaimed")
       // ADC-only path (integer distances: equality must be exact)
       val composedAdc = Similarity.ivfPqResidualTopK(
         vecs, probes, "vec_id", "embedding", k = 5, nProbe = 4)
@@ -1150,7 +1155,7 @@ class OperatorsSpec extends AnyFunSuite {
       val li = Tables.table(spark, sfDir, "lineitem")
         .select("l_returnflag", "l_linestatus", "l_quantity")
       AggState.writeAggState(li, adir, Seq("l_returnflag", "l_linestatus"), Seq("l_quantity"))
-      Similarity.writeIvfPqResidualIndex(
+      val ivf = Similarity.writeIvfPqResidualIndex(
         Tables.table(spark, sfDir, "embeddings").filter($"vec_id" < 150),
         "vec_id", "embedding", vdir)
       val cleanClusters = Dedup.duplicateClusters(
@@ -1160,7 +1165,7 @@ class OperatorsSpec extends AnyFunSuite {
         .unionAll(IndexFsck.checkAggState(spark, adir))
         .unionAll(IndexFsck.checkClusterAssignment(cleanClusters))
         .unionAll(IndexFsck.checkIvfPq(spark, vdir)))
-      assert(clean.size == 19 && clean.values.forall(_ == 0L),
+      assert(clean.size == 21 && clean.values.forall(_ == 0L),
         s"clean state must report zero violations everywhere: $clean")
       // minhash: a torn append (sigs landed, bands did not) is an id-set
       // mismatch; a retried full append doubles the band count
@@ -1191,25 +1196,17 @@ class OperatorsSpec extends AnyFunSuite {
       assert(drep(("cluster", "duplicate_doc_rows")) == 2L &&
         drep(("cluster", "keeper_not_fixpoint")) == 0L &&
         drep(("cluster", "dangling_keepers")) == 0L)
-      val dupCodes = spark.read.parquet(s"$vdir/codes")
-        .filter($"__cid" % 40 === 0).localCheckpoint()
-      val nDup = dupCodes.count()
-      dupCodes.write.mode("append").parquet(s"$vdir/codes")
-      val vrep = report(IndexFsck.checkIvfPq(spark, vdir))
-      assert(vrep(("ivf_pq", "duplicate_codes")) == nDup)
-      assert(vrep(("ivf_pq", "wrong_subspace_count")) == nDup / 8,
-        "duplicated ids must also trip the per-id row-count invariant")
+      graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+        ivf.codes.filter($"__cid" % 40 === 0).withColumn("__cid", $"__cid" + 5000L), vdir)
+      assert(report(IndexFsck.checkIvfPq(spark, vdir))(("ivf_pq", "orphan_segments")) == 2L)
     } finally Seq(bdir, adir, vdir, mdir).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
-  test("torn rebuild markers: crashed minhash/ivfpq rebuilds and cluster seeds refuse reads until re-run") {
-    import graft.operators.Similarity
+  test("torn rebuild markers: crashed minhash rebuilds and cluster seeds refuse reads until re-run") {
     val docs = Tables.table(spark, sfDir, "documents")
       .filter($"doc_id" < 100).select("doc_id", "text")
-    val vecs = Tables.table(spark, sfDir, "embeddings").filter($"vec_id" < 200)
     val mdir = java.nio.file.Files.createTempDirectory("mh_reb_torn").toString
-    val vdir = java.nio.file.Files.createTempDirectory("ivfpq_reb_torn").toString
     try {
       // minhash: a rebuild that died between the sigs and bands overwrites
       // leaves both tables readable — only the marker flags the mixed build
@@ -1230,18 +1227,44 @@ class OperatorsSpec extends AnyFunSuite {
       Dedup.writeClusterState(spark, mdir, "doc_id") // the remedy
       assert(!new java.io.File(s"$mdir/_cluster_seed_intent").exists())
       assert(Dedup.readClusterState(spark, mdir).count() >= 0)
-      // ivf-pq: new quantizers with old codes read as healthy without the marker
-      Similarity.writeIvfPqResidualIndex(vecs, "vec_id", "embedding", vdir)
-      new java.io.File(s"$vdir/_rebuild_intent").createNewFile()
-      val e3 = intercept[IllegalArgumentException](
-        Similarity.IvfPqResidualIndex.read(spark, vdir))
-      assert(e3.getMessage.contains("torn rebuild"))
-      Similarity.writeIvfPqResidualIndex(vecs, "vec_id", "embedding", vdir)
-      assert(!new java.io.File(s"$vdir/_rebuild_intent").exists())
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(mdir))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(vdir))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(mdir))
+  }
+
+  test("IvfPqResidualIndex: a crashed rebuild in place leaves the previous build serving; re-run equals a fresh build") {
+    import graft.operators.{IndexFsck, VersionedStore}
+    val vecs = Tables.table(spark, sfDir, "embeddings").select("vec_id", "embedding")
+    val first = vecs.filter($"vec_id" < 150)
+    val second = vecs.filter($"vec_id".between(50, 199))
+    val probes = vecs.filter($"vec_id" < 10)
+    def content(idx: Similarity.IvfPqResidualIndex) =
+      Seq(idx.cent, idx.codebook, idx.codes).map(_.collect().map(_.toSeq).toSet)
+    def q(idx: Similarity.IvfPqResidualIndex) = Similarity.queryIvfPqResidual(
+      idx, vecs, probes, "vec_id", "embedding", k = 5, nProbe = 2).collect().toSet
+    val dir = java.nio.file.Files.createTempDirectory("ivfpq_reb_crash").toString
+    val freshDir = java.nio.file.Files.createTempDirectory("ivfpq_reb_fresh").toString
+    try {
+      val built = Similarity.writeIvfPqResidualIndex(first, "vec_id", "embedding", dir)
+      val before = (content(built), q(built))
+      // the rebuild over `second` wrote its stages, then died before its
+      // commit: new quantizers beside old codes are never visible together
+      val fresh = Similarity.writeIvfPqResidualIndex(second, "vec_id", "embedding", freshDir)
+      Seq(fresh.cent, fresh.codebook, fresh.codes).foreach(t =>
+        graft.queries.OperatorQueries.plantUncommittedAppend(spark, t, dir))
+      val mid = Similarity.IvfPqResidualIndex.read(spark, dir)
+      assert((content(mid), q(mid)) == before)
+      assert(IndexFsck.checkIvfPq(spark, dir).filter($"check" === "orphan_segments")
+        .head().getLong(2) == 6L)
+      // the re-run: one commit of the three tables, debris reclaimed
+      val rebuilt = Similarity.writeIvfPqResidualIndex(second, "vec_id", "embedding", dir)
+      assert(VersionedStore.versionNumbers(spark, dir) == Seq(2L))
+      assert(IndexFsck.checkIvfPq(spark, dir).agg(sum("violations")).head().getLong(0) == 0L)
+      assert(content(rebuilt) == content(fresh) && q(rebuilt) == q(fresh))
+      // a rebuild in place keeps the stored geometry
+      intercept[IllegalArgumentException](
+        Similarity.writeIvfPqResidualIndex(second, "vec_id", "embedding", dir, m = 16))
+      assert(content(Similarity.IvfPqResidualIndex.read(spark, dir)) == content(fresh))
+    } finally Seq(dir, freshDir).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
 
   test("MinhashIndex: stored-index incremental near-dups equal the composed pipeline") {
@@ -1929,7 +1952,8 @@ class OperatorsSpec extends AnyFunSuite {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("compactIvfPqResidualIndex: retry duplicates collapse, tombstones stop matching, crash recovery") {
+  test("compactIvfPqResidualIndex: a replayed append commits nothing, tombstones stop matching, a crashed compaction leaves the previous version serving") {
+    import graft.operators.VersionedStore
     val vecs = Tables.table(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val corpus = vecs.filter($"vec_id" < 150)
     val batch = vecs.filter($"vec_id".between(100, 149))
@@ -1944,32 +1968,35 @@ class OperatorsSpec extends AnyFunSuite {
       Similarity.writeIvfPqResidualIndex(corpus, "vec_id", "embedding", dir)
       val once = Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
       val reference = q(once)
-      // scalar snapshot: `once.codes` pins pre-compaction FILES — a
-      // DataFrame held across the swap must not be evaluated after it
       val onceCount = once.codes.count()
-      // a retried append duplicates code rows (which would DOUBLE summed
-      // ADC distances); compaction collapses them and restores the
-      // single-append results exactly
-      val dup = Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
-      assert(dup.codes.count() == onceCount + batch.count() * 8)
+      assert(onceCount == (corpus.count() + batch.count()) * 8)
+      // a replayed append (duplicate code rows would DOUBLE summed ADC
+      // distances) finds every id coded and commits nothing
+      val versions = VersionedStore.versionNumbers(spark, dir)
+      val replay = Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
+      assert(VersionedStore.versionNumbers(spark, dir) == versions)
+      assert(replay.codes.count() == onceCount)
+      // compaction merges the appended segment: one codes segment, same answers
       val compacted = Similarity.compactIvfPqResidualIndex(spark, dir)
+      assert(VersionedStore.snapshot(spark, dir).manifest.tables("codes").size == 1)
       assert(compacted.codes.count() == onceCount)
       assert(q(compacted) == reference)
-      assert(!new java.io.File(s"$dir/_codes_compact").exists)
-      assert(!new java.io.File(s"$dir/_codes_old").exists)
       // tombstoned ids vanish from the codes AND the neighbor lists
       val dropped = vecs.filter($"vec_id".between(140, 149)).select("vec_id")
       val tomb = Similarity.compactIvfPqResidualIndex(spark, dir, Some(dropped))
       assert(tomb.codes.filter($"__cid".between(140, 149)).count() == 0)
-      assert(!q(tomb).exists { case (_, n, _) => n >= 140 && n <= 149 })
-      // interrupted-swap recovery: live moved aside, read restores it
-      val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-        spark.sessionState.newHadoopConf())
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/codes"),
-        new org.apache.hadoop.fs.Path(s"$dir/_codes_old")))
-      val recovered = Similarity.IvfPqResidualIndex.read(spark, dir)
-      assert(q(recovered) == q(tomb))
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes")))
+      val tombQ = q(tomb)
+      assert(!tombQ.exists { case (_, n, _) => n >= 140 && n <= 149 })
+      // a compaction that died before its commit: its rewritten codes are
+      // an invisible orphan, the previous version serves, the re-run
+      // compacts and reclaims
+      graft.queries.OperatorQueries.plantUncommittedAppend(spark,
+        tomb.codes.filter($"__cid" < 130), dir)
+      assert(q(Similarity.IvfPqResidualIndex.read(spark, dir)) == tombQ)
+      val again = Similarity.compactIvfPqResidualIndex(spark, dir, Some(dropped))
+      assert(q(again) == tombQ)
+      assert(graft.operators.IndexFsck.checkIvfPq(spark, dir).agg(sum("violations"))
+        .head().getLong(0) == 0L)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

@@ -108,10 +108,11 @@ class ScanBudgetSpec extends AnyFunSuite {
     // these single-call demos legitimately re-derive parts of their builds
     // in-plan, and the budgets pin that audited breadth so the composed
     // re-evaluation can never silently DEEPEN (the SCALING §8b defect
-    // class). q_ann_ivfpq_residual / q_ann_ivfadc_rerank materialize their
-    // training stages once (round 13), so their returned plans read
+    // class). q_ann_ivfpq_residual / q_ann_ivfadc_rerank checkpoint their
+    // build stages once (ivfPqResidualTopK), so their returned plans read
     // checkpoints plus only the probe/corpus scans counted here; the
-    // ivfpq/recall composed arms carry their full audited static breadth.
+    // ivfpq arm and the recall audit (the lazy buildIvfPqResidualIndex
+    // composed with the query) carry their full audited static breadth.
     "q_ann_ivf" -> 4,
     "q_ann_ivf2" -> 4,
     "q_ann_topk" -> 2,

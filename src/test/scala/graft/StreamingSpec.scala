@@ -285,9 +285,11 @@ class StreamingSpec extends AnyFunSuite {
         "b2 must reach appended b1 vectors or the test is vacuous")
       // at-least-once replay: re-applying b2 appends NO code rows and
       // emits only duplicates of the original match rows
-      val codesBefore = spark.read.parquet(s"$base/idx/codes").count()
+      val versionsBefore = graft.operators.VersionedStore.versionNumbers(spark, s"$base/idx")
+      val codesBefore = Similarity.IvfPqResidualIndex.read(spark, s"$base/idx").codes.count()
       StreamingAnn.indexedAnnBatch(b2, s"$base/idx", s"$base/matches")
-      assert(spark.read.parquet(s"$base/idx/codes").count() == codesBefore,
+      assert(graft.operators.VersionedStore.versionNumbers(spark, s"$base/idx") == versionsBefore &&
+        Similarity.IvfPqResidualIndex.read(spark, s"$base/idx").codes.count() == codesBefore,
         "a replayed batch must not append code rows (duplicates would double ADC sums)")
       assert(rows(spark.read.parquet(s"$base/matches")
         .dropDuplicates("query_id", "neighbor_id")) == sink,

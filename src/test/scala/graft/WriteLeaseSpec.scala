@@ -43,7 +43,8 @@ class WriteLeaseSpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrent writer detected"))
     assert(spark.read.parquet(s"$dir/sigs").count() == sigsBefore,
       "a blocked append must write nothing")
-    // compaction path (stagedSwap — shared by all four families) refuses too
+    // compaction path (stagedSwap — shared by the MinHash and cluster
+    // families) refuses too
     intercept[IllegalArgumentException](
       Dedup.compactMinhashIndex(spark, dir, Some(docs.limit(1).select("doc_id"))))
     assert(spark.read.parquet(s"$dir/sigs").count() == sigsBefore)

@@ -110,4 +110,21 @@ class StoreJobBudgetSpec extends AnyFunSuite {
     assert(jobs(AggState.retractAggState(spark, dir, "b2", g, v)) == 2)
     assert(jobs(AggState.readAggState(spark, dir, g, v)) == 0)
   }
+
+  test("the IVF-PQ index: a read runs no job, a replayed append commits nothing, the build's jobs are pinned") {
+    val dir = scratch("jb_ivf")
+    val vecs = graft.engine.Tables.table(spark, graft.TestSpark.sfDir, "embeddings")
+      .select("vec_id", "embedding")
+    val (_, build) = jobsOf(Similarity.writeIvfPqResidualIndex(
+      vecs.filter(col("vec_id") < 40), "vec_id", "embedding", dir))
+    // four stage writes with their aggregates' shuffle stages (13 at the
+    // staged writer this replaced, counted the same way)
+    assert(build == 13)
+    assert(jobs(Similarity.IvfPqResidualIndex.read(spark, dir)) == 0)
+    val batch = vecs.filter(col("vec_id").between(40, 49))
+    Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
+    val versions = VersionedStore.versionNumbers(spark, dir)
+    Similarity.appendIvfPqResidualIndex(batch, "vec_id", "embedding", dir)
+    assert(VersionedStore.versionNumbers(spark, dir) == versions)
+  }
 }
